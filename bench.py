@@ -27,12 +27,12 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="warcraider_spark_bench")
     spark.sparkContext.setLogLevel("ERROR")
-    # r15 (VERDICT r14 #2): carry the effective parallelism in the stdout
-    # line so the driver's scaling heuristic can tell "ignored the core
-    # count" from "latency-bound at this SF" — cpus is the requested
-    # local[$SPARK_GRAFT_CPUS] width, parallelism the context's actual
-    # defaultParallelism, and shuffle_partitions what plans use (now
-    # cpus-adaptive in session.py, no max(cpus, 32) floor).
+    # Carry the effective parallelism in the stdout line so a scaling
+    # check can tell "ignored the core count" from "latency-bound at this
+    # SF": cpus is the context's actual defaultParallelism (the width the
+    # requested local[$SPARK_GRAFT_CPUS] master really got — one value,
+    # not the request), and shuffle_partitions what plans use
+    # (cpus-adaptive in session.py).
     cpus = spark.sparkContext.defaultParallelism
     shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
 

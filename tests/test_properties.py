@@ -164,7 +164,7 @@ def test_cdc_reference_conserves_text(text):
             assert CDC_W <= pos < len(s)
 
 
-def _cdc_spark_chunks(spark, samples, vectorized):
+def _cdc_spark_chunks(spark, samples):
     from pyspark.sql import functions as F
 
     from warcraider_spark.operators.dedup import cdc_chunks
@@ -173,7 +173,7 @@ def _cdc_spark_chunks(spark, samples, vectorized):
         [(i, t) for i, t in enumerate(samples)], "doc_id long, text string"
     )
     rows = (
-        cdc_chunks(df, vectorized=vectorized)
+        cdc_chunks(df)
         .groupBy("doc_id")
         .agg(F.expr(
             "transform(array_sort(collect_list(struct(chunk_idx, chunk))), x -> x.chunk)"
@@ -194,24 +194,13 @@ def _cdc_adversarial_samples():
     return samples
 
 
-def test_cdc_arrow_matches_catalyst(spark):
-    """The default Arrow/numpy rolling hash (VERDICT r6 #3) and the
-    pure-Catalyst array-expression twin produce IDENTICAL chunks on the
-    adversarial batch — same cut positions, same substrings — so either
-    form can serve the oracle and the bench."""
-    samples = _cdc_adversarial_samples()
-    assert _cdc_spark_chunks(spark, samples, True) == _cdc_spark_chunks(
-        spark, samples, False
-    )
-
-
 def test_cdc_spark_matches_reference(spark):
-    """The Spark chunker (default Arrow cuts path) equals the python
+    """The Spark chunker (Arrow cuts path) equals the python
     reference on a deterministic batch of adversarial strings (empty,
     punctuation-only, shorter than W, boundary-dense repeats) — ONE
     Spark job for the whole batch."""
     samples = _cdc_adversarial_samples()
-    got = _cdc_spark_chunks(spark, samples, True)
+    got = _cdc_spark_chunks(spark, samples)
     for i, t in enumerate(samples):
         s, ref = _cdc_ref(t)
         if not s:
@@ -274,24 +263,113 @@ def _rep_adversarial_samples():
     return samples
 
 
-def test_rep_arrow_matches_catalyst(spark):
-    """The shipped batched-Arrow repetition kernel and the pure-Catalyst
-    sorted_run_stats fold twin produce IDENTICAL 21-signal rows on the
-    adversarial batch (short docs, ties, multi-line/multi-paragraph,
-    Java-split quirks, multi-byte chars) — so either formulation can
-    certify the other, the cdc_chunks precedent."""
-    from warcraider_spark.operators.text import gopher_repetition_table
+def _rep_ref(text: str) -> dict[str, int]:
+    """Pure-Python reference of q139's 21 repetition signals, written
+    from its docstring: whitespace tokens (ASCII \\s, outer spaces
+    trimmed, empties dropped); lines on \\n and paragraphs on \\n{2,},
+    each trimmed of spaces with empties dropped; duplicate counts and
+    characters over ALL members of a duplicated group; occurrence-weighted
+    dup-gram characters; top-gram count ties broken to the longer gram;
+    a doc with fewer than n tokens is ONE whole-doc n-gram; the character
+    denominator is the single-space-joined token text."""
+    from collections import Counter
+
+    from warcraider_spark.operators.text import _REP_DUP_PCT, _REP_TOP_PCT
+
+    toks = [w for w in re.split(r"\s+", text.strip(" "), flags=re.ASCII) if w]
+    lines = [v for v in (x.strip(" ") for x in text.split("\n")) if v]
+    paras = [v for v in (x.strip(" ") for x in re.split(r"\n{2,}", text)) if v]
+    joined = " ".join(toks)
+
+    def dup(vals):
+        c = Counter(vals)
+        return (
+            sum(k for k in c.values() if k >= 2),
+            sum(k * len(v) for v, k in c.items() if k >= 2),
+        )
+
+    def grams(n):
+        if len(toks) < n:
+            return [joined]
+        return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+    sig = {
+        "text_chars": len(joined),
+        "n_lines": len(lines),
+        "line_chars": sum(map(len, lines)),
+        "n_paras": len(paras),
+        "para_chars": sum(map(len, paras)),
+    }
+    sig["dup_lines"], sig["dup_line_chars"] = dup(lines)
+    sig["dup_paras"], sig["dup_para_chars"] = dup(paras)
+    for n in sorted(_REP_TOP_PCT):
+        c = Counter(grams(n))
+        top = max(c.values())
+        sig[f"top{n}_cnt"] = top
+        sig[f"top{n}_len"] = max(len(g) for g, k in c.items() if k == top)
+    for n in sorted(_REP_DUP_PCT):
+        sig[f"dup{n}_chars"] = dup(grams(n))[1]
+    return sig
+
+
+def test_rep_arrow_matches_python_reference(spark):
+    """The shipped batched-Arrow repetition kernel produces exactly the
+    pure-Python reference's 21 signals on the adversarial batch (short
+    docs, ties, multi-line/multi-paragraph, Java-split quirks, multi-byte
+    chars), and ``kept`` is the AND of every verdict column."""
+    from warcraider_spark.operators.text import (
+        _REP_SIGNAL_FIELDS,
+        gopher_repetition_table,
+    )
 
     samples = _rep_adversarial_samples()
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(samples)], "doc_id long, text string"
     )
-    fast = {r["doc_id"]: r.asDict() for r in
-            gopher_repetition_table(df, vectorized=True).collect()}
-    slow = {r["doc_id"]: r.asDict() for r in
-            gopher_repetition_table(df, vectorized=False).collect()}
-    assert fast.keys() == slow.keys()
-    for k in fast:
-        assert fast[k] == slow[k], (k, samples[k][:50], {
-            f: (fast[k][f], slow[k][f]) for f in fast[k] if fast[k][f] != slow[k][f]
+    got = {r["doc_id"]: r.asDict() for r in gopher_repetition_table(df).collect()}
+    assert sorted(got) == list(range(len(samples)))
+    for k, row in got.items():
+        want = _rep_ref(samples[k])
+        sig = {f: row[f] for f in _REP_SIGNAL_FIELDS}
+        assert sig == want, (k, samples[k][:50], {
+            f: (sig[f], want[f]) for f in want if sig[f] != want[f]
         })
+        oks = [v for f, v in row.items() if f.endswith("_ok")]
+        assert len(oks) == 13 and row["kept"] == all(oks)
+
+
+def test_sdot_tf_kernel_matches_python_counter(spark):
+    """_sdot_tf_arrow counts terms per document inside each Arrow batch:
+    with two-record batches every document (one row per doc_id, the
+    kernel's precondition) still gets exactly its own counts, saturated
+    at SDOT_TF_CAP, equal to a pure-Python term counter. Null terms
+    count as their own group, as a Spark groupBy on (doc_id, term)
+    would."""
+    from collections import Counter
+
+    from warcraider_spark.operators.text import SDOT_TF_CAP, _sdot_tf_arrow
+
+    rows = [
+        (1, ["a b", "b c", "a b"]),
+        (2, []),
+        (3, ["x y"] * (SDOT_TF_CAP + 10) + ["y z"]),   # saturates
+        (4, ["a b"]),                                   # term shared across docs
+        (5, ["p q", None, "p q", None]),
+        (6, ["b c", "c d", "d e", "c d"]),
+        (7, ["日本 語", "日本 語"]),
+    ]
+    ts = spark.createDataFrame(rows, "doc_id long, ts array<string>").coalesce(1)
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    try:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+        got = Counter(
+            (r.doc_id, r.term, r.tf) for r in _sdot_tf_arrow(ts).collect()
+        )
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+    want = Counter(
+        (doc_id, term, min(n, SDOT_TF_CAP))
+        for doc_id, terms in rows
+        for term, n in Counter(terms).items()
+    )
+    assert got == want

@@ -22,9 +22,23 @@ from warcraider_spark.functions.urls import make_urls_absolute, root_domain
 
 REF = Path("/root/reference/tests")
 
+# One countable skip reason for every test that needs a reference-tree file
+# (the moneysmart page and its insta snapshots are not part of this repo).
+REF_ABSENT = "reference tree absent: moneysmart golden and insta snapshots not exercised"
+
+
+def ref_file(*parts: str) -> Path:
+    """Path of a file in the reference tree's tests/ directory. Skips the
+    calling test (or fixture) with REF_ABSENT when the file is missing,
+    so the gap shows in the skip count instead of as errors."""
+    path = REF.joinpath(*parts)
+    if not path.is_file():
+        pytest.skip(REF_ABSENT)
+    return path
+
 
 def _load_snapshot_json() -> dict:
-    raw = (REF / "snapshots" / "tests__html_parser_snapshots.snap").read_text()
+    raw = ref_file("snapshots", "tests__html_parser_snapshots.snap").read_text()
     # insta snapshot = yaml front matter + a JSON-ish payload
     payload = raw.split("---\n", 2)[2]
     return json.loads(payload)
@@ -37,7 +51,7 @@ def golden() -> dict:
 
 @pytest.fixture(scope="module")
 def parsed() -> dict:
-    html = (REF / "moneysmart.htm").read_text(errors="replace")
+    html = ref_file("moneysmart.htm").read_text(errors="replace")
     return parse_html_py(html)
 
 
@@ -56,7 +70,7 @@ def test_moneysmart_links(parsed, golden):
 def test_moneysmart_meta_tags(parsed, golden):
     # snap2 lines are "key:value" where the KEY itself may contain ':'
     # (og:title) — compare by reconstructing "k:v" strings instead
-    snap2 = (REF / "snapshots" / "tests__html_parser_snapshots-2.snap").read_text()
+    snap2 = ref_file("snapshots", "tests__html_parser_snapshots-2.snap").read_text()
     entries = set(re.findall(r'^\s+"(.+)",$', snap2, flags=re.M))
     entries = {e.replace("\\'", "'").replace('\\"', '"') for e in entries}
     ours = {f"{k}:{v}" for k, v in parsed["meta_tags"].items()}
@@ -279,7 +293,7 @@ def test_moneysmart_fails_strict():
     with unclosed voids always fails the strict first pass)."""
     from warcraider_spark.functions.html import strict_parse_ok
 
-    html = (REF / "moneysmart.htm").read_text(errors="replace")
+    html = ref_file("moneysmart.htm").read_text(errors="replace")
     assert not strict_parse_ok(html)
 
 

@@ -1,4 +1,4 @@
-"""q088_exact_substring_excision (NEW r13): winnowing-sampled
+"""q088_exact_substring_excision: winnowing-sampled
 exact-substring excision — first-occurrence keeps, every other document
 loses the k-char extents at its selected positions of shared
 fingerprints, merged into maximal spans and cut from the text. Pinned
@@ -14,6 +14,7 @@ from warcraider_spark.operators.dedup import (
     WINNOW_DF_CAP,
     WINNOW_K,
     WINNOW_W,
+    _winnow_fpos,
     exact_substring_excision,
 )
 
@@ -112,79 +113,62 @@ def test_excision_first_doc_keeps_its_text(spark):
     assert kept.endswith("zz")
 
 
+def _random_corpus(
+    seed: int, n_runs: int = 4, n_docs: int = 24, head: int = 60,
+    p_run: float = 0.35, gap: int = 40,
+) -> list[tuple[int, str]]:
+    """Random docs, each carrying a random subset of n_runs planted
+    shared runs separated by random filler."""
+    rng = random.Random(seed)
+    shared = [_rand_text(rng, rng.randint(30, 80)) for _ in range(n_runs)]
+    rows = []
+    for i in range(1, n_docs + 1):
+        parts = [_rand_text(rng, rng.randint(0, head))]
+        for srun in shared:
+            if rng.random() < p_run:
+                parts.append(srun)
+                parts.append(_rand_text(rng, rng.randint(0, gap)))
+        rows.append((i, "".join(parts)))
+    return rows
+
+
 def test_excision_random_corpora_match_python(spark):
-    for seed in (7, 19, 31):
-        rng = random.Random(seed)
-        shared = [_rand_text(rng, rng.randint(30, 80)) for _ in range(4)]
-        rows = []
-        for i in range(1, 25):
-            parts = [_rand_text(rng, rng.randint(0, 60))]
-            for srun in shared:
-                if rng.random() < 0.35:
-                    parts.append(srun)
-                    parts.append(_rand_text(rng, rng.randint(0, 40)))
-            rows.append((i, "".join(parts)))
-        assert _run(spark, rows) == _py_excise(rows), seed
+    corpora = [_random_corpus(seed) for seed in (7, 19, 31)]
+    corpora.append(
+        _random_corpus(103, n_runs=3, n_docs=19, head=50, p_run=0.4, gap=30)
+    )
+    for rows in corpora:
+        want = _py_excise(rows)
+        assert want, "degenerate corpus (nothing excised) proves nothing"
+        assert _run(spark, rows) == want
 
 
 def test_excision_plan_shape(spark):
-    """r15 contract: the spans dictionary broadcasts onto the documents
-    side (map-side surgery at 100 TB), the span merge is the vectorized
-    Arrow kernel (MapInArrow — no row-at-a-time Python), the kept_text
-    reconstruction stays a JVM aggregate() fold, and the selector stream
-    is materialized once (cut_lineage → ExistingRDD) so the grams pass
-    never runs per consumer."""
+    """The spans dictionary broadcasts onto the documents side (map-side
+    surgery at 100 TB), the span merge is the vectorized Arrow kernel
+    (MapInArrow — no row-at-a-time Python), the kept_text reconstruction
+    stays a JVM aggregate() fold, the selector shuffles xxhash64-folded
+    keys, and the selector stream is materialized once (cut_lineage →
+    ExistingRDD) so the grams pass never runs per consumer."""
     rng = random.Random(97)
     shared = _rand_text(rng, 60)
     docs = _docs(spark, [(1, shared + "a"), (2, shared + "b")])
     plan = exact_substring_excision(docs)._jdf.queryExecution().toString()
     phys = plan.split("== Physical Plan ==")[-1]
     assert "BatchEvalPython" not in phys  # no row-at-a-time Python, ever
-    assert "MapInArrow" in phys  # the r15 span-merge kernel
+    assert "MapInArrow" in phys  # the span-merge kernel
     assert "CartesianProduct" not in phys and "BroadcastNestedLoopJoin" not in phys
     assert "BroadcastHashJoin" in phys
     assert "aggregate(" in plan  # the JVM kept_text fold
     assert "ExistingRDD" in phys  # the shared selector materialization
-    # the reference (uncut, JVM-fold) path still pins the old shape: one
-    # fused higher-order selector with xxhash64-folded shuffle keys
-    ref = exact_substring_excision(
-        docs, share_selector=False, arrow_spans=False
-    )._jdf.queryExecution().toString()
-    rphys = ref.split("== Physical Plan ==")[-1]
-    assert "BatchEvalPython" not in rphys and "ArrowEvalPython" not in rphys
-    assert "MapInArrow" not in rphys
-    assert "xxhash64" in ref
-
-
-def test_excision_arrow_and_share_paths_identical(spark):
-    """The r15 optimization knobs (share_selector, arrow_spans) must be
-    pure performance: all four combinations produce byte-identical rows,
-    equal to the independent python reference."""
-    rng = random.Random(103)
-    shared = [_rand_text(rng, rng.randint(30, 80)) for _ in range(3)]
-    rows = []
-    for i in range(1, 20):
-        parts = [_rand_text(rng, rng.randint(0, 50))]
-        for srun in shared:
-            if rng.random() < 0.4:
-                parts.append(srun)
-                parts.append(_rand_text(rng, rng.randint(0, 30)))
-        rows.append((i, "".join(parts)))
-    want = _py_excise(rows)
-    for share in (True, False):
-        for arrow in (True, False):
-            df = exact_substring_excision(
-                _docs(spark, rows), share_selector=share, arrow_spans=arrow
-            )
-            got = {
-                r.doc_id: (r.n_spans, r.chars_removed, r.kept_text)
-                for r in df.collect()
-            }
-            assert got == want, (share, arrow)
+    # the materialized selector stream carries the xxhash64-folded key
+    sel = _winnow_fpos(docs)
+    assert "xxhash64" in sel._jdf.queryExecution().toString()
+    assert dict(sel.dtypes)["f"] == "bigint"
 
 
 def test_span_merge_kernel_scattered_input(spark):
-    """r15 regression (found by the full multi-SF sweep at sf0.1): when
+    """Regression (found by the full multi-SF sweep at sf0.1): when
     the upstream join hash-partitions the cut stream by FINGERPRINT, a
     document's cuts scatter across partitions; the kernel must enforce
     doc co-location itself or it emits one spans row per partition
@@ -201,7 +185,7 @@ def test_span_merge_kernel_scattered_input(spark):
 def test_span_merge_kernel_batch_spanning_groups(spark):
     """_merge_spans_arrow must merge correctly when one document's cut
     positions span multiple Arrow batches: force 3-row batches and
-    compare against the JVM fold on the same cut stream."""
+    compare against a Python interval merge of the same cut stream."""
     from warcraider_spark.operators.dedup import _merge_spans_arrow
 
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")

@@ -20,6 +20,24 @@ def _py_winnow(text: str, k: int = WINNOW_K, w: int = WINNOW_W) -> set[str]:
     return {min(grams[j : j + w]) for j in range(len(grams) - w + 1)}
 
 
+def _py_pairs(docs: list[tuple[int, str]]) -> dict[tuple[int, int], int]:
+    """Independent reference for the pair stage: string fingerprints
+    shared by 2..WINNOW_DF_CAP documents, pairs with >= 2 of them."""
+    fps = {doc_id: _py_winnow(text) for doc_id, text in docs}
+    posting: dict[str, list[int]] = {}
+    for doc_id, fset in fps.items():
+        for f in fset:
+            posting.setdefault(f, []).append(doc_id)
+    shared: dict[tuple[int, int], int] = {}
+    for ids in posting.values():
+        if 2 <= len(ids) <= WINNOW_DF_CAP:
+            ids = sorted(ids)
+            for i, a in enumerate(ids):
+                for b in ids[i + 1 :]:
+                    shared[(a, b)] = shared.get((a, b), 0) + 1
+    return {pair: n for pair, n in shared.items() if n >= 2}
+
+
 def _write_docs(spark, tmpdir: str, docs: list[tuple[int, str]]) -> str:
     df = spark.createDataFrame(docs, "doc_id long, text string")
     df.write.mode("overwrite").parquet(os.path.join(tmpdir, "documents.parquet"))
@@ -87,10 +105,9 @@ def test_winnowing_df_cap_drops_boilerplate(spark, tmp_path):
 
 
 def test_arrow_pair_kernel_matches_join_path(spark, tmp_path):
-    """r15: the Arrow pair-generation kernel (arrow_pairs=True, the
-    default) must produce byte-identical pairs to the JVM join
-    formulation on a corpus with shared runs, singletons and a
-    boilerplate fingerprint."""
+    """The Arrow pair-generation kernel must produce exactly the pairs of
+    the df-index + self-join formulation (``_py_pairs``) on a corpus with
+    shared runs and singletons."""
     from warcraider_spark.operators.dedup import winnowing_pairs
 
     rng = random.Random(47)
@@ -104,15 +121,11 @@ def test_arrow_pair_kernel_matches_join_path(spark, tmp_path):
                 parts.append(_rand_text(rng, rng.randint(0, 30)))
         rows.append((i, "".join(parts)))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    new = {
+    got = {
         (r.doc_a, r.doc_b): r.n_shared
-        for r in winnowing_pairs(docs, arrow_pairs=True).collect()
+        for r in winnowing_pairs(docs).collect()
     }
-    old = {
-        (r.doc_a, r.doc_b): r.n_shared
-        for r in winnowing_pairs(docs, arrow_pairs=False).collect()
-    }
-    assert new == old and new
+    assert got == _py_pairs(rows) and got
 
 
 def test_arrow_pair_kernel_batch_spanning_and_cap(spark):

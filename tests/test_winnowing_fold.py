@@ -1,17 +1,18 @@
-"""r13 (VERDICT r12 #3): the winnowing operator's default shuffle key is
-the xxhash64 FOLD of each selected k-gram (8-byte bigint) instead of the
-20-char string. The fold is post-selection — which positions are
-fingerprinted is decided by string min before the hash — so the output
-pair set and every n_shared count must be IDENTICAL to the string form
-on any corpus without a 64-bit collision among its selected grams.
-These tests pin that equality on random corpora, and pin that the fold
-actually changed the shuffled type (bigint key, no string fp column)."""
+"""The winnowing operator's shuffle key is the xxhash64 FOLD of each
+selected k-gram (8-byte bigint) instead of the 20-char string. The fold
+is post-selection — which positions are fingerprinted is decided by
+string min before the hash — so the output pair set and every n_shared
+count must be IDENTICAL to the string-keyed pairs on any corpus without
+a 64-bit collision among its selected grams. These tests pin that
+equality against the pure-Python string reference on random corpora,
+and pin that the shuffled type is the bigint fold."""
 
 from __future__ import annotations
 
 import random
 import string
 
+from tests.test_winnowing import _py_pairs
 from warcraider_spark.operators.dedup import _winnow_fp, winnowing_pairs
 
 
@@ -42,27 +43,27 @@ def _pairs(df) -> dict[tuple[int, int], int]:
 
 def test_fold_equals_string_on_random_corpora(spark):
     for seed in (3, 17, 101):
-        docs = spark.createDataFrame(_corpus(seed), "doc_id long, text string")
-        folded = _pairs(winnowing_pairs(docs, fold=True))
-        strings = _pairs(winnowing_pairs(docs, fold=False))
+        rows = _corpus(seed)
+        docs = spark.createDataFrame(rows, "doc_id long, text string")
+        folded = _pairs(winnowing_pairs(docs))
+        strings = _py_pairs(rows)
         assert folded == strings, f"seed {seed}: fold changed the output"
         assert folded, f"seed {seed}: degenerate corpus (no pairs) proves nothing"
 
 
 def test_fold_shuffles_bigint_not_string(spark):
-    """r14: the selector lives in _winnow_fp (shared by every consumer),
-    so the fold/schema pins live on it directly."""
+    """The selector lives in _winnow_fp (shared by every consumer), so
+    the fold/schema pins live on it directly."""
     docs = spark.createDataFrame(_corpus(23), "doc_id long, text string")
-    plan = _winnow_fp(docs, fold=True)._jdf.queryExecution().toString()
+    plan = _winnow_fp(docs)._jdf.queryExecution().toString()
     # the exploded fingerprint column is the xxhash64 bigint
     assert "xxhash64" in plan
-    # schema-level pin: the explode output type under each mode
-    assert dict(_winnow_fp(docs, fold=True).dtypes)["f"] == "bigint"
-    assert dict(_winnow_fp(docs, fold=False).dtypes)["f"] == "string"
+    # schema-level pin: the explode output type
+    assert dict(_winnow_fp(docs).dtypes)["f"] == "bigint"
 
 
 def test_spread_is_explicit_not_probed(spark):
-    """ADVICE r12: the spread decision must be static — same logical plan
+    """The spread decision must be static — same logical plan
     for the same arguments regardless of input split layout. With
     spread_partitions=None there is no repartition of the input; with an
     explicit target there is exactly one round-robin exchange."""

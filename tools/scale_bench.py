@@ -316,41 +316,17 @@ def _winnowing_scale_docs(spark, sf_dir):
 
 def _winnowing_disjoint_variant(spark, sf_dir):
     """Scale variant of q069_winnowing_dup_pairs over the replica-salted
-    disjoint corpus, running the OPERATOR DEFAULT — which since r13 is
-    the xxhash64-folded 8-byte shuffle key that the r12 64× study
-    measured as the only mitigation holding the scaling step ≤2
-    (_winnowing_folded_variant was the study form; it graduated to the
-    winnowing_pairs default per VERDICT r12 #3). spread_partitions is
-    passed explicitly (ADVICE r12): the harness replicas are byte-dense
-    single-split files, the same undersizing the registry query guards
-    against."""
+    disjoint corpus, running the operator's xxhash64-folded 8-byte
+    shuffle key — the 64× study measured the fold as the only
+    mitigation holding the scaling step ≤2. spread_partitions is passed
+    explicitly: the harness replicas are byte-dense single-split files,
+    the same undersizing the registry query guards against."""
     from warcraider_spark.operators.dedup import winnowing_pairs
 
     return winnowing_pairs(
         _winnowing_scale_docs(spark, sf_dir),
         spread_partitions=spark.sparkContext.defaultParallelism,
     )
-
-
-def _winnowing_string_variant(spark, sf_dir):
-    """The r12-registry STRING-fingerprint form (fold=False), retained so
-    the r12 saturation study's string-vs-fold comparison stays runnable:
-    the r12 64× run showed this form going superlinear (2.43×/octave)
-    exactly where its 20-char-key shuffle outgrows the fixed
-    32-partition layout, while the folded form held min-rep step 1.54."""
-    from warcraider_spark.operators.dedup import winnowing_pairs
-
-    return winnowing_pairs(
-        _winnowing_scale_docs(spark, sf_dir),
-        fold=False,
-        spread_partitions=spark.sparkContext.defaultParallelism,
-    )
-
-
-# Historical name from the r12 study (SCALE.md §winnowing): the folded
-# form is now the operator default, so the study alias and the default
-# disjoint variant are the same plan.
-_winnowing_folded_variant = _winnowing_disjoint_variant
 
 
 def _winnowing_weights_variant(spark, sf_dir):

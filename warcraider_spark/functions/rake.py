@@ -147,7 +147,6 @@ def rake_native(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    cut_occurrences: bool = True,
 ) -> DataFrame:
     """Distributed RAKE: returns (id, keyword, score) rows.
 
@@ -160,20 +159,16 @@ def rake_native(
 
     # phrase OCCURRENCES keep their position so duplicate texts count twice
     # in the word statistics (exactly like the reference's occurrence loop).
-    # cut_lineage (r14, guide §5): the occurrence stream feeds BOTH the
-    # word-stat window path and the distinct-phrase path, and neither
-    # consumer has an exchange between the scan and itself, so without the
-    # cut the corpus scan + phrase extraction executed twice per action
-    # (measured med 0.68 → 0.62 s at sf0.1; at scale it is a full second
-    # corpus pass). The two distinct-phrase consumers were already
-    # deduplicated by exchange reuse. cut_occurrences=False keeps the
-    # uncut reference shape for matched A/Bs (VERDICT r14 #3).
+    # cut_lineage: the occurrence stream feeds BOTH the word-stat window
+    # path and the distinct-phrase path, and neither consumer has an
+    # exchange between the scan and itself, so without the cut the corpus
+    # scan + phrase extraction would execute twice per action (med 0.68 vs
+    # 0.62 s at sf0.1; at scale a full second corpus pass). The two
+    # distinct-phrase consumers are deduplicated by exchange reuse.
     occurrences = docs.select(
         F.col(id_col).alias("_id"),
         F.posexplode(_phrases_col(F.col(text_col))).alias("occ", "phrase"),
-    )
-    if cut_occurrences:
-        occurrences = occurrences.transform(cut_lineage)
+    ).transform(cut_lineage)
     occ_words = occurrences.select(
         "_id",
         "occ",

@@ -5,8 +5,8 @@ are Catalyst expressions (split / transform / aggregate / md5 / conv) — all
 JVM-side with no Arrow transfer, scaling linearly with executors. (Scalar
 expressions compile into whole-stage codegen; the higher-order array
 functions are CodegenFallback — interpreted, fine for cheap lambda bodies,
-which is why the HEAVY per-row folds ship as batched Arrow kernels with
-these as property-test twins: the q139/q136 pattern.)
+which is why the HEAVY per-row folds ship as batched Arrow kernels:
+the q139/q136 pattern.)
 
 Cross-engine hashing convention (used by dedup/minhash/simhash oracles):
 ``md5_int(s)`` = first 15 hex chars of md5(s) as a bigint — identical in
@@ -145,90 +145,6 @@ def shingles(tok: Column, k: int = 3) -> Column:
     """Distinct k-token shingles (space-joined), from a token array.
     See ``all_shingles`` for construction and short-document semantics."""
     return F.array_distinct(all_shingles(tok, k))
-
-
-def sorted_run_stats(arr: Column) -> Column:
-    """Single-pass run statistics over a SORTED string array, as a struct
-    ``(dup_n, dup_chars, top_cnt, top_len)``:
-
-    - ``dup_n``     — number of elements belonging to a value occurring >= 2
-                      times (all members of duplicated groups),
-    - ``dup_chars`` — total characters of those duplicated occurrences
-                      (count * length summed over duplicated values),
-    - ``top_cnt``   — occurrence count of the most frequent value,
-    - ``top_len``   — character length of that value (ties on count broken
-                      by the LONGER value; equal count+length ties leave
-                      cnt*len unchanged, so emitted products are
-                      deterministic without a lexicographic tie-break).
-
-    One ``aggregate`` fold over ``array_sort`` — O(n log n) per row, no
-    explode and no shuffle. NOTE (r8): ArrayAggregate is CodegenFallback
-    (interpreted per row, and large fold trees are re-evaluated per
-    referencing column unless a projection barrier stops CollapseProject
-    — see ``_rep_signals_catalyst``), so this is the SEMANTIC primitive
-    behind the Gopher repetition signals and their property-test twin,
-    while the shipped q139 path is the batched-Arrow kernel
-    (``_rep_signals_arrow_udf``). Either way each signal stays a
-    map-only scan at 100 TB instead of one groupBy shuffle per n-gram
-    order.
-
-    Empty arrays yield all-zero stats. Elements must be non-null and
-    non-empty ("" is the fold's initial sentinel).
-    """
-    zero = F.lit(0).cast("long")
-    init = F.struct(
-        F.lit("").alias("prev"),
-        zero.alias("run"),
-        zero.alias("dup_n"),
-        zero.alias("dup_chars"),
-        zero.alias("top_cnt"),
-        zero.alias("top_len"),
-    )
-
-    def flushed(acc):
-        """Stats after closing the current run (prev, run)."""
-        run = acc.getField("run")
-        prev_len = F.length(acc.getField("prev")).cast("long")
-        is_dup = run >= 2
-        dup_n = acc.getField("dup_n") + F.when(is_dup, run).otherwise(zero)
-        dup_chars = acc.getField("dup_chars") + F.when(is_dup, run * prev_len).otherwise(zero)
-        better = (run > acc.getField("top_cnt")) | (
-            (run == acc.getField("top_cnt")) & (prev_len > acc.getField("top_len"))
-        )
-        top_cnt = F.when(better, run).otherwise(acc.getField("top_cnt"))
-        top_len = F.when(better, prev_len).otherwise(acc.getField("top_len"))
-        return dup_n, dup_chars, top_cnt, top_len
-
-    def step(acc, g):
-        cont = F.struct(
-            g.alias("prev"),
-            (acc.getField("run") + F.lit(1).cast("long")).alias("run"),
-            acc.getField("dup_n").alias("dup_n"),
-            acc.getField("dup_chars").alias("dup_chars"),
-            acc.getField("top_cnt").alias("top_cnt"),
-            acc.getField("top_len").alias("top_len"),
-        )
-        dup_n, dup_chars, top_cnt, top_len = flushed(acc)
-        fresh = F.struct(
-            g.alias("prev"),
-            F.lit(1).cast("long").alias("run"),
-            dup_n.alias("dup_n"),
-            dup_chars.alias("dup_chars"),
-            top_cnt.alias("top_cnt"),
-            top_len.alias("top_len"),
-        )
-        return F.when(g == acc.getField("prev"), cont).otherwise(fresh)
-
-    def fin(acc):
-        dup_n, dup_chars, top_cnt, top_len = flushed(acc)
-        return F.struct(
-            dup_n.alias("dup_n"),
-            dup_chars.alias("dup_chars"),
-            top_cnt.alias("top_cnt"),
-            top_len.alias("top_len"),
-        )
-
-    return F.aggregate(arr, init, step, fin)
 
 
 def shingles_sql(tok_col: str, k: int = 3) -> str:

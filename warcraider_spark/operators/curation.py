@@ -1424,17 +1424,15 @@ def q187_mixture_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mixture_pipeline_plan(docs)
 
 
-def mixture_pipeline_plan(docs, cut_gated: bool = False):
+def mixture_pipeline_plan(docs):
     """The q187 composed plan over an arbitrary documents frame.
 
-    cut_gated (r15, VERDICT r14 #7): materialize the gated pool ``g``
-    (narrow doc_id/source/toks rows) before its three consumers. OFF by
-    default — the r15 matched A/B measured the cut SLOWER (numbers in
-    OPTIMIZATION_r15.md): the gate's window exchanges are identical
-    across consumers and AQE stage reuse already deduplicates them at
-    runtime, so the checkpoint only adds materialization cost — the same
-    negative as r14's q069 fp cut. Kept as a parameter so the experiment
-    is reproducible.
+    The gated pool ``g`` (narrow doc_id/source/toks rows) is NOT
+    materialized before its three consumers: the gate's window exchanges
+    are identical across consumers and AQE stage reuse already
+    deduplicates them at runtime, so a checkpoint only adds
+    materialization cost (measured slower, OPTIMIZATION_r15.md §F) — the
+    same negative as the winnowing fp cut.
     """
     from warcraider_spark.functions.textfn import md5_int, tokens, word_count
 
@@ -1464,8 +1462,6 @@ def mixture_pipeline_plan(docs, cut_gated: bool = False):
         .select("doc_id", "source")
     )
     g = wc.join(gate, ["doc_id", "source"])
-    if cut_gated:
-        g = g.transform(cut_lineage)
 
     # stage 2: water-fill over the gated pool
     dom = g.groupBy("source").agg(F.sum("toks").cast("bigint").alias("dtoks"))

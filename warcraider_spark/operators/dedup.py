@@ -19,10 +19,10 @@ Scale design (the point of these operators at 100 TB):
 - embedding near-dup: bounded candidate set (here: id-range block; the
   LSH-bucketed variant is q105 in similarity.py).
 
-All native expressions — no row-at-a-time Python UDFs anywhere in this
-module. The one Python-boundary crossing is the r15 excision span-merge
-kernel (_merge_spans_arrow): a whole-partition vectorized mapInArrow pass
-over the narrow (doc_id, p) cut stream, per guide §4.2.
+No row-at-a-time Python UDFs anywhere in this module. The Python-boundary
+crossings are vectorized Arrow kernels over narrow integer streams: the CDC
+cut positions (_cdc_cuts_arrow_udf), the winnowing pair generator
+(_winnow_pairs_arrow) and the excision span merge (_merge_spans_arrow).
 """
 
 from __future__ import annotations
@@ -1651,25 +1651,19 @@ def q039_simhash_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_radius_plan(corpus, corpus_n)
 
 
-def simhash_radius_plan(
-    corpus: DataFrame, corpus_n: int, cut_sketch: bool = True
-) -> DataFrame:
+def simhash_radius_plan(corpus: DataFrame, corpus_n: int) -> DataFrame:
     """The q039 banded radius search over an arbitrary corpus.
 
-    cut_sketch (r15, VERDICT r14 #5): materialize the NARROW
-    (doc_id, simhash) stream — 16 bytes/row — before the band explode.
-    At sf0.1 AQE converts the banded self-join's build side to broadcast,
-    and the broadcast side re-executes its subtree instead of reading the
-    reused (band, val) exchange: the corpus-scale sketch aggregation ran
-    TWICE per action. Cutting the sketch bounds the duplicated work to
-    the tiny explode over materialized 16-byte rows. Kept only if the
-    r15 matched A/B beats noise (the r14 attempt measured flat; numbers
-    in OPTIMIZATION_r15.md either way).
+    The NARROW (doc_id, simhash) stream — 16 bytes/row — is materialized
+    before the band explode. When AQE converts the banded self-join's
+    build side to broadcast, the broadcast side re-executes its subtree
+    instead of reading the reused (band, val) exchange, so an uncut plan
+    runs the corpus-scale sketch aggregation TWICE per action. Cutting
+    the sketch bounds the duplicated work to the tiny explode over
+    materialized 16-byte rows.
     """
     bits, band_layout = simhash_band_plan(corpus_n)
-    sketch = _simhash_sketch(corpus, bits)
-    if cut_sketch:
-        sketch = sketch.transform(cut_lineage)
+    sketch = _simhash_sketch(corpus, bits).transform(cut_lineage)
     band_vals = F.array(
         *[
             F.shiftright(F.col("simhash"), lo).bitwiseAND((1 << width) - 1)
@@ -1735,19 +1729,18 @@ CDC_M = 1000003  # modulus (prime)
 CDC_MASK = 63  # boundary when H % 64 == 0 -> ~64-char average chunks
 _CDC_POWS = [pow(CDC_B, j, CDC_M) for j in range(CDC_W)]
 _CDC_POW_SQL = "[" + ",".join(str(p) for p in _CDC_POWS) + "]"
-_CDC_POW_SPARK = "array(" + ",".join(f"{p}L" for p in _CDC_POWS) + ")"
 
 
 def _cdc_cuts_arrow_udf():
-    """Arrow-batched numpy twin of the Catalyst cuts expression: the
-    rolling hash H(i) = sum c[i+j]·B^j (per-window dot product against
-    the precomputed B^j mod M vector) computed as ONE
-    sliding_window_view matmul per document instead of an interpreted
-    Catalyst aggregate() per position — identical integers, identical
-    cut positions (property-tested vs both the python reference and the
-    Catalyst form), ~10× lower constant (VERDICT r6 #3). Only the cut
-    POSITIONS cross the Arrow boundary (an array<long> per doc); the
-    substring extraction stays JVM-side."""
+    """Arrow-batched numpy CDC cut positions: the rolling hash
+    H(i) = sum c[i+j]·B^j (per-window dot product against the
+    precomputed B^j mod M vector) computed as ONE sliding_window_view
+    matmul per document instead of an interpreted per-position
+    Catalyst aggregate() — ~10× lower constant, identical integers
+    (property-tested against the pure-Python reference in
+    tests/test_properties.py and certified by the q136/q130 oracles).
+    Only the cut POSITIONS cross the Arrow boundary (an array<long> per
+    doc); the substring extraction stays JVM-side."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -1782,38 +1775,13 @@ def _cdc_cuts_arrow_udf():
     return pandas_udf(_cuts, "array<long>")
 
 
-def cdc_chunks(docs: DataFrame, *, vectorized: bool = True) -> DataFrame:
+def cdc_chunks(docs: DataFrame) -> DataFrame:
     """documents(doc_id, text) -> (doc_id, chunk_idx, chunk): the CDC
     chunker; chunk_idx is the 1-based in-doc position so consumers can
     reassemble (q130 excision). Exposed for the shift-resistance
-    property test and for composition.
-
-    Two equivalent cut computations (see q136_cdc_chunk_dedup for
-    constants and the scale argument): the default Arrow/numpy rolling
-    hash (``_cdc_cuts_arrow_udf``), and the pure-Catalyst array
-    expression (``vectorized=False``) kept as the no-Python oracle-
-    parity twin — both map-only, same downstream plan, property-tested
-    equal (tests/test_properties.py)."""
-    # Catalyst twin: char codes extracted ONCE via split('') (O(len)); the
-    # rolling sum is then zip_with over an O(W) slice of the codes array.
-    # The naive form — ascii(substring(s, i+j, 1)) inside the position
-    # lambda — is an O(i) UTF-8 seek per character, i.e. O(len^2 * W) per
-    # document: measured 27 s for 20k docs at sf0.1 vs ~1 s for this form.
-    codes_expr = "transform(split(s, ''), ch -> CAST(ascii(ch) AS BIGINT))"
-    cuts = f"""
-    CASE WHEN size(codes) >= {CDC_W} THEN
-      filter(
-        transform(sequence(1, size(codes) - {CDC_W} + 1),
-          i -> CASE WHEN
-            aggregate(
-              zip_with(slice(codes, i, {CDC_W}), {_CDC_POW_SPARK},
-                       (c, p) -> c * p),
-              0L, (acc, x) -> acc + x
-            ) % {CDC_M} % {CDC_MASK + 1} = 0
-          THEN i + {CDC_W} - 1 ELSE NULL END),
-        x -> x IS NOT NULL AND x < size(codes))
-    ELSE array() END
-    """
+    property test and for composition. Cut positions come from the
+    map-only Arrow/numpy rolling hash (``_cdc_cuts_arrow_udf``); see
+    q136_cdc_chunk_dedup for constants and the scale argument."""
     chunks_expr = (
         "transform(sequence(1, size(starts)), "
         "k -> substring(s, CAST(element_at(starts, k) + 1 AS INT), "
@@ -1823,16 +1791,10 @@ def cdc_chunks(docs: DataFrame, *, vectorized: bool = True) -> DataFrame:
         "doc_id",
         F.expr("lower(regexp_replace(text, '[^a-zA-Z0-9 ]', ''))").alias("s"),
     )
-    if vectorized:
-        with_cuts = base.select(
+    return (
+        base.select(
             "doc_id", "s", _cdc_cuts_arrow_udf()(F.col("s")).alias("cuts")
         )
-    else:
-        with_cuts = base.select(
-            "doc_id", "s", F.expr(codes_expr).alias("codes")
-        ).select("doc_id", "s", F.expr(cuts).alias("cuts"))
-    return (
-        with_cuts
         .select(
             "doc_id",
             "s",
@@ -1913,12 +1875,10 @@ def q136_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifies boundary placement AND chunk content byte-for-byte.
 
     Scale shape: chunking is MAP-ONLY, O(len·W) per doc — cut positions
-    from an Arrow-batched numpy sliding-window matmul (r7: ~3.3× on the
-    sf0.1 bench vs the interpreted Catalyst aggregate(), VERDICT r6 #3;
+    from an Arrow-batched numpy sliding-window matmul (~3.3× on the
+    sf0.1 bench vs an interpreted Catalyst aggregate() per position;
     only an array<long> of cuts crosses the Arrow boundary, substrings
-    stay JVM-side), with the pure-Catalyst array-expression twin kept
-    as the no-Python form (``cdc_chunks(vectorized=False)``), property-
-    tested identical. The only shuffle is the final groupBy on the
+    stay JVM-side). The only shuffle is the final groupBy on the
     uniform md5 chunk key. 100 TB: identical plan, chunk-key groupBy
     partitions by hash — no skew (the mask bounds expected chunk count
     per doc at len/64, and a pathological all-boundary doc still emits
@@ -2051,16 +2011,14 @@ WINNOW_K = 20
 WINNOW_W = 8
 WINNOW_DF_CAP = 64
 
-# r14 (guide §1.2 "per-task work"): the selector materializes the k-gram
-# array ONCE per document and takes window minima over array slices —
-# one substring allocation per position instead of the W=8 the previous
-# nested-transform form paid (the inner transform re-built every window's
-# substrings from scratch). Value-identical: grams[j+d] ==
-# substring(text, j+d, K), so min over slice(grams, j, W) is the same
-# string the nested form selected. The two-step Project (grams column,
-# then the min transform referencing it twice) is what keeps Catalyst
-# from inlining the grams expression into the lambda body — the same
-# CollapseProject barrier exact_substring_excision already relies on.
+# The selector materializes the k-gram array ONCE per document and takes
+# window minima over array slices — one substring allocation per position
+# instead of W=8 (a nested transform would re-build every window's
+# substrings from scratch). grams[j+d] == substring(text, j+d, K), so the
+# min over slice(grams, j, W) is the window's minimum k-gram. The two-step
+# Project (grams column, then the min transform referencing it twice) is
+# what keeps Catalyst from inlining the grams expression into the lambda
+# body — the same CollapseProject barrier _WINNOW_GP relies on.
 _WINNOW_GRAMS = (
     f"transform(sequence(1, length(text)-{WINNOW_K - 1}), "
     f"i -> substring(text, i, {WINNOW_K}))"
@@ -2074,41 +2032,35 @@ _WINNOW_MINS = (
 def _winnow_fp(
     docs: DataFrame,
     *,
-    fold: bool = True,
     spread_partitions: int | None = None,
 ) -> DataFrame:
     """The winnowing selector: one (doc_id, f) row per DISTINCT selected
     fingerprint per document (array_distinct runs per doc, before the
-    explode). fold=True emits f as the post-selection xxhash64 bigint
-    (8-byte shuffle key); fold=False keeps the k-gram string the DuckDB
-    oracle mirrors bytewise. See winnowing_pairs for the spread
+    explode), f being the post-selection xxhash64 bigint of the selected
+    k-gram (8-byte shuffle key). See winnowing_pairs for the spread
     rationale."""
     base = docs.filter(F.length("text") >= WINNOW_K + WINNOW_W - 1)
     if spread_partitions is not None and spread_partitions > 1:
         base = base.repartition(spread_partitions)
-    sel = _WINNOW_MINS
-    if fold:
-        # distinct-then-fold preserves the per-doc distinct gram set the
-        # string form selects; the outer distinct on the 8-byte hashes is
-        # O(n) and guards the count()-based df against the (~1e-8)
-        # in-doc collision duplicating a (doc_id, f) row.
-        sel = f"array_distinct(transform({sel}, s -> xxhash64(s)))"
+    # distinct-then-fold preserves the per-doc distinct gram set; the outer
+    # distinct on the 8-byte hashes is O(n) and guards the df count against
+    # the (~1e-8) in-doc collision duplicating a (doc_id, f) row.
+    sel = f"array_distinct(transform({_WINNOW_MINS}, s -> xxhash64(s)))"
     return base.select("doc_id", F.expr(_WINNOW_GRAMS).alias("grams")).select(
         "doc_id", F.explode(F.expr(sel)).alias("f")
     )
 
 
-# r14 (guide §1.2 per-task work): POSITION-annotated selector via ONE
-# struct argmin. struct(gram, pos) ordering compares the gram first and
-# the position second, so array_min over a window of structs IS the first
-# occurrence of the window's minimum k-gram — the exact position the old
-# array_min(slice) + array_position(slice) double-slice form selected,
+# POSITION-annotated selector via ONE struct argmin. struct(gram, pos)
+# ordering compares the gram first and the position second, so array_min
+# over a window of structs IS the first occurrence of the window's minimum
+# k-gram — the position the oracle's list_min + list_position selects —
 # with one slice materialization and W-1 struct compares per window
-# instead of two slices and up to 2W-1 string compares, and no
-# element_at re-lookup to fetch the gram afterwards. Measured ~36%
-# faster on the isolated (doc_id, f, p) stream, output-identical
-# (tools/r14_wins_ab.py). The two references to gp (size + slice) keep
-# CollapseProject from inlining the struct array into the lambda.
+# instead of two slices and up to 2W-1 string compares, and no element_at
+# re-lookup to fetch the gram afterwards (~36% faster on the isolated
+# (doc_id, f, p) stream, OPTIMIZATION_r14.md §B). The two references to gp
+# (size + slice) keep CollapseProject from inlining the struct array into
+# the lambda.
 _WINNOW_GP = (
     f"transform(sequence(1, length(text)-{WINNOW_K - 1}), "
     f"i -> struct(substring(text, i, {WINNOW_K}) AS f, cast(i AS int) AS p))"
@@ -2119,46 +2071,45 @@ _WINNOW_FPOS = (
 )
 
 
-def _winnow_fpos(base: DataFrame, *, fold: bool = True) -> DataFrame:
+def _winnow_fpos(base: DataFrame) -> DataFrame:
     """Position-annotated winnowing selector over a pre-filtered (and
     optionally pre-spread) frame: one (doc_id, f, p) row per selected
-    position. p determines f, so rows are unique on (doc_id, p).
-    fold=True emits f as the post-selection xxhash64 bigint."""
-    fcol = F.xxhash64(F.col("fp.f")) if fold else F.col("fp.f")
+    position, f being the post-selection xxhash64 bigint of the k-gram.
+    p determines f, so rows are unique on (doc_id, p)."""
     return (
         base.select("doc_id", F.expr(_WINNOW_GP).alias("gp"))
         .select("doc_id", F.explode(F.expr(_WINNOW_FPOS)).alias("fp"))
-        .select("doc_id", fcol.alias("f"), F.col("fp.p").alias("p"))
+        .select("doc_id", F.xxhash64(F.col("fp.f")).alias("f"), F.col("fp.p").alias("p"))
     )
 
 
 def _merge_spans_arrow(cuts: DataFrame, *, accounting_only: bool = False) -> DataFrame:
     """Per-document span merge of the excision cut stream as ONE
-    vectorized Arrow kernel (r15, guide §4.2 — replaces the interpreted
-    ``aggregate()`` fold over ``array_sort(collect_list(p))``).
+    vectorized Arrow kernel — no interpreted per-position fold over a
+    collected position array.
 
     Input: the (doc_id, p) cut stream. The kernel ENFORCES doc
     co-location itself with a repartition on doc_id — mapInArrow cannot
-    declare a clustering requirement the way the collect_list
-    aggregation could, and the upstream fpos ⋈ stats join only preserves
+    declare a clustering requirement the way a doc_id groupBy would,
+    and the upstream fpos ⋈ stats join only preserves
     the doc-range layout while stats broadcasts; when the planner picks
     a shuffle join on f (it does at sf0.1, and always would at 100 TB
     corpus-pervasive duplication), a document's cuts scatter across
     f-partitions and a co-location assumption silently DUPLICATES output
-    rows (caught by the r15 full multi-SF sweep: q088 9295 vs 4858 rows
-    at sf0.1; sf0.001/0.01 passed on broadcast luck). The exchange moves
-    only the narrow cut rows (~12 B), a small fraction of the
-    fingerprint stream the removed distinct used to shuffle.
+    rows (q088 at sf0.1 emitted 9295 instead of 4858 rows while
+    sf0.001/0.01 passed on broadcast luck). The exchange moves only the
+    narrow cut rows (~12 B).
 
-    Semantics pinned to the JVM fold (tests/test_substring_excision.py):
+    Semantics (pinned by the DuckDB gaps-and-islands oracle of q088/q197
+    and the pure-Python ``_py_excise`` in tests/test_substring_excision.py):
     positions sort ascending per doc; a cut at ``p`` extends the open
     span while ``p <= prev_p + K`` (equality merges), else opens a new
-    span [p, p+K). All arithmetic is exact int32/int64, identical to the
-    Catalyst expression, so outputs are byte-identical.
+    span [p, p+K). All arithmetic is exact int32/int64.
 
     accounting_only=True emits (doc_id, n_spans, chars_removed) directly
-    (the q197 manifest shape); False emits (doc_id, spans) with the same
-    array<struct<s,e>> schema the kept_text fold consumes (q088).
+    (the q197 manifest shape); False emits (doc_id, spans) as
+    array<struct<s,e>>, the shape the kept_text reconstruction consumes
+    (q088).
     """
     import pyarrow as pa
 
@@ -2227,24 +2178,22 @@ def _merge_spans_arrow(cuts: DataFrame, *, accounting_only: bool = False) -> Dat
 def _winnow_pairs_arrow(fp: DataFrame, *, cap: int = WINNOW_DF_CAP) -> DataFrame:
     """(doc_id, f) fingerprint stream → (doc_a, doc_b) candidate-pair
     OCCURRENCES (one row per shared fingerprint) as one vectorized Arrow
-    kernel (r15, VERDICT r14 #1 / guide §4.2).
+    kernel.
 
-    Replaces the JVM formulation's distinct + df-index join + fold-keyed
-    self-join: the stream is hash-partitioned on f and sorted
-    partition-locally by (f, doc_id) — the sort is codegen'd JVM work and
-    spills safely — then the kernel streams f-groups batch by batch
-    (vectorized NumPy over each batch, one carry group across batch
-    edges), dedups doc_ids within the group (equality on adjacent rows of
-    the sorted run), applies the 2..cap df skew guard, and emits every
-    (doc_a < doc_b) combination. Downstream the caller aggregates
-    n_shared per pair exactly as before, so ONE f exchange + ONE pair
-    exchange replace the old distinct exchange + f exchange + pair
-    exchange, and the SMJ probe disappears.
+    The stream is hash-partitioned on f and sorted partition-locally by
+    (f, doc_id) — the sort is codegen'd JVM work and spills safely — then
+    the kernel streams f-groups batch by batch (vectorized NumPy over
+    each batch, one carry group across batch edges), dedups doc_ids
+    within the group (equality on adjacent rows of the sorted run),
+    applies the 2..cap df skew guard, and emits every (doc_a < doc_b)
+    combination. The caller aggregates n_shared per pair, so the plan is
+    ONE f exchange + ONE pair exchange: no df-index join, no self-join
+    probe, no separate distinct.
 
     Memory: the kernel holds one Arrow batch plus the open f-group —
     bounded by the largest single fingerprint's raw occurrence count
     (16 B/row), not the partition. Pair fan-out is bounded at C(cap, 2)
-    per group by the same df cap the join plan relied on.
+    per group by the df cap.
     """
     import pyarrow as pa
 
@@ -2375,14 +2324,15 @@ def q069_winnowing_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (hash-partitioned on fp, two-sided partial aggregation). The df cap
     is the same skew guard the containment join uses: a boilerplate
     fingerprint shared by thousands of pages is dropped before it can
-    form a quadratic pair blow-up or a hot reduce partition. Since r13
-    the shuffle key is the xxhash64 FOLD of the selected k-gram (8-byte
-    bigint instead of a 20-char string) — the r12 64× study measured
+    form a quadratic pair blow-up or a hot reduce partition. The
+    shuffle key is the xxhash64 FOLD of the selected k-gram (8-byte
+    bigint instead of a 20-char string) — the 64× scale study measured
     the fold as the only mitigation holding the scaling step ≤2 at
     local saturation; selection is still by string min, so detection
-    guarantees are unchanged, and the output is identical to the string
-    form (pinned by tests/test_winnowing_fold.py), which is why the
-    string-keyed DuckDB oracle above still certifies this plan.
+    guarantees are unchanged, and the output equals the string-keyed
+    pair set (pinned against a pure-Python string reference by
+    tests/test_winnowing_fold.py), which is why the string-keyed DuckDB
+    oracle above still certifies this plan.
     """
     docs = load_table(spark, sf_dir, "documents")
     return winnowing_pairs(
@@ -2393,27 +2343,28 @@ def q069_winnowing_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def winnowing_pairs(
     docs: DataFrame,
     *,
-    fold: bool = True,
     spread_partitions: int | None = None,
     ordered: bool = True,
-    arrow_pairs: bool = True,
 ) -> DataFrame:
     """The winnowing pair pipeline over any (doc_id, text) frame — shared
     by the registry query and the scale harness's disjoint-replica
     variant (tools/scale_bench.py).
 
-    fold=True (default): the selected fingerprints leave the map side as
-    xxhash64 bigints — an 8-byte shuffle/join/groupBy key instead of a
-    20-char string. Selection itself still happens on the k-gram STRINGS
-    (the winnowing min is by string value; the fold is post-selection),
-    so which positions are fingerprinted — and therefore the ≥27-char
-    detection guarantee — is unchanged. Output equals the fold=False
-    form except under a 64-bit collision among one corpus's selected
-    grams (~1e-8 at 1e5 distinct fps; equality on random corpora is
-    pinned by tests/test_winnowing_fold.py). fold=False keeps the
-    engine-portable string form the DuckDB oracle mirrors bytewise.
+    The selected fingerprints leave the map side as xxhash64 bigints —
+    an 8-byte shuffle key instead of a 20-char string. Selection itself
+    still happens on the k-gram STRINGS (the winnowing min is by string
+    value; the fold is post-selection), so which positions are
+    fingerprinted — and therefore the ≥27-char detection guarantee — is
+    unchanged. Output equals the string-keyed pair set except under a
+    64-bit collision among one corpus's selected grams (~1e-8 at 1e5
+    distinct fps; equality on random corpora against a pure-Python
+    string reference is pinned by tests/test_winnowing_fold.py).
 
-    spread_partitions (ADVICE r12: explicit, not an RDD probe): the
+    Pairs come from the streaming Arrow kernel (_winnow_pairs_arrow):
+    one f exchange, the df cap applied inside the kernel, then one pair
+    exchange to count n_shared.
+
+    spread_partitions (explicit, not an RDD probe): the
     selector amplifies each input row ~|text|-fold in CPU (w substring
     comparisons per character), so Spark's BYTE-based input splitting
     undersizes it badly on small dense files (sf0.1's 581 KB
@@ -2423,62 +2374,19 @@ def winnowing_pairs(
     defaultParallelism — one cheap round-robin shuffle of the narrow
     input rows, documented in the plan-shape pin). At real scale file
     count ≫ cores, the spread is unnecessary, and the default None keeps
-    the 100 TB plan at zero extra shuffles — the decision is now static
-    in the caller, never derived from a plan-time RDD materialization,
-    so the physical plan no longer depends on defaultParallelism or
-    file-split layout.
-
-    r14 optimization (guide §1.2, measured in OPTIMIZATION_r14.md):
-    - the selector now materializes the k-gram array once per document
-      and takes window minima over array slices (_WINNOW_GRAMS /
-      _WINNOW_MINS) — one substring allocation per position instead of
-      W=8, measured ~15% faster on the isolated fingerprint stream
-      (tools/r14_selector_ab.py);
-    - the df index uses count(1), not countDistinct(doc_id) — (doc_id,
-      f) is distinct by construction (per-doc array_distinct, plus the
-      post-fold distinct guarding the ~1e-8 in-doc hash collision), and
-      plain count gets map-side partial aggregation where countDistinct
-      shipped every fingerprint row into the aggregate;
-    - two NEGATIVE results kept as the old shape (numbers in
-      OPTIMIZATION_r14.md): materializing fp behind cut_lineage and
-      replacing the self-join with a per-fingerprint collect_list +
-      combination explode both measured SLOWER — the static plan prints
-      the selector subtree per consumer, but AQE exchange reuse already
-      deduplicates it at runtime (the selector executes once; the extra
-      copies read shuffle files), so the checkpoint only added block
-      serialization for zero saved compute."""
-    fp = _winnow_fp(docs, fold=fold, spread_partitions=spread_partitions)
-    if arrow_pairs:
-        # r15 (VERDICT r14 #1): pair generation as the vectorized Arrow
-        # kernel — one f exchange + one pair exchange; the df cap and the
-        # per-f doc dedup (a no-op here, (doc_id, f) is distinct by
-        # construction) happen inside the kernel. The JVM join path below
-        # stays as the reference shape (equivalence pinned by tests).
-        out = (
-            _winnow_pairs_arrow(fp)
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-            .filter(F.col("n_shared") >= 2)
-        )
-    else:
-        idx = (
-            fp.groupBy("f")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter((F.col("df") >= 2) & (F.col("df") <= WINNOW_DF_CAP))
-            .select("f")
-        )
-        cand = fp.join(idx, "f")
-        a = cand.select(F.col("f"), F.col("doc_id").alias("doc_a"))
-        b = cand.select(F.col("f"), F.col("doc_id").alias("doc_b"))
-        out = (
-            a.join(b, "f")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            # (doc_id, f) is distinct by construction (array_distinct per
-            # doc), so per-pair COUNT(*) == COUNT(DISTINCT f)
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-            .filter(F.col("n_shared") >= 2)
-        )
+    the 100 TB plan at zero extra shuffles — the decision is static in
+    the caller, never derived from a plan-time RDD materialization, so
+    the physical plan does not depend on defaultParallelism or
+    file-split layout."""
+    fp = _winnow_fp(docs, spread_partitions=spread_partitions)
+    # the kernel's per-f doc dedup is a no-op here: (doc_id, f) is distinct
+    # by construction, so per-pair COUNT(*) == COUNT(DISTINCT f)
+    out = (
+        _winnow_pairs_arrow(fp)
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .filter(F.col("n_shared") >= 2)
+    )
     # ordered=False lets compositions (winnowing_dedup_keep) consume the
     # pair stream without a global sort the next aggregation would
     # destroy anyway; the registry query keeps the deterministic order.
@@ -2576,7 +2484,7 @@ ORDER BY canonical_doc_id
     bench=True,
 )
 def q062_winnowing_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEW r13: the end-to-end substring-dedup KEEP decision — what a
+    """The end-to-end substring-dedup KEEP decision — what a
     training-data pipeline actually ships. q069 detects candidate
     pairs; this composes them into dedup clusters (connected
     components over the pair graph — transitive: if A shares a run
@@ -2616,15 +2524,13 @@ def winnowing_dedup_keep(
     docs: DataFrame,
     *,
     spread_partitions: int | None = None,
-    arrow_pairs: bool = True,
 ) -> DataFrame:
     """Cluster winnowing duplicate pairs and elect canonical survivors —
     see q062_winnowing_dedup_keep for semantics and the scale story."""
     from warcraider_spark.operators.graph import contracted_components
 
     pairs = winnowing_pairs(
-        docs, spread_partitions=spread_partitions, ordered=False,
-        arrow_pairs=arrow_pairs,
+        docs, spread_partitions=spread_partitions, ordered=False
     )
     # doc_a < doc_b, distinct, no self-loops by construction: the CC
     # contraction can skip its canonicalization shuffle
@@ -2698,7 +2604,7 @@ ORDER BY d.doc_id
     bench=True,
 )
 def q063_winnowing_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEW r13: soft dedup — the REWEIGHTING alternative to removal.
+    """Soft dedup — the REWEIGHTING alternative to removal.
     Instead of dropping duplicate-cluster members (q062), every
     document gets a sampling weight 1/|cluster| (singletons weigh 1),
     so a run duplicated across k documents contributes ~one document's
@@ -2738,7 +2644,6 @@ def winnowing_soft_dedup_weights(
     *,
     spread_partitions: int | None = None,
     broadcast_dictionary: bool = True,
-    arrow_pairs: bool = True,
 ) -> DataFrame:
     """Per-document sampling weights from winnowing duplication clusters
     — see q063_winnowing_soft_dedup_weights for semantics and the
@@ -2746,8 +2651,7 @@ def winnowing_soft_dedup_weights(
     from warcraider_spark.operators.graph import contracted_components
 
     pairs = winnowing_pairs(
-        docs, spread_partitions=spread_partitions, ordered=False,
-        arrow_pairs=arrow_pairs,
+        docs, spread_partitions=spread_partitions, ordered=False
     )
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     comp = contracted_components(edges, assume_canonical=True)
@@ -2755,9 +2659,9 @@ def winnowing_soft_dedup_weights(
     weights = comp.join(sizes, "comp").select("node", "n")
     if broadcast_dictionary:
         weights = F.broadcast(weights)
-    # r14: range-spread the narrow (doc_id-only) probe so the trailing
-    # doc_id sort is partition-local under the broadcast regime — the old
-    # orderBy's boundary sampling re-ran the corpus probe pass (see
+    # range-spread the narrow (doc_id-only) probe so the trailing doc_id
+    # sort is partition-local under the broadcast regime — a global
+    # orderBy's boundary sampling would re-run the corpus probe pass (see
     # exact_substring_excision / lineage.range_presort)
     probe = docs.select("doc_id")
     presorted = (
@@ -2842,7 +2746,7 @@ ORDER BY p.doc_id
     bench=True,
 )
 def q088_exact_substring_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEW r13: exact-substring EXCISION — the surgical third member of
+    """Exact-substring EXCISION — the surgical third member of
     the winnowing family (detect pairs q069 → cluster+keep q062 /
     reweight q063 → EXCISE q088). Instead of dropping or downweighting
     whole documents, the duplicated EXTENTS themselves are cut out of
@@ -2863,10 +2767,10 @@ def q088_exact_substring_excision(spark: SparkSession, sf_dir: str) -> DataFrame
 
     100 TB shape: positions ride the SAME fused higher-order selector
     as q069 (grams materialized once per doc, window argmin by string
-    min, fold-keyed shuffle by default); ownership is one groupBy on
+    min, 8-byte folded fingerprint key); ownership is one groupBy on
     the fingerprint key (min-doc + distinct-doc df in one pass); the
-    per-doc span merge is a JVM aggregate() fold over the sorted
-    position array (no Python, no window over the corpus); and the
+    per-doc span merge is one vectorized Arrow kernel over the narrow
+    (doc_id, p) cut stream (no window over the corpus); and the
     text re-enters ONCE, via a join of the (excised-doc → spans)
     dictionary against the documents scan — broadcast by default
     (map-side surgery, zero corpus shuffle; the dictionary holds only
@@ -2885,11 +2789,8 @@ def q088_exact_substring_excision(spark: SparkSession, sf_dir: str) -> DataFrame
 def exact_substring_excision(
     docs: DataFrame,
     *,
-    fold: bool = True,
     spread_partitions: int | None = None,
     broadcast_dictionary: bool = True,
-    arrow_spans: bool = True,
-    share_selector: bool = True,
 ) -> DataFrame:
     """Winnowing-sampled exact-substring excision — see
     q088_exact_substring_excision for semantics and the scale story.
@@ -2909,12 +2810,12 @@ def exact_substring_excision(
     shape changes (both pinned in tests/test_substring_excision.py)."""
     K, W = WINNOW_K, WINNOW_W
     base = docs.filter(F.length("text") >= K + W - 1)
-    # r14: under the broadcast regime the surgery pass probes `base`
-    # map-side and the declared output is doc_id-ordered — range-spread
-    # by doc_id (instead of round-robin) so the trailing global sort
-    # degenerates to sortWithinPartitions and its boundary sampling no
-    # longer RE-RUNS the whole probe+fold subtree (lineage.range_presort
-    # rationale; measured ~0.9 s of the q088 bench time).
+    # Under the broadcast regime the surgery pass probes `base` map-side
+    # and the declared output is doc_id-ordered — range-spread by doc_id
+    # (instead of round-robin) so the trailing global sort degenerates to
+    # sortWithinPartitions and its boundary sampling does not RE-RUN the
+    # whole probe+fold subtree (lineage.range_presort rationale; ~0.9 s
+    # of the q088 bench time).
     presorted = (
         broadcast_dictionary
         and spread_partitions is not None
@@ -2926,59 +2827,34 @@ def exact_substring_excision(
             if presorted
             else base.repartition(spread_partitions)
         )
-    fpos = _winnow_fpos(base, fold=fold)
-    # r15 (guide §2.4/§5): materialize the selector output once. Unlike
-    # winnowing_pairs (where every fp consumer sits above an identical
-    # f-keyed exchange that AQE reuse deduplicates), q088's two fpos
-    # consumers are a partial aggregation and a broadcast-join probe with
-    # NO common exchange above the selector — the plan re-ran the full
-    # grams/struct-argmin selector once per consumer (nodes (4-9) and
-    # (10-15) in plans/r14/exact_substring_excision_after.txt, different
-    # pushed filters so even the scan exchange was not reusable). The cut
+    # Materialize the selector output once. Unlike winnowing_pairs (where
+    # every fp consumer sits above an identical f-keyed exchange that AQE
+    # reuse deduplicates), the two fpos consumers here are a partial
+    # aggregation and a broadcast-join probe with NO common exchange above
+    # the selector, so an uncut plan re-runs the full grams/struct-argmin
+    # selector once per consumer (their pushed filters differ, so even
+    # the scan exchange is not reusable; OPTIMIZATION_r15.md §B). The cut
     # stores the narrow (doc_id, f, p) stream (~20 B/row, ~2/(W+1) of the
-    # k-grams) and both consumers read blocks — the same shape
-    # winnowing_family already proved.
-    if share_selector:
-        fpos = fpos.transform(cut_lineage)
+    # k-grams) and both consumers read blocks — the same shape as
+    # winnowing_family.
+    fpos = _winnow_fpos(base).transform(cut_lineage)
     stats = (
         fpos.groupBy("f")
         .agg(F.countDistinct("doc_id").alias("df"), F.min("doc_id").alias("owner"))
         .filter((F.col("df") >= 2) & (F.col("df") <= WINNOW_DF_CAP))
         .select("f", "owner")
     )
-    # No distinct on the cut stream (r14, guide §2.4): fpos is unique on
-    # (doc_id, p) by construction — wins positions are array_distinct per
-    # document and each position carries exactly one gram — and stats is
-    # unique per f, so the equi-join cannot duplicate a (doc_id, p) row.
-    # The old .distinct() was a full Exchange + two HashAggregates over
-    # the cut stream for zero effect (oracle's SELECT DISTINCT dedups the
-    # same already-unique set).
+    # No distinct on the cut stream: fpos is unique on (doc_id, p) by
+    # construction — wins positions are array_distinct per document and
+    # each position carries exactly one gram — and stats is unique per f,
+    # so the equi-join cannot duplicate a (doc_id, p) row (the oracle's
+    # SELECT DISTINCT dedups the same already-unique set).
     cuts = (
         fpos.join(stats, "f")
         .filter(F.col("doc_id") != F.col("owner"))
         .select("doc_id", "p")
     )
-    # r15 (guide §4.2): the per-doc span merge is a vectorized Arrow
-    # kernel by default — the interpreted aggregate() fold is kept as the
-    # reference path (equivalence pinned by tests/test_substring_excision)
-    if arrow_spans:
-        spans = _merge_spans_arrow(cuts)
-    else:
-        spans = cuts.groupBy("doc_id").agg(
-            F.expr(
-                f"""aggregate(
-                     array_sort(collect_list(p)),
-                     cast(array() as array<struct<s: int, e: int>>),
-                     (acc, p) -> CASE
-                       WHEN size(acc) > 0 AND p <= element_at(acc, -1).e
-                       THEN concat(slice(acc, 1, size(acc) - 1),
-                                   array(struct(element_at(acc, -1).s AS s,
-                                                greatest(element_at(acc, -1).e,
-                                                         p + {K}) AS e)))
-                       ELSE concat(acc, array(struct(p AS s, p + {K} AS e)))
-                     END)"""
-            ).alias("spans")
-        )
+    spans = _merge_spans_arrow(cuts)
     if broadcast_dictionary:
         spans = F.broadcast(spans)
     out = (
@@ -3103,8 +2979,8 @@ ORDER BY dd.doc_id
     bench=True,
 )
 def q197_winnowing_family_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NEW r14 (VERDICT r13 #4): the winnowing family as ONE composed
-    plan sharing a single selector pass. q069/q062/q063/q088 each
+    """The winnowing family as ONE composed plan sharing a single
+    selector pass. q069/q062/q063/q088 each
     re-run the same grams/window-argmin selector — the dominant cost
     (a ~20x in-memory text amplification per document) and ~12.5 s of
     the 39 s bench headline when a pipeline runs all of them. This
@@ -3133,11 +3009,8 @@ def q197_winnowing_family_manifest(spark: SparkSession, sf_dir: str) -> DataFram
 def winnowing_family(
     docs: DataFrame,
     *,
-    fold: bool = True,
     spread_partitions: int | None = None,
     broadcast_dictionary: bool = True,
-    arrow_spans: bool = True,
-    arrow_pairs: bool = True,
 ) -> DataFrame:
     """Shared-selector composition of the winnowing dedup family —
     detect + cluster/keep + reweight + excision accounting from ONE
@@ -3148,11 +3021,11 @@ def winnowing_family(
     so far SMALLER than the corpus text it summarizes) is materialized
     once via cut_lineage (localCheckpoint locally; reliable
     checkpoint when WARCRAIDER_CHECKPOINT_DIR points at fault-tolerant
-    storage) and every downstream branch — the df-capped fingerprint
-    index, the pair join, the CC clustering, the ownership cuts —
-    reads that materialization instead of re-amplifying the text. The
-    fingerprint stats (df + owner) are likewise computed once and
-    shared by the pair index and the excision ownership filter. The
+    storage) and every downstream branch — the pair kernel (which
+    applies the df cap itself), the CC clustering, the fingerprint
+    stats and the ownership cuts — reads that materialization instead
+    of re-amplifying the text; the span merge is the same Arrow kernel
+    as exact_substring_excision's, in accounting-only form. The
     corpus text never shuffles: it re-enters only as narrow
     projections — (doc_id, n_chars) for the election, (doc_id) for
     the final manifest join — and the family dictionary (one row per
@@ -3170,10 +3043,10 @@ def winnowing_family(
         base = base.repartition(spread_partitions)
     # THE shared selector pass (struct argmin — see _winnow_fpos):
     # materialized once, read by every branch.
-    fpos = _winnow_fpos(base, fold=fold).transform(cut_lineage)
-    # Shared fingerprint stats: df cap for the pair index AND excision
-    # ownership in one aggregation (seam-sized; cut so the pair branch
-    # and the cuts branch both read one materialization).
+    fpos = _winnow_fpos(base).transform(cut_lineage)
+    # Fingerprint stats for excision ownership: df cap + owner in one
+    # aggregation (seam-sized). Only the cuts branch reads it; the pair
+    # kernel applies the df cap itself.
     stats = (
         fpos.groupBy("f")
         .agg(F.countDistinct("doc_id").alias("df"), F.min("doc_id").alias("owner"))
@@ -3182,30 +3055,16 @@ def winnowing_family(
         .transform(cut_lineage)
     )
     # Branch 1: candidate pairs (q069 semantics) -> clusters (q062/q063).
-    if arrow_pairs:
-        # r15 (VERDICT r14 #1): the kernel dedups (doc_id, f) per
-        # fingerprint group itself (fpos CAN repeat f within a doc at
-        # different positions) and applies the 2..cap df guard, so the
-        # .distinct() and the stats join disappear along with their
-        # exchanges — the df semantics are identical to stats' distinct
-        # doc count.
-        pairs = (
-            _winnow_pairs_arrow(fpos.select("doc_id", "f"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-            .filter(F.col("n_shared") >= 2)
-        )
-    else:
-        fp = fpos.select("doc_id", "f").distinct()
-        a = fp.join(stats.select("f"), "f").select("f", F.col("doc_id").alias("doc_a"))
-        b = fp.select("f", F.col("doc_id").alias("doc_b"))
-        pairs = (
-            a.join(b, "f")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-            .filter(F.col("n_shared") >= 2)
-        )
+    # The kernel dedups (doc_id, f) per fingerprint group itself (fpos CAN
+    # repeat f within a doc at different positions) and applies the 2..cap
+    # df guard — the same df as stats' distinct doc count, with no
+    # .distinct() and no stats join.
+    pairs = (
+        _winnow_pairs_arrow(fpos.select("doc_id", "f"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .filter(F.col("n_shared") >= 2)
+    )
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
     comp = contracted_components(edges, assume_canonical=True)
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("n"))
@@ -3217,41 +3076,16 @@ def winnowing_family(
     )
     clustered = comp.join(sizes, "comp").join(canon, "comp").select("node", "n", "canon")
     # Branch 2: excision accounting (q088 semantics, accounting columns).
-    # No distinct (r14): fpos is unique on (doc_id, p) by construction
-    # and stats is unique per f — see exact_substring_excision.
+    # No distinct: fpos is unique on (doc_id, p) by construction and stats
+    # is unique per f — see exact_substring_excision.
     cuts = (
         fpos.join(stats, "f")
         .filter(F.col("doc_id") != F.col("owner"))
         .select("doc_id", "p")
     )
-    # r15 (guide §4.2): accounting-only span merge as one vectorized
-    # Arrow kernel (no struct arrays ever materialize — the manifest
-    # needs only n_spans/chars_removed); the interpreted fold stays as
-    # the reference path (equivalence pinned by tests)
-    if arrow_spans:
-        excise = _merge_spans_arrow(cuts, accounting_only=True)
-    else:
-        excise = cuts.groupBy("doc_id").agg(
-            F.expr(
-                f"""aggregate(
-                     array_sort(collect_list(p)),
-                     cast(array() as array<struct<s: int, e: int>>),
-                     (acc, p) -> CASE
-                       WHEN size(acc) > 0 AND p <= element_at(acc, -1).e
-                       THEN concat(slice(acc, 1, size(acc) - 1),
-                                   array(struct(element_at(acc, -1).s AS s,
-                                                greatest(element_at(acc, -1).e,
-                                                         p + {K}) AS e)))
-                       ELSE concat(acc, array(struct(p AS s, p + {K} AS e)))
-                     END)"""
-            ).alias("spans")
-        ).select(
-            "doc_id",
-            F.expr("cast(size(spans) as bigint)").alias("n_spans"),
-            F.expr("cast(aggregate(spans, 0, (a, iv) -> a + iv.e - iv.s) as bigint)").alias(
-                "chars_removed"
-            ),
-        )
+    # Accounting-only span merge: no struct arrays ever materialize — the
+    # manifest needs only n_spans/chars_removed.
+    excise = _merge_spans_arrow(cuts, accounting_only=True)
     # The family dictionary: one row per clustered-or-excised document.
     fam = (
         clustered.select(F.col("node").alias("doc_id"), "n", "canon")
@@ -3259,8 +3093,8 @@ def winnowing_family(
     )
     if broadcast_dictionary:
         fam = F.broadcast(fam)
-    # r14: range-spread the narrow probe; partition-local sort IS the
-    # doc_id order under the broadcast regime (see
+    # range-spread the narrow probe; partition-local sort IS the doc_id
+    # order under the broadcast regime (see
     # winnowing_soft_dedup_weights)
     probe = docs.select("doc_id")
     presorted = (

@@ -21,7 +21,6 @@ from pyspark.sql import functions as F
 from warcraider_spark.functions.textfn import (
     DUCK_UWS,
     fold_lower,
-    all_shingles,
     doc_fingerprint,
     md5_int,
     md5_int_sql,
@@ -29,7 +28,6 @@ from warcraider_spark.functions.textfn import (
     shingle_fingerprint,
     shingles,
     shingles_sql,
-    sorted_run_stats,
     tokens,
     unicode_tokens,
     word_count,
@@ -946,18 +944,17 @@ def q139_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted (cnt, len) pair unchanged, so no lexicographic tie-break is
     needed for determinism.
 
-    Two equivalent signal computations (the cdc_chunks precedent): the
-    default Arrow/numpy kernel — per doc, token ids from np.unique, each
-    n-gram order as a sliding_window_view over the id array viewed as
-    fixed-width void rows (one memcmp argsort), run stats off the sorted
-    windows — and the pure-Catalyst ``sorted_run_stats`` fold twin
-    (``vectorized=False``), property-tested identical. The folds are
-    honest Catalyst but ArrayAggregate is CodegenFallback (interpreted,
-    ~1 ms/doc, and an expression tree Catalyst analyzes slowly), so the
-    Arrow kernel is the shipped path: still ONE map-only corpus scan
-    with no explode and no shuffle (the oracle's nine unnest+groupBy
-    rounds show the shuffle bill both formulations avoid), only 21
+    The signals come from one fused Arrow/numpy kernel
+    (``_rep_signals_kernel``: one token-id np.unique per batch, then a
+    rank chain serving every n-gram order, run stats off the sorted
+    ranks). A Catalyst formulation needs an ArrayAggregate fold per
+    signal, which is CodegenFallback (interpreted, ~1 ms/doc, and an
+    expression tree Catalyst analyzes slowly). The kernel is ONE map-only
+    corpus scan with no explode and no shuffle (the oracle's nine
+    unnest+groupBy rounds show the shuffle bill it avoids), only 21
     integers per doc crossing Arrow, embarrassingly parallel at 100 TB.
+    tests/test_properties.py pins it against a pure-Python reference of
+    the semantics below.
 
     The synthetic corpus is single-line (no \\n), so the line/paragraph
     signals are corpus-vacuous there (like q140's stopword rule) — their
@@ -976,84 +973,6 @@ _REP_SIGNAL_FIELDS = (
     + [f"top{n}_{f}" for n in sorted(_REP_TOP_PCT) for f in ("cnt", "len")]
     + [f"dup{n}_chars" for n in sorted(_REP_DUP_PCT)]
 )
-
-
-def _rep_signals_catalyst(docs: DataFrame) -> DataFrame:
-    """Pure-Catalyst twin: every signal via one ``sorted_run_stats`` fold.
-
-    The explode(array(struct(...))) wrapper is a projection barrier:
-    without it CollapseProject inlines each fold into every output column
-    that references it, and because ArrayAggregate is CodegenFallback
-    (no subexpression elimination) the folds would be re-evaluated ~4×
-    per row — measured 26 s → 7 s at sf0.1, and plan ANALYSIS 34 s → 2 s
-    (the duplicated tree is what the analyzer was choking on)."""
-    trimmed_nonempty = lambda arr: F.filter(  # noqa: E731
-        F.transform(arr, lambda v: F.trim(v)), lambda v: v != F.lit("")
-    )
-    base = docs.select(
-        "doc_id",
-        # empty tokens dropped (the oracle's list_filter semantics, and
-        # the only sane reading of Gopher "words") — plain tokens() is
-        # Spark split(limit=-1), which KEEPS a trailing empty token on
-        # trailing whitespace and would diverge from both the oracle and
-        # the Arrow kernel on such documents (corpus-absent, but the
-        # twin property test constructs them). A zero-token doc is
-        # normalized back to [""] so all_shingles keeps the canonical
-        # G < n semantics (the whole doc as ONE gram: cnt 1, len
-        # text_chars, no dups) instead of emitting no gram at all;
-        # text_chars is unaffected (join of either is "").
-        F.when(
-            F.size(F.filter(tokens("text"), lambda v: v != F.lit(""))) == 0,
-            F.array(F.lit("")),
-        )
-        .otherwise(F.filter(tokens("text"), lambda v: v != F.lit("")))
-        .alias("toks"),
-        trimmed_nonempty(F.split(F.col("text"), "\n")).alias("ls"),
-        trimmed_nonempty(F.split(F.col("text"), "\n{2,}")).alias("ps"),
-    )
-    sum_chars = lambda arr: F.aggregate(  # noqa: E731
-        arr, F.lit(0).cast("long"), lambda a, v: a + F.length(v).cast("long")
-    )
-    stats = base.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                F.struct(
-                    F.length(F.array_join("toks", " ")).cast("long").alias("text_chars"),
-                    F.size("ls").cast("long").alias("n_lines"),
-                    sum_chars(F.col("ls")).alias("line_chars"),
-                    F.size("ps").cast("long").alias("n_paras"),
-                    sum_chars(F.col("ps")).alias("para_chars"),
-                    sorted_run_stats(F.array_sort("ls")).alias("lst"),
-                    sorted_run_stats(F.array_sort("ps")).alias("pst"),
-                    *[
-                        sorted_run_stats(F.array_sort(all_shingles(F.col("toks"), n))).alias(
-                            f"g{n}"
-                        )
-                        for n in sorted(_REP_TOP_PCT | _REP_DUP_PCT)
-                    ],
-                )
-            )
-        ).alias("S"),
-    )
-    return stats.select(
-        "doc_id",
-        F.col("S.text_chars").alias("text_chars"),
-        F.col("S.n_lines").alias("n_lines"),
-        F.col("S.line_chars").alias("line_chars"),
-        F.col("S.n_paras").alias("n_paras"),
-        F.col("S.para_chars").alias("para_chars"),
-        F.col("S.lst.dup_n").alias("dup_lines"),
-        F.col("S.lst.dup_chars").alias("dup_line_chars"),
-        F.col("S.pst.dup_n").alias("dup_paras"),
-        F.col("S.pst.dup_chars").alias("dup_para_chars"),
-        *[
-            F.col(f"S.g{n}.top_{f}").alias(f"top{n}_{f}")
-            for n in sorted(_REP_TOP_PCT)
-            for f in ("cnt", "len")
-        ],
-        *[F.col(f"S.g{n}.dup_chars").alias(f"dup{n}_chars") for n in sorted(_REP_DUP_PCT)],
-    )
 
 
 def _rep_signals_kernel(s):
@@ -1075,9 +994,9 @@ def _rep_signals_kernel(s):
     which per-doc top/dup stats follow via maximum/add.reduceat as
     before. Gram char lengths come from a global cumsum of token
     lengths (+1 per joining space), so no gram string is ever
-    materialized. Matches the Catalyst twin exactly (property-tested),
-    including the short-doc path (G < n -> the whole doc as one gram)
-    and the shared tokenization: ASCII \\s splits, EMPTY TOKENS
+    materialized. Matches the pure-Python reference in
+    tests/test_properties.py exactly, including the short-doc path
+    (G < n -> the whole doc as one gram) and the shared tokenization: ASCII \\s splits, EMPTY TOKENS
     DROPPED (the oracle's list_filter semantics — Gopher words are
     non-empty), trim strips only spaces."""
     import re
@@ -1220,26 +1139,22 @@ def _rep_signals_arrow(docs: DataFrame) -> DataFrame:
     return sig.select("doc_id", *[F.col(f"S.{f}").alias(f) for f in _REP_SIGNAL_FIELDS])
 
 
-def gopher_repetition_table(docs: DataFrame, *, vectorized: bool = True) -> DataFrame:
+def gopher_repetition_table(docs: DataFrame) -> DataFrame:
     """q139's signal computation over an arbitrary (doc_id, text) frame —
     factored so tests can drive the corpus-vacuous line/paragraph signals
-    both ways on constructed multi-line documents, and so the Arrow
-    kernel and the Catalyst fold twin (``vectorized=False``) share the
-    verdict construction below (thresholds live in exactly one place).
+    both ways on constructed multi-line documents.
 
-    r14: input is range-presorted on doc_id and the presentation sort is
-    partition-local (see lineage.range_presort). The old trailing
-    ``orderBy`` range-sampled — i.e. RE-RAN — the entire signal kernel,
-    and the single-row-group local scan ran it on ONE task: measured
-    med 2.49 s → 0.65 s at sf0.1 for the arrow path. At 100 TB the
+    Input is range-presorted on doc_id and the presentation sort is
+    partition-local (see lineage.range_presort). A trailing global
+    ``orderBy`` would range-sample — i.e. RE-RUN — the entire signal
+    kernel, and the single-row-group local scan would run it on ONE
+    task (med 2.49 s vs 0.65 s at sf0.1). At 100 TB the
     range exchange moves the raw text once; that is the floor for a
     globally doc_id-ordered corpus-sized output (the alternative —
     kernel map-side + lineage cut + signal-only sort — trades it for
     checkpoint I/O and is the right shape only when the output order
     can be relaxed)."""
-    sig = (_rep_signals_arrow if vectorized else _rep_signals_catalyst)(
-        range_presort(docs, "doc_id")
-    )
+    sig = _rep_signals_arrow(range_presort(docs, "doc_id"))
     verdicts = [
         (100 * F.col("dup_lines") <= 30 * F.col("n_lines")).alias("dup_line_ok"),
         (100 * F.col("dup_line_chars") <= 20 * F.col("line_chars")).alias("dup_line_char_ok"),
@@ -2281,19 +2196,17 @@ def q023_sparse_dot_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cap is part of the certified semantics, not a silent
     approximation.
 
-    Plan: one shuffle builds (doc, term, tf); df rolls up on the term
-    prefix; the query-side weight table (|queries| x terms, KB-scale)
-    BROADCASTS onto the corpus weights — the corpus shuffles once more on
+    Plan: tf is counted map-side inside each document's row
+    (_sdot_tf_arrow); df rolls up with one term-keyed shuffle; the
+    query-side weight table (|queries| x terms, KB-scale) BROADCASTS onto the corpus weights — the corpus shuffles once more on
     (qid, doc_id) for the dot aggregation and once per-query-partition
     for the windowed top-k. Candidates are bounded by posting-list
     intersections of df-capped terms, never |docs| x |queries|.
 
-    r10 (VERDICT r9 #6): the shared weight table ``w`` is materialized
-    ONCE via cut_lineage before fanning out to the corpus and query
-    sides. Previously the static plan duplicated the tok lineage 4x
-    (10 exchanges) and only an AQE-runtime stage-reuse audit (REST
-    stage API SKIPPED counts) showed the real ~4; now the static plan
-    IS the executed plan — <=4 shuffle exchanges, asserted by plan-CI
+    The shared weight table ``w`` is materialized ONCE via cut_lineage
+    before fanning out to the corpus and query sides, so the static plan
+    IS the executed plan (an uncut plan prints the tok lineage 4x) —
+    <=4 shuffle exchanges, asserted by plan-CI
     (test_sparse_dot_single_materialization). cache() would be wrong
     here: Spark's CacheManager matches canonicalized plans across
     invocations, so a second bench rep would read cached blocks
@@ -2310,14 +2223,20 @@ def q023_sparse_dot_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sdot_tf_arrow(bg: DataFrame) -> DataFrame:
     """(doc_id, ts bigram-array) → (doc_id, term, tf) rows with tf
-    saturated at SDOT_TF_CAP, as ONE vectorized Arrow pass (r15, VERDICT
-    r14 #4 / guide §4.2): the per-document term counting happens INSIDE
-    the document's row — map-side, exact — so the (doc_id, term) shuffle
-    the explode+groupBy formulation paid disappears and the w-build's
-    only data exchange is the term-keyed df aggregation. The bigram
-    STRINGS are still built by the certified JVM expression (_bigrams);
-    Python only counts them (hash groupby over the flattened batch), so
-    tokenization semantics cannot drift."""
+    saturated at SDOT_TF_CAP, as ONE vectorized Arrow pass: the
+    per-document term counting happens INSIDE the document's row —
+    map-side, exact — so there is no (doc_id, term) shuffle and the
+    w-build's only data exchange is the term-keyed df aggregation. The
+    bigram STRINGS are still built by the certified JVM expression
+    (_bigrams); Python only counts them (hash groupby over the flattened
+    batch), so tokenization semantics cannot drift.
+
+    Precondition: ONE input row per doc_id. Counting is per Arrow batch,
+    so a doc_id split over two rows that land in different batches or
+    partitions would emit two partial (doc_id, term) counts instead of
+    one. Every caller feeds a documents table keyed by doc_id.
+    tests/test_properties.py pins the kernel against a pure-Python term
+    counter with two-record Arrow batches."""
     cap = SDOT_TF_CAP
 
     def gen(batches):
@@ -2334,7 +2253,7 @@ def _sdot_tf_arrow(bg: DataFrame) -> DataFrame:
             flat = pc.list_flatten(ts)
             g = (
                 pd.DataFrame({"doc_id": d, "term": flat.to_pandas()})
-                .groupby(["doc_id", "term"], sort=False)
+                .groupby(["doc_id", "term"], sort=False, dropna=False)
                 .size()
                 .reset_index(name="tf")
             )
@@ -2352,30 +2271,22 @@ def _sdot_tf_arrow(bg: DataFrame) -> DataFrame:
 
 
 def sparse_dot_topk_plan(
-    docs: DataFrame, n_docs: int, query_pred=None, arrow_tf: bool = True
+    docs: DataFrame, n_docs: int, query_pred=None
 ) -> DataFrame:
-    """The q023 plan over an arbitrary documents DataFrame. ``query_pred``
+    """The q023 plan over an arbitrary documents DataFrame with ONE row
+    per doc_id (the _sdot_tf_arrow precondition). ``query_pred``
     optionally restricts the query side further (tools/scale_bench.py pins
     queries to replica 0 so the §10 curve measures fixed-workload corpus
     growth, not k-squared by construction).
 
-    arrow_tf (r15): per-doc term counts come from the map-side Arrow
-    run-length kernel (_sdot_tf_arrow) — one data exchange on the w-build
-    — instead of explode + (doc_id, term) groupBy (two). The kernel
+    Per-doc term counts come from the map-side Arrow kernel
+    (_sdot_tf_arrow) — one data exchange on the w-build. The kernel
     output is materialized once (cut_lineage) because its two consumers
     (the df aggregation and the w join) share no exchange AQE could
-    reuse; the explode path keeps its exchange-reuse shape unchanged."""
+    reuse."""
     from pyspark.sql import Window
 
-    if arrow_tf:
-        tok = _sdot_tf_arrow(_bigrams(docs)).transform(cut_lineage)
-    else:
-        tok = (
-            _bigrams(docs)
-            .select("doc_id", F.explode("ts").alias("term"))
-            .groupBy("doc_id", "term")
-            .agg(F.least(F.count(F.lit(1)), F.lit(SDOT_TF_CAP)).cast("bigint").alias("tf"))
-        )
+    tok = _sdot_tf_arrow(_bigrams(docs)).transform(cut_lineage)
     dfs = tok.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     keep = dfs.filter(F.col("df") * SDOT_DF_DEN <= F.lit(n_docs * SDOT_DF_NUM))
     w = (
