@@ -828,38 +828,40 @@ def test_mixture_pipeline_runtime_stage_reuse(spark):
 
 
 def test_winnowing_selector_fused_and_pruned(spark):
-    """q069_winnowing_dup_pairs (r12; fold default r13): the winnowing
-    selector must stay ONE JVM higher-order Generate per scan (no
-    Python, no UDF), the parquet scan must read only doc_id+text with
-    the length filter's null guard pushed, the fingerprint stream must
-    shuffle on f (hash partitioning) with the xxhash64-FOLDED 8-byte key
-    (VERDICT r12 #3 — the string form never leaves the map side), and
-    there must be no cartesian product — the pair join is keyed on the
-    fingerprint. The registry plan also carries exactly ONE round-robin
-    spread of the narrow input rows (ADVICE r12: the spread is an
-    explicit caller parameter, not an RDD probe — the registry query
-    passes defaultParallelism because the testdata is a byte-dense
-    single-split file; at-scale callers pass None and the exchange
-    disappears, pinned in tests/test_winnowing_fold.py)."""
+    """q069_winnowing_dup_pairs: the winnowing selector must stay ONE
+    vectorized Arrow kernel (MapInArrow) per scan — no row-at-a-time
+    Python, no UDF — the parquet scan must read only doc_id+text with
+    the length filter's null guard pushed, the kernel's selected k-grams
+    must be hashed by the JVM's xxhash64 into the 8-byte key right above
+    it (the string form never leaves the map side), the fingerprint
+    stream must shuffle on f (hash partitioning), and there must be no
+    cartesian product — the pair join is keyed on the fingerprint. The
+    registry plan also carries exactly ONE round-robin spread of the
+    narrow input rows (the spread is an explicit caller parameter, not
+    an RDD probe — the registry query passes defaultParallelism because
+    the testdata is a byte-dense single-split file; at-scale callers
+    pass None and the exchange disappears, pinned in
+    tests/test_winnowing_fold.py)."""
     df = all_specs()["q069_winnowing_dup_pairs"].builder(spark, SF_CORRECT)
     plan = plan_of(df)
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-    # selector fused: explode(transform(array_distinct(transform(...)),
-    # xxhash64)) in one Generate — selection by string min, fold after
-    assert "array_distinct(transform(" in plan
-    assert "xxhash64" in plan
+    # one selector kernel per scan: the MapInArrow emitting the gram column
+    selectors = [
+        l for l in plan.splitlines() if l.startswith("Arguments: gen(") and "gram#" in l
+    ]
+    scans = [l for l in plan.splitlines() if l.startswith("(") and ") Scan parquet" in l]
+    assert len(selectors) == len(scans) == 1
+    # selection in the kernel, the fold in the JVM right above it
+    assert "xxhash64(gram#" in plan
     # scan pruned to the two needed columns
     scan = plan[plan.index("Scan parquet") :]
     read = next(l for l in scan.splitlines() if l.startswith("ReadSchema"))
     assert "doc_id" in read and "text" in read
     assert "lang" not in read and "n_chars" not in read
-    # the fingerprint stream is hash-partitioned on f for the df count
+    # the fingerprint stream is hash-partitioned on f for the pair kernel
     assert "hashpartitioning(f#" in plan
     # pair aggregation is two-phase (map-side combine)
     assert "partial_count" in plan
-    # the explicit spread: the round-robin exchange of the input rows is
-    # present (the static tree re-declares the fingerprint lineage per
-    # consumer so the node prints more than once; AQE reuses it at
-    # runtime) and carries the caller's explicit target
-    assert "RoundRobinPartitioning" in plan
+    # the explicit spread: one round-robin exchange of the input rows
+    assert plan.count("RoundRobinPartitioning(") == 1

@@ -14,7 +14,7 @@ from warcraider_spark.operators.dedup import (
     WINNOW_DF_CAP,
     WINNOW_K,
     WINNOW_W,
-    _winnow_fpos,
+    _winnow_select,
     exact_substring_excision,
 )
 
@@ -149,7 +149,7 @@ def test_excision_plan_shape(spark):
     (MapInArrow — no row-at-a-time Python), the kept_text reconstruction
     stays a JVM aggregate() fold, the selector shuffles xxhash64-folded
     keys, and the selector stream is materialized once (cut_lineage →
-    ExistingRDD) so the grams pass never runs per consumer."""
+    ExistingRDD) so the selector kernel never runs per consumer."""
     rng = random.Random(97)
     shared = _rand_text(rng, 60)
     docs = _docs(spark, [(1, shared + "a"), (2, shared + "b")])
@@ -162,8 +162,8 @@ def test_excision_plan_shape(spark):
     assert "aggregate(" in plan  # the JVM kept_text fold
     assert "ExistingRDD" in phys  # the shared selector materialization
     # the materialized selector stream carries the xxhash64-folded key
-    sel = _winnow_fpos(docs)
-    assert "xxhash64" in sel._jdf.queryExecution().toString()
+    sel = _winnow_select(docs)
+    assert "xxhash64(gram" in sel._jdf.queryExecution().toString()
     assert dict(sel.dtypes)["f"] == "bigint"
 
 

@@ -1,7 +1,8 @@
-"""q069_winnowing_dup_pairs (r12): winnowing substring-duplicate
+"""q069_winnowing_dup_pairs: winnowing substring-duplicate
 candidates — selector semantics pinned against an independent Python
-recompute, the >= k+w-1 detection guarantee, the df skew cap, and the
-n_shared threshold, all on hand-built documents."""
+recompute (the Arrow selector kernel directly and through Spark), the
+>= k+w-1 detection guarantee, the df skew cap, and the n_shared
+threshold, all on hand-built documents."""
 
 from __future__ import annotations
 
@@ -12,12 +13,25 @@ import string
 from warcraider_spark.operators.dedup import WINNOW_DF_CAP, WINNOW_K, WINNOW_W
 
 
-def _py_winnow(text: str, k: int = WINNOW_K, w: int = WINNOW_W) -> set[str]:
-    """Independent reference: distinct per-window minimum k-grams."""
-    if len(text) < k + w - 1:
+def _py_winnow_pos(
+    text: str | None, k: int = WINNOW_K, w: int = WINNOW_W
+) -> set[tuple[str, int]]:
+    """Independent reference: the (k-gram, 1-based position) of each
+    window's FIRST minimum k-gram (Python str order is code-point order)."""
+    if text is None or len(text) < k + w - 1:
         return set()
     grams = [text[i : i + k] for i in range(len(text) - k + 1)]
-    return {min(grams[j : j + w]) for j in range(len(grams) - w + 1)}
+    out = set()
+    for j in range(len(grams) - w + 1):
+        win = grams[j : j + w]
+        p = j + win.index(min(win))
+        out.add((grams[p], p + 1))
+    return out
+
+
+def _py_winnow(text: str, k: int = WINNOW_K, w: int = WINNOW_W) -> set[str]:
+    """Independent reference: distinct per-window minimum k-grams."""
+    return {g for g, _ in _py_winnow_pos(text, k, w)}
 
 
 def _py_pairs(docs: list[tuple[int, str]]) -> dict[tuple[int, int], int]:
@@ -77,7 +91,7 @@ def test_winnowing_guarantee_and_threshold(spark, tmp_path):
 
 
 def test_winnowing_selector_matches_python(spark, tmp_path):
-    """The Spark-side higher-order-expression selector emits exactly the
+    """The selector emits exactly the
     Python reference's distinct window minima (pinned via a self-pair:
     duplicate a document and the pair's n_shared is its fp-set size,
     when every fingerprint stays under the df cap)."""
@@ -151,3 +165,143 @@ def test_arrow_pair_kernel_batch_spanning_and_cap(spark):
         [(a, b) for a in range(6) for b in range(a + 1, 6)] + [(1, 5)]
     )
     assert sorted(pairs) == want
+
+
+# ---------------------------------------------------------------------------
+# The selector kernel against the positions reference
+# ---------------------------------------------------------------------------
+
+# astral characters (4 UTF-8 bytes), a combining mark, U+FFFF and U+10FFFD
+# next to 1-, 2- and 3-byte characters: byte order must equal code-point
+# order and every character must count as one position
+_UNICODE_ALPHABET = list("ab ") + ["é", "ж", "\u0301", "\uffff", "😀", "𝄞", "\U0010fffd"]
+
+
+def _kernel_rows(rows: list[tuple[int, str | None]]) -> dict[int, set[tuple[str, int]]]:
+    import pyarrow as pa
+
+    from warcraider_spark.operators.dedup import _winnow_select_batch
+
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array([d for d, _ in rows], pa.int64()),
+            pa.array([t for _, t in rows], pa.string()),
+        ],
+        ["doc_id", "text"],
+    )
+    got: dict[int, set[tuple[str, int]]] = {}
+    for out in _winnow_select_batch(batch):
+        assert out.schema.names == ["doc_id", "gram", "p"]
+        cols = [out.column(i).to_pylist() for i in range(3)]
+        for d, g, p in zip(*cols):
+            got.setdefault(d, set()).add((g, p))
+    return got
+
+
+def _unicode_corpus(seed: int, n_docs: int) -> list[tuple[int, str | None]]:
+    rng = random.Random(seed)
+    rows: list[tuple[int, str | None]] = []
+    for d in range(n_docs):
+        n = rng.choice([0, 5, 26, 27, 28, rng.randint(20, 300)])
+        alpha = rng.sample(_UNICODE_ALPHABET, rng.randint(1, len(_UNICODE_ALPHABET)))
+        text = "".join(rng.choice(alpha) for _ in range(n))
+        rows.append((d, None if d % 11 == 3 else text))
+    return rows
+
+
+def test_selector_kernel_matches_python_on_unicode():
+    """Random Unicode corpora with small alphabets (so equal k-grams, and
+    equal minima inside one window, are common), lengths at the K+W-1
+    threshold and null text, many documents per batch."""
+    for seed in range(6):
+        rows = _unicode_corpus(seed, 40)
+        got = _kernel_rows(rows)
+        for d, t in rows:
+            assert got.get(d, set()) == _py_winnow_pos(t), (seed, d, t)
+
+
+def test_selector_kernel_edges():
+    k, w = WINNOW_K, WINNOW_W
+    # one letter repeated: every window's minimum is tied across all W
+    # grams, so each window selects its FIRST position
+    flat = "a" * 40
+    assert _kernel_rows([(1, flat)])[1] == {
+        ("a" * k, p) for p in range(1, 40 - k - w + 3)
+    } == _py_winnow_pos(flat)
+    # a repeated minimum inside one window, later grams larger: the first wins
+    text = "b" * (k - 1) + "a" + "b" * (k - 1) + "a" + "z" * 10
+    assert _kernel_rows([(2, text)])[2] == _py_winnow_pos(text)
+    # the K+W-1 threshold: 26 chars select nothing, 27 one window, 28 two
+    got = _kernel_rows([(26, "q" * 26), (27, "x" * 27), (28, "ab" * 14), (0, None)])
+    assert 26 not in got and 0 not in got
+    assert got[27] == {("x" * k, 1)}
+    assert got[28] == _py_winnow_pos("ab" * 14)
+
+
+def test_selector_kernel_runs_split_a_batch(monkeypatch):
+    """A batch is selected in runs of documents bounded in bytes; force a
+    run per document or two and compare with one run per batch."""
+    from warcraider_spark.operators import dedup
+
+    rows = _unicode_corpus(7, 30)
+    whole = _kernel_rows(rows)
+    monkeypatch.setattr(dedup, "_WINNOW_RUN_BYTES", 64)
+    assert _kernel_rows(rows) == whole
+    assert whole == {d: s for d, t in rows if (s := _py_winnow_pos(t))}
+
+
+def test_selector_kernel_memory_is_linear():
+    """One 1M-character document (ASCII plus 2-, 3- and 4-byte characters)
+    in-process: the kernel's peak traced allocation stays <= 160 B/char."""
+    import tracemalloc
+
+    import pyarrow as pa
+
+    from warcraider_spark.operators.dedup import _winnow_select_batch
+
+    rng = random.Random(5)
+    n = 1_000_000
+    text = "".join(rng.choices(string.ascii_lowercase + " éж😀", k=n))
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array([1], pa.int64()), pa.array([text], pa.string())], ["doc_id", "text"]
+    )
+    del text
+    tracemalloc.start()
+    try:
+        rows = sum(out.num_rows for out in _winnow_select_batch(batch))
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert rows > n // 10
+    assert peak / n <= 160, f"{peak / n:.0f} B/char"
+
+
+def test_selector_spark_matches_python_one_row_batches(spark):
+    """Through Spark: multi-document partitions, then one-row Arrow batches;
+    the JVM-side xxhash64 of each emitted gram equals xxhash64 of the
+    same substring of the text."""
+    from pyspark.sql import functions as F
+
+    from warcraider_spark.operators.dedup import _winnow_select
+
+    rows = _unicode_corpus(3, 24)
+    docs = spark.createDataFrame(rows, "doc_id long, text string").coalesce(2)
+    want = {(d, p) for d, t in rows for _, p in _py_winnow_pos(t)}
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    try:
+        for per_batch in (old, "1"):
+            spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", per_batch)
+            sel = _winnow_select(docs)
+            assert dict(sel.dtypes) == {"doc_id": "bigint", "f": "bigint", "p": "int"}
+            check = sel.join(docs, "doc_id").select(
+                "doc_id",
+                "p",
+                (F.col("f") == F.xxhash64(F.expr(f"substring(text, p, {WINNOW_K})"))).alias(
+                    "same"
+                ),
+            )
+            got = [(r.doc_id, r.p, r.same) for r in check.collect()]
+            assert all(same for _, _, same in got)
+            assert len(got) == len(want) and {(d, p) for d, p, _ in got} == want
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)

@@ -13,7 +13,7 @@ import random
 import string
 
 from tests.test_winnowing import _py_pairs
-from warcraider_spark.operators.dedup import _winnow_fp, winnowing_pairs
+from warcraider_spark.operators.dedup import _winnow_select, winnowing_pairs
 
 
 def _rand_text(rng: random.Random, n: int) -> str:
@@ -52,14 +52,14 @@ def test_fold_equals_string_on_random_corpora(spark):
 
 
 def test_fold_shuffles_bigint_not_string(spark):
-    """The selector lives in _winnow_fp (shared by every consumer), so
-    the fold/schema pins live on it directly."""
+    """The selector lives in _winnow_select (shared by every consumer),
+    so the fold/schema pins live on it directly: the kernel's gram
+    strings are hashed by the JVM's xxhash64 right above it."""
     docs = spark.createDataFrame(_corpus(23), "doc_id long, text string")
-    plan = _winnow_fp(docs)._jdf.queryExecution().toString()
-    # the exploded fingerprint column is the xxhash64 bigint
-    assert "xxhash64" in plan
-    # schema-level pin: the explode output type
-    assert dict(_winnow_fp(docs).dtypes)["f"] == "bigint"
+    sel = _winnow_select(docs)
+    plan = sel._jdf.queryExecution().toString()
+    assert "xxhash64(gram" in plan and "MapInArrow" in plan
+    assert dict(sel.dtypes) == {"doc_id": "bigint", "f": "bigint", "p": "int"}
 
 
 def test_spread_is_explicit_not_probed(spark):
@@ -68,13 +68,10 @@ def test_spread_is_explicit_not_probed(spark):
     spread_partitions=None there is no repartition of the input; with an
     explicit target there is exactly one round-robin exchange."""
     docs = spark.createDataFrame(_corpus(5), "doc_id long, text string")
-    plan_none = _winnow_fp(docs)._jdf.queryExecution().toString()
+    plan_none = winnowing_pairs(docs)._jdf.queryExecution().toString()
     assert "RoundRobinPartitioning" not in plan_none.split("== Physical Plan ==")[-1]
     plan_spread = (
-        _winnow_fp(docs, spread_partitions=8)._jdf.queryExecution().toString()
+        winnowing_pairs(docs, spread_partitions=8)._jdf.queryExecution().toString()
     )
     phys = plan_spread.split("== Physical Plan ==")[-1]
-    # The pin is the exchange's presence and explicit target on the
-    # shared selector; winnowing_pairs re-declares the lineage per
-    # consumer in the printed tree and AQE reuses it at runtime.
-    assert "RoundRobinPartitioning(8)" in phys
+    assert phys.count("RoundRobinPartitioning(8)") == 1

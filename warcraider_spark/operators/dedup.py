@@ -20,9 +20,10 @@ Scale design (the point of these operators at 100 TB):
   LSH-bucketed variant is q105 in similarity.py).
 
 No row-at-a-time Python UDFs anywhere in this module. The Python-boundary
-crossings are vectorized Arrow kernels over narrow integer streams: the CDC
-cut positions (_cdc_cuts_arrow_udf), the winnowing pair generator
-(_winnow_pairs_arrow) and the excision span merge (_merge_spans_arrow).
+crossings are vectorized Arrow kernels: the CDC cut positions
+(_cdc_cuts_arrow_udf), the winnowing selector (_winnow_select), the
+winnowing pair generator (_winnow_pairs_arrow) and the excision span merge
+(_merge_spans_arrow).
 """
 
 from __future__ import annotations
@@ -2011,75 +2012,194 @@ WINNOW_K = 20
 WINNOW_W = 8
 WINNOW_DF_CAP = 64
 
-# The selector materializes the k-gram array ONCE per document and takes
-# window minima over array slices — one substring allocation per position
-# instead of W=8 (a nested transform would re-build every window's
-# substrings from scratch). grams[j+d] == substring(text, j+d, K), so the
-# min over slice(grams, j, W) is the window's minimum k-gram. The two-step
-# Project (grams column, then the min transform referencing it twice) is
-# what keeps Catalyst from inlining the grams expression into the lambda
-# body — the same CollapseProject barrier _WINNOW_GP relies on.
-_WINNOW_GRAMS = (
-    f"transform(sequence(1, length(text)-{WINNOW_K - 1}), "
-    f"i -> substring(text, i, {WINNOW_K}))"
-)
-_WINNOW_MINS = (
-    f"array_distinct(transform(sequence(1, size(grams)-{WINNOW_W - 1}), "
-    f"j -> array_min(slice(grams, j, {WINNOW_W}))))"
-)
+# Documents are selected in runs of at most this many UTF-8 bytes (a larger
+# document is a run of its own): the kernel's working set is O(n) in the
+# run's characters, so this bounds it per batch whatever the batch size.
+_WINNOW_RUN_BYTES = 1 << 20
 
 
-def _winnow_fp(
-    docs: DataFrame,
-    *,
-    spread_partitions: int | None = None,
-) -> DataFrame:
-    """The winnowing selector: one (doc_id, f) row per DISTINCT selected
-    fingerprint per document (array_distinct runs per doc, before the
-    explode), f being the post-selection xxhash64 bigint of the selected
-    k-gram (8-byte shuffle key). See winnowing_pairs for the spread
-    rationale."""
-    base = docs.filter(F.length("text") >= WINNOW_K + WINNOW_W - 1)
-    if spread_partitions is not None and spread_partitions > 1:
-        base = base.repartition(spread_partitions)
-    # distinct-then-fold preserves the per-doc distinct gram set; the outer
-    # distinct on the 8-byte hashes is O(n) and guards the df count against
-    # the (~1e-8) in-doc collision duplicating a (doc_id, f) row.
-    sel = f"array_distinct(transform({_WINNOW_MINS}, s -> xxhash64(s)))"
-    return base.select("doc_id", F.expr(_WINNOW_GRAMS).alias("grams")).select(
-        "doc_id", F.explode(F.expr(sel)).alias("f")
+def _dense_rank(key, bound: int):
+    """Order-preserving dense ranks 0..u-1 of a non-negative integer key
+    array whose values are < bound, and u. A lookup table when the key
+    range is small (no sort), one argsort otherwise."""
+    import numpy as np
+
+    if bound <= max(1 << 16, key.size):
+        present = np.zeros(bound, dtype=bool)
+        present[key] = True
+        table = np.cumsum(present, dtype=np.int64) - 1
+        return table[key], int(table[-1]) + 1
+    order = np.argsort(key)
+    sk = key[order]
+    new = np.empty(sk.size, dtype=bool)
+    new[0] = True
+    np.not_equal(sk[1:], sk[:-1], out=new[1:])
+    del sk
+    rank = np.empty(key.size, dtype=np.int64)
+    rank[order] = np.cumsum(new, dtype=np.int64) - 1
+    return rank, int(rank[order[-1]]) + 1
+
+
+def _winnow_run(b, offs, valid):
+    """Winnowing selection over one run of documents.
+
+    b is the run's UTF-8 bytes, offs its documents' byte offsets (len d+1,
+    offs[0] == 0), valid their non-null mask. Returns (doc, gram_offsets,
+    gram_bytes, p): the run-local document index, the selected k-grams as
+    Arrow string buffers and their 1-based character positions, one entry
+    per distinct selected position, ascending within each document.
+
+    Characters are code points; each one's key is its UTF-8 bytes packed
+    big-endian, so key order is code-point order, which is also the byte
+    order Spark's string comparison uses. The k-grams are ranked by
+    prefix doubling over the concatenated run: ranks of 2-, 4-, 8- and
+    16-grams, each the dense rank of a pair of the previous level's
+    ranks, then the 20-gram key (16-gram rank, 4-gram rank). Grams and
+    windows that cross a document boundary get keys too but are never
+    read. Every window's first minimum comes from a sliding argmin over
+    the keys, computed by three doublings.
+    """
+    import numpy as np
+
+    K, W = WINNOW_K, WINNOW_W
+    nb = b.size
+    lead = (b & 0xC0) != 0x80
+    if lead.all():
+        cpos = None
+        cstart = offs
+        nch = nb
+        r, bound = b, 256
+    else:
+        cpos = np.flatnonzero(lead)
+        nch = cpos.size
+        cstart = np.searchsorted(cpos, offs)
+        clen = np.diff(np.append(cpos, nb))
+        pad = np.concatenate((b, np.zeros(3, dtype=np.uint8)))
+        key = pad[cpos].astype(np.uint32) << 24
+        for t in (1, 2, 3):
+            key |= np.where(clen > t, pad[cpos + t].astype(np.uint32) << (24 - 8 * t), 0)
+        del pad, clen
+        r, bound = _dense_rank(key, 1 << 32)
+        del key
+    del lead
+    nwin = np.diff(cstart) - (K + W - 2)
+    has = valid & (nwin > 0)
+    nwin = nwin[has]
+    if not nwin.size:
+        return None
+    # ranks of the 2-, 4-, 8- and 16-grams; the 4-gram ranks are kept for
+    # the final 16 + 4 step
+    for span in (1, 2, 4, 8):
+        pair = r[:-span].astype(np.int64, copy=False) * bound + r[span:]
+        r, bound = _dense_rank(pair, bound * bound)
+        del pair
+        if span == 2:
+            r4, bound4 = r, bound
+    g = nch - K + 1
+    key = r[:g] * bound4 + r4[K - 4 : K - 4 + g]
+    del r, r4
+    # first minimum of each window of W grams by three doublings of a
+    # sliding argmin; the right half wins only when strictly smaller
+    arg = np.arange(g, dtype=np.int64)
+    for half in (1, 2, 4):
+        left, right = arg[:-half], arg[half:]
+        arg = np.where(key[right] < key[left], right, left)
+    del key, left, right
+    total = int(nwin.sum())
+    first = np.cumsum(nwin) - nwin
+    win = np.repeat(cstart[:-1][has] - first, nwin) + np.arange(total, dtype=np.int64)
+    pos = arg[win]
+    del arg, win
+    keep = np.empty(total, dtype=bool)
+    keep[0] = True
+    np.not_equal(pos[1:], pos[:-1], out=keep[1:])
+    pos = pos[keep]
+    doc = np.repeat(np.flatnonzero(has), nwin)[keep]
+    del keep
+    p = (pos - cstart[doc] + 1).astype(np.int32)
+    if cpos is None:
+        bs = pos
+        lens = np.full(pos.size, K, dtype=np.int64)
+        src = b
+    else:
+        cend = np.append(cpos, nb)
+        bs = cpos[pos]
+        lens = cend[pos + K] - bs
+        src = np.concatenate((b, np.zeros(4 * K, dtype=np.uint8)))
+    width = int(lens.max())
+    rows = np.lib.stride_tricks.sliding_window_view(src, width)[bs]
+    data = rows.ravel() if cpos is None else rows[np.arange(width) < lens[:, None]]
+    gram_offs = np.zeros(pos.size + 1, dtype=np.int32)
+    np.cumsum(lens, out=gram_offs[1:])
+    return doc, gram_offs, data, p
+
+
+def _winnow_select_batch(batch):
+    """The winnowing selector over one Arrow batch of (doc_id, text):
+    yields (doc_id, gram, p) batches, one row per distinct selected
+    position of each document — the first position of each window of W
+    consecutive k-grams' minimum k-gram (K code points, compared in code
+    point order). Null text and documents shorter than K + W - 1
+    characters select nothing."""
+    import numpy as np
+    import pyarrow as pa
+
+    n = batch.num_rows
+    if n == 0:
+        return
+    ids = np.asarray(batch.column(0))
+    text = batch.column(1)
+    off_t = np.int64 if pa.types.is_large_string(text.type) else np.int32
+    _, ob, db = text.buffers()
+    offs = np.frombuffer(ob, dtype=off_t)[text.offset : text.offset + n + 1].astype(np.int64)
+    data = np.frombuffer(db, dtype=np.uint8) if db is not None else np.zeros(0, np.uint8)
+    valid = (
+        np.ones(n, dtype=bool)
+        if text.null_count == 0
+        else text.is_valid().to_numpy(zero_copy_only=False)
     )
+    i0 = 0
+    while i0 < n:
+        i1 = max(int(np.searchsorted(offs, offs[i0] + _WINNOW_RUN_BYTES, "right")) - 1, i0 + 1)
+        sel = _winnow_run(data[offs[i0] : offs[i1]], offs[i0 : i1 + 1] - offs[i0], valid[i0:i1])
+        if sel is not None:
+            doc, gram_offs, gram_bytes, p = sel
+            grams = pa.Array.from_buffers(
+                pa.string(),
+                p.size,
+                [None, pa.py_buffer(gram_offs), pa.py_buffer(gram_bytes)],
+            )
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(ids[i0 + doc], pa.int64()), grams, pa.array(p, pa.int32())],
+                ["doc_id", "gram", "p"],
+            )
+        i0 = i1
 
 
-# POSITION-annotated selector via ONE struct argmin. struct(gram, pos)
-# ordering compares the gram first and the position second, so array_min
-# over a window of structs IS the first occurrence of the window's minimum
-# k-gram — the position the oracle's list_min + list_position selects —
-# with one slice materialization and W-1 struct compares per window
-# instead of two slices and up to 2W-1 string compares, and no element_at
-# re-lookup to fetch the gram afterwards (~36% faster on the isolated
-# (doc_id, f, p) stream, OPTIMIZATION_r14.md §B). The two references to gp
-# (size + slice) keep CollapseProject from inlining the struct array into
-# the lambda.
-_WINNOW_GP = (
-    f"transform(sequence(1, length(text)-{WINNOW_K - 1}), "
-    f"i -> struct(substring(text, i, {WINNOW_K}) AS f, cast(i AS int) AS p))"
-)
-_WINNOW_FPOS = (
-    f"array_distinct(transform(sequence(1, size(gp)-{WINNOW_W - 1}), "
-    f"j -> array_min(slice(gp, j, {WINNOW_W}))))"
-)
+def _winnow_select(base: DataFrame) -> DataFrame:
+    """The winnowing selector over a pre-filtered (and optionally
+    pre-spread) (doc_id, text) frame: one (doc_id, f, p) row per distinct
+    selected position, p the 1-based character position and f the
+    xxhash64 bigint of the selected k-gram (hashed in the JVM, so the key
+    equals Spark's xxhash64 of the same substring). p determines f, so
+    rows are unique on (doc_id, p); f can repeat within a document.
 
+    Selection is one vectorized Arrow kernel (_winnow_select_batch,
+    O(n) memory per document); only the selected k-grams, ~2/(W+1) of
+    them, cross back into the JVM."""
+    from warcraider_spark.dist import ensure_package_on_executors
 
-def _winnow_fpos(base: DataFrame) -> DataFrame:
-    """Position-annotated winnowing selector over a pre-filtered (and
-    optionally pre-spread) frame: one (doc_id, f, p) row per selected
-    position, f being the post-selection xxhash64 bigint of the k-gram.
-    p determines f, so rows are unique on (doc_id, p)."""
+    # the kernel is module-level, pickled by reference: workers import it
+    ensure_package_on_executors(base.sparkSession)
+
+    def gen(batches):
+        for b in batches:
+            yield from _winnow_select_batch(b)
+
     return (
-        base.select("doc_id", F.expr(_WINNOW_GP).alias("gp"))
-        .select("doc_id", F.explode(F.expr(_WINNOW_FPOS)).alias("fp"))
-        .select("doc_id", F.xxhash64(F.col("fp.f")).alias("f"), F.col("fp.p").alias("p"))
+        base.select("doc_id", "text")
+        .mapInArrow(gen, "doc_id bigint, gram string, p int")
+        .select("doc_id", F.xxhash64("gram").alias("f"), "p")
     )
 
 
@@ -2317,11 +2437,10 @@ def q069_winnowing_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole lines, chunk boundaries, or bag-of-shingles similarity; this
     matches ANY verbatim run above the threshold, position-free).
 
-    100 TB shape: fingerprint selection and the per-document DISTINCT
-    happen entirely INSIDE one higher-order expression (JVM codegen, no
-    Python, no shuffle) — only ~2/(w+1) of the k-grams survive to the
-    explode, and the (doc_id, fp) stream is the only thing shuffled
-    (hash-partitioned on fp, two-sided partial aggregation). The df cap
+    100 TB shape: fingerprint selection is one map-side vectorized
+    Arrow kernel per batch of documents (no shuffle) — only ~2/(w+1) of
+    the k-grams leave it, and the (doc_id, fp) stream is the only thing
+    shuffled (hash-partitioned on fp). The df cap
     is the same skew guard the containment join uses: a boilerplate
     fingerprint shared by thousands of pages is dropped before it can
     form a quadratic pair blow-up or a hot reduce partition. The
@@ -2365,11 +2484,10 @@ def winnowing_pairs(
     exchange to count n_shared.
 
     spread_partitions (explicit, not an RDD probe): the
-    selector amplifies each input row ~|text|-fold in CPU (w substring
-    comparisons per character), so Spark's BYTE-based input splitting
-    undersizes it badly on small dense files (sf0.1's 581 KB
-    documents.parquet is ONE split → the whole corpus selected on one
-    core; 44 s → 2.7 s once spread). Callers that know the input is
+    selector's cost is per character of text (a k-gram ranking per
+    document), so Spark's BYTE-based input splitting undersizes it on
+    small dense files (sf0.1's 581 KB documents.parquet is ONE split →
+    the whole corpus selected on one core). Callers that know the input is
     byte-dense pass a target (the registry query passes
     defaultParallelism — one cheap round-robin shuffle of the narrow
     input rows, documented in the plan-shape pin). At real scale file
@@ -2378,11 +2496,14 @@ def winnowing_pairs(
     the caller, never derived from a plan-time RDD materialization, so
     the physical plan does not depend on defaultParallelism or
     file-split layout."""
-    fp = _winnow_fp(docs, spread_partitions=spread_partitions)
-    # the kernel's per-f doc dedup is a no-op here: (doc_id, f) is distinct
-    # by construction, so per-pair COUNT(*) == COUNT(DISTINCT f)
+    base = docs.filter(F.length("text") >= WINNOW_K + WINNOW_W - 1)
+    if spread_partitions is not None and spread_partitions > 1:
+        base = base.repartition(spread_partitions)
+    # f can repeat within a document (one row per selected position); the
+    # pair kernel dedups (doc_id, f) inside each f-group, so per-pair
+    # COUNT(*) == COUNT(DISTINCT f)
     out = (
-        _winnow_pairs_arrow(fp)
+        _winnow_pairs_arrow(_winnow_select(base).select("doc_id", "f"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= 2)
@@ -2765,9 +2886,9 @@ def q088_exact_substring_excision(spark: SparkSession, sf_dir: str) -> DataFrame
     documented, and identical across engines by the pinned
     first-occurrence window-argmin rule.
 
-    100 TB shape: positions ride the SAME fused higher-order selector
-    as q069 (grams materialized once per doc, window argmin by string
-    min, 8-byte folded fingerprint key); ownership is one groupBy on
+    100 TB shape: positions come from the SAME Arrow selector kernel
+    as q069 (window argmin in code-point order, 8-byte folded
+    fingerprint key); ownership is one groupBy on
     the fingerprint key (min-doc + distinct-doc df in one pass); the
     per-doc span merge is one vectorized Arrow kernel over the narrow
     (doc_id, p) cut stream (no window over the corpus); and the
@@ -2831,13 +2952,11 @@ def exact_substring_excision(
     # every fp consumer sits above an identical f-keyed exchange that AQE
     # reuse deduplicates), the two fpos consumers here are a partial
     # aggregation and a broadcast-join probe with NO common exchange above
-    # the selector, so an uncut plan re-runs the full grams/struct-argmin
-    # selector once per consumer (their pushed filters differ, so even
-    # the scan exchange is not reusable; OPTIMIZATION_r15.md §B). The cut
-    # stores the narrow (doc_id, f, p) stream (~20 B/row, ~2/(W+1) of the
-    # k-grams) and both consumers read blocks — the same shape as
-    # winnowing_family.
-    fpos = _winnow_fpos(base).transform(cut_lineage)
+    # the selector, so an uncut plan runs the selector kernel once per
+    # consumer. The cut stores the narrow (doc_id, f, p) stream (~20 B/row,
+    # ~2/(W+1) of the k-grams) and both consumers read blocks — the same
+    # shape as winnowing_family.
+    fpos = _winnow_select(base).transform(cut_lineage)
     stats = (
         fpos.groupBy("f")
         .agg(F.countDistinct("doc_id").alias("df"), F.min("doc_id").alias("owner"))
@@ -2845,7 +2964,7 @@ def exact_substring_excision(
         .select("f", "owner")
     )
     # No distinct on the cut stream: fpos is unique on (doc_id, p) by
-    # construction — wins positions are array_distinct per document and
+    # construction — the kernel emits each selected position once and
     # each position carries exactly one gram — and stats is unique per f,
     # so the equi-join cannot duplicate a (doc_id, p) row (the oracle's
     # SELECT DISTINCT dedups the same already-unique set).
@@ -2981,9 +3100,8 @@ ORDER BY dd.doc_id
 def q197_winnowing_family_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The winnowing family as ONE composed plan sharing a single
     selector pass. q069/q062/q063/q088 each
-    re-run the same grams/window-argmin selector — the dominant cost
-    (a ~20x in-memory text amplification per document) and ~12.5 s of
-    the 39 s bench headline when a pipeline runs all of them. This
+    re-run the same window-argmin selector over the whole corpus text
+    when a pipeline runs all of them. This
     query computes the position-annotated fingerprint stream ONCE and
     derives every family decision from it, emitting the per-document
     master manifest a training-data pipeline joins on to apply ANY of
@@ -3041,18 +3159,17 @@ def winnowing_family(
     base = docs.filter(F.length("text") >= K + W - 1)
     if spread_partitions is not None and spread_partitions > 1:
         base = base.repartition(spread_partitions)
-    # THE shared selector pass (struct argmin — see _winnow_fpos):
-    # materialized once, read by every branch.
-    fpos = _winnow_fpos(base).transform(cut_lineage)
+    # THE shared selector pass (see _winnow_select): materialized once,
+    # read by every branch.
+    fpos = _winnow_select(base).transform(cut_lineage)
     # Fingerprint stats for excision ownership: df cap + owner in one
-    # aggregation (seam-sized). Only the cuts branch reads it; the pair
-    # kernel applies the df cap itself.
+    # aggregation (seam-sized). Only the cuts branch reads it, so it is
+    # not materialized; the pair kernel applies the df cap itself.
     stats = (
         fpos.groupBy("f")
         .agg(F.countDistinct("doc_id").alias("df"), F.min("doc_id").alias("owner"))
         .filter((F.col("df") >= 2) & (F.col("df") <= WINNOW_DF_CAP))
         .select("f", "owner")
-        .transform(cut_lineage)
     )
     # Branch 1: candidate pairs (q069 semantics) -> clusters (q062/q063).
     # The kernel dedups (doc_id, f) per fingerprint group itself (fpos CAN

@@ -1127,6 +1127,11 @@ def _rep_signals_arrow_udf():
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
+    from warcraider_spark.dist import ensure_package_on_executors
+
+    # the kernel is module-level, pickled by reference: workers import it
+    ensure_package_on_executors()
+
     def _signals(s):
         return _rep_signals_kernel(s)
 
