@@ -177,7 +177,9 @@ def test_arrow_pair_kernel_batch_spanning_and_cap(spark):
 _UNICODE_ALPHABET = list("ab ") + ["é", "ж", "\u0301", "\uffff", "😀", "𝄞", "\U0010fffd"]
 
 
-def _kernel_rows(rows: list[tuple[int, str | None]]) -> dict[int, set[tuple[str, int]]]:
+def _kernel_rows(
+    rows: list[tuple[int, str | None]], distinct: bool = False
+) -> dict[int, set[tuple[str, int]]]:
     import pyarrow as pa
 
     from warcraider_spark.operators.dedup import _winnow_select_batch
@@ -190,12 +192,21 @@ def _kernel_rows(rows: list[tuple[int, str | None]]) -> dict[int, set[tuple[str,
         ["doc_id", "text"],
     )
     got: dict[int, set[tuple[str, int]]] = {}
-    for out in _winnow_select_batch(batch):
+    for out in _winnow_select_batch(batch, distinct):
         assert out.schema.names == ["doc_id", "gram", "p"]
         cols = [out.column(i).to_pylist() for i in range(3)]
         for d, g, p in zip(*cols):
             got.setdefault(d, set()).add((g, p))
     return got
+
+
+def _first_per_gram(sel: set[tuple[str, int]]) -> set[tuple[str, int]]:
+    """The distinct-gram selection: each selected k-gram once, at its
+    first selected position."""
+    first: dict[str, int] = {}
+    for g, p in sorted(sel, key=lambda gp: gp[1]):
+        first.setdefault(g, p)
+    return set(first.items())
 
 
 def _unicode_corpus(seed: int, n_docs: int) -> list[tuple[int, str | None]]:
@@ -216,8 +227,10 @@ def test_selector_kernel_matches_python_on_unicode():
     for seed in range(6):
         rows = _unicode_corpus(seed, 40)
         got = _kernel_rows(rows)
+        got_distinct = _kernel_rows(rows, distinct=True)
         for d, t in rows:
             assert got.get(d, set()) == _py_winnow_pos(t), (seed, d, t)
+            assert got_distinct.get(d, set()) == _first_per_gram(_py_winnow_pos(t)), (seed, d, t)
 
 
 def test_selector_kernel_edges():
@@ -228,6 +241,8 @@ def test_selector_kernel_edges():
     assert _kernel_rows([(1, flat)])[1] == {
         ("a" * k, p) for p in range(1, 40 - k - w + 3)
     } == _py_winnow_pos(flat)
+    # the pair pipeline's distinct mode ships that k-gram once
+    assert _kernel_rows([(1, flat)], distinct=True)[1] == {("a" * k, 1)}
     # a repeated minimum inside one window, later grams larger: the first wins
     text = "b" * (k - 1) + "a" + "b" * (k - 1) + "a" + "z" * 10
     assert _kernel_rows([(2, text)])[2] == _py_winnow_pos(text)

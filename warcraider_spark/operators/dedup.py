@@ -2018,17 +2018,10 @@ WINNOW_DF_CAP = 64
 _WINNOW_RUN_BYTES = 1 << 20
 
 
-def _dense_rank(key, bound: int):
-    """Order-preserving dense ranks 0..u-1 of a non-negative integer key
-    array whose values are < bound, and u. A lookup table when the key
-    range is small (no sort), one argsort otherwise."""
+def _dense_rank(key):
+    """Order-preserving dense ranks 0..u-1 of an integer key array, and u."""
     import numpy as np
 
-    if bound <= max(1 << 16, key.size):
-        present = np.zeros(bound, dtype=bool)
-        present[key] = True
-        table = np.cumsum(present, dtype=np.int64) - 1
-        return table[key], int(table[-1]) + 1
     order = np.argsort(key)
     sk = key[order]
     new = np.empty(sk.size, dtype=bool)
@@ -2040,14 +2033,16 @@ def _dense_rank(key, bound: int):
     return rank, int(rank[order[-1]]) + 1
 
 
-def _winnow_run(b, offs, valid):
+def _winnow_run(b, offs, valid, distinct):
     """Winnowing selection over one run of documents.
 
     b is the run's UTF-8 bytes, offs its documents' byte offsets (len d+1,
     offs[0] == 0), valid their non-null mask. Returns (doc, gram_offsets,
     gram_bytes, p): the run-local document index, the selected k-grams as
     Arrow string buffers and their 1-based character positions, one entry
-    per distinct selected position, ascending within each document.
+    per distinct selected position, ascending within each document. With
+    distinct, one entry per distinct selected k-gram of each document
+    instead, at its first selected position, in no set order.
 
     Characters are code points; each one's key is its UTF-8 bytes packed
     big-endian, so key order is code-point order, which is also the byte
@@ -2063,35 +2058,27 @@ def _winnow_run(b, offs, valid):
 
     K, W = WINNOW_K, WINNOW_W
     nb = b.size
-    lead = (b & 0xC0) != 0x80
-    if lead.all():
-        cpos = None
-        cstart = offs
-        nch = nb
-        r, bound = b, 256
-    else:
-        cpos = np.flatnonzero(lead)
-        nch = cpos.size
-        cstart = np.searchsorted(cpos, offs)
-        clen = np.diff(np.append(cpos, nb))
-        pad = np.concatenate((b, np.zeros(3, dtype=np.uint8)))
-        key = pad[cpos].astype(np.uint32) << 24
-        for t in (1, 2, 3):
-            key |= np.where(clen > t, pad[cpos + t].astype(np.uint32) << (24 - 8 * t), 0)
-        del pad, clen
-        r, bound = _dense_rank(key, 1 << 32)
-        del key
-    del lead
+    cpos = np.flatnonzero((b & 0xC0) != 0x80)
+    nch = cpos.size
+    cstart = np.searchsorted(cpos, offs)
     nwin = np.diff(cstart) - (K + W - 2)
     has = valid & (nwin > 0)
     nwin = nwin[has]
     if not nwin.size:
         return None
+    clen = np.diff(np.append(cpos, nb))
+    pad = np.concatenate((b, np.zeros(3, dtype=np.uint8)))
+    key = pad[cpos].astype(np.uint32) << 24
+    for t in (1, 2, 3):
+        key |= np.where(clen > t, pad[cpos + t].astype(np.uint32) << (24 - 8 * t), 0)
+    del pad, clen
+    r, bound = _dense_rank(key)
+    del key
     # ranks of the 2-, 4-, 8- and 16-grams; the 4-gram ranks are kept for
     # the final 16 + 4 step
     for span in (1, 2, 4, 8):
-        pair = r[:-span].astype(np.int64, copy=False) * bound + r[span:]
-        r, bound = _dense_rank(pair, bound * bound)
+        pair = r[:-span] * bound + r[span:]
+        r, bound = _dense_rank(pair)
         del pair
         if span == 2:
             r4, bound4 = r, bound
@@ -2104,7 +2091,7 @@ def _winnow_run(b, offs, valid):
     for half in (1, 2, 4):
         left, right = arg[:-half], arg[half:]
         arg = np.where(key[right] < key[left], right, left)
-    del key, left, right
+    del left, right
     total = int(nwin.sum())
     first = np.cumsum(nwin) - nwin
     win = np.repeat(cstart[:-1][has] - first, nwin) + np.arange(total, dtype=np.int64)
@@ -2116,31 +2103,33 @@ def _winnow_run(b, offs, valid):
     pos = pos[keep]
     doc = np.repeat(np.flatnonzero(has), nwin)[keep]
     del keep
+    if distinct:
+        gk, u = _dense_rank(key[pos])
+        once = np.unique(doc * u + gk, return_index=True)[1]
+        pos, doc = pos[once], doc[once]
+    del key
     p = (pos - cstart[doc] + 1).astype(np.int32)
-    if cpos is None:
-        bs = pos
-        lens = np.full(pos.size, K, dtype=np.int64)
-        src = b
-    else:
-        cend = np.append(cpos, nb)
-        bs = cpos[pos]
-        lens = cend[pos + K] - bs
-        src = np.concatenate((b, np.zeros(4 * K, dtype=np.uint8)))
+    cend = np.append(cpos, nb)
+    bs = cpos[pos]
+    lens = cend[pos + K] - bs
+    del cend
+    src = np.concatenate((b, np.zeros(4 * K, dtype=np.uint8)))
     width = int(lens.max())
     rows = np.lib.stride_tricks.sliding_window_view(src, width)[bs]
-    data = rows.ravel() if cpos is None else rows[np.arange(width) < lens[:, None]]
+    data = rows[np.arange(width) < lens[:, None]]
     gram_offs = np.zeros(pos.size + 1, dtype=np.int32)
     np.cumsum(lens, out=gram_offs[1:])
     return doc, gram_offs, data, p
 
 
-def _winnow_select_batch(batch):
+def _winnow_select_batch(batch, distinct=False):
     """The winnowing selector over one Arrow batch of (doc_id, text):
     yields (doc_id, gram, p) batches, one row per distinct selected
     position of each document — the first position of each window of W
     consecutive k-grams' minimum k-gram (K code points, compared in code
-    point order). Null text and documents shorter than K + W - 1
-    characters select nothing."""
+    point order). With distinct, one row per distinct selected k-gram of
+    each document, at its first selected position. Null text and
+    documents shorter than K + W - 1 characters select nothing."""
     import numpy as np
     import pyarrow as pa
 
@@ -2161,7 +2150,9 @@ def _winnow_select_batch(batch):
     i0 = 0
     while i0 < n:
         i1 = max(int(np.searchsorted(offs, offs[i0] + _WINNOW_RUN_BYTES, "right")) - 1, i0 + 1)
-        sel = _winnow_run(data[offs[i0] : offs[i1]], offs[i0 : i1 + 1] - offs[i0], valid[i0:i1])
+        sel = _winnow_run(
+            data[offs[i0] : offs[i1]], offs[i0 : i1 + 1] - offs[i0], valid[i0:i1], distinct
+        )
         if sel is not None:
             doc, gram_offs, gram_bytes, p = sel
             grams = pa.Array.from_buffers(
@@ -2176,13 +2167,15 @@ def _winnow_select_batch(batch):
         i0 = i1
 
 
-def _winnow_select(base: DataFrame) -> DataFrame:
+def _winnow_select(base: DataFrame, *, distinct: bool = False) -> DataFrame:
     """The winnowing selector over a pre-filtered (and optionally
     pre-spread) (doc_id, text) frame: one (doc_id, f, p) row per distinct
     selected position, p the 1-based character position and f the
     xxhash64 bigint of the selected k-gram (hashed in the JVM, so the key
     equals Spark's xxhash64 of the same substring). p determines f, so
-    rows are unique on (doc_id, p); f can repeat within a document.
+    rows are unique on (doc_id, p); f can repeat within a document. With
+    distinct, the kernel keeps each document's first row per selected
+    k-gram, so a repetitive document ships each fingerprint once.
 
     Selection is one vectorized Arrow kernel (_winnow_select_batch,
     O(n) memory per document); only the selected k-grams, ~2/(W+1) of
@@ -2194,7 +2187,7 @@ def _winnow_select(base: DataFrame) -> DataFrame:
 
     def gen(batches):
         for b in batches:
-            yield from _winnow_select_batch(b)
+            yield from _winnow_select_batch(b, distinct)
 
     return (
         base.select("doc_id", "text")
@@ -2479,9 +2472,11 @@ def winnowing_pairs(
     distinct fps; equality on random corpora against a pure-Python
     string reference is pinned by tests/test_winnowing_fold.py).
 
-    Pairs come from the streaming Arrow kernel (_winnow_pairs_arrow):
-    one f exchange, the df cap applied inside the kernel, then one pair
-    exchange to count n_shared.
+    The selector runs in distinct mode: one (doc_id, f) row per distinct
+    fingerprint of each document, not one per selected position, which a
+    repetitive page multiplies. Pairs come from the streaming Arrow
+    kernel (_winnow_pairs_arrow): one f exchange, the df cap applied
+    inside the kernel, then one pair exchange to count n_shared.
 
     spread_partitions (explicit, not an RDD probe): the
     selector's cost is per character of text (a k-gram ranking per
@@ -2499,11 +2494,8 @@ def winnowing_pairs(
     base = docs.filter(F.length("text") >= WINNOW_K + WINNOW_W - 1)
     if spread_partitions is not None and spread_partitions > 1:
         base = base.repartition(spread_partitions)
-    # f can repeat within a document (one row per selected position); the
-    # pair kernel dedups (doc_id, f) inside each f-group, so per-pair
-    # COUNT(*) == COUNT(DISTINCT f)
     out = (
-        _winnow_pairs_arrow(_winnow_select(base).select("doc_id", "f"))
+        _winnow_pairs_arrow(_winnow_select(base, distinct=True).select("doc_id", "f"))
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .filter(F.col("n_shared") >= 2)
