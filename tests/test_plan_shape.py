@@ -772,12 +772,14 @@ def test_mixture_trio_plan_shapes(spark):
 
 
 def test_warc_pipeline_is_map_only_until_write(spark, tmp_path):
-    """The e2e WARC pipeline's r10 scale curve attributes ~97% of
-    executor time to the map stage — because the transform graph is
-    shuffle-FREE by construction: native pre-filters, four pandas-UDF
-    crossings and all projections compose into one map stage, and the
-    only exchange in the whole job is the repartition("source") the
-    WRITE adds. Pin both halves of that claim."""
+    """The e2e WARC pipeline spends nearly all executor time in the map
+    stage because the transform graph is shuffle-FREE by construction:
+    native pre-filters (the blacklist is one literal predicate, not a
+    join against a driver-built table), four pandas-UDF crossings and all
+    projections compose into one map stage, and the only exchange in the
+    whole job is the repartition("source") the WRITE adds. The gunzip UDF
+    is planned once: a pushed-down null filter must not re-evaluate it.
+    Pin all of it."""
     from warcraider_spark.plans.pipeline import url_resource_from_warc_records
     from warcraider_spark.sources.warc import build_warc_bytes, read_warc_auto
 
@@ -801,6 +803,12 @@ def test_warc_pipeline_is_map_only_until_write(spark, tmp_path):
     plan = plan_of(res)
     shuffles = plan.count("+- Exchange") + plan.count(":- Exchange")
     assert shuffles == 0, f"transform graph must be map-only, found {shuffles} exchanges:\n{plan[:2000]}"
+    # the blacklist runs in the scan's map stage: no broadcast anti-join
+    # against a table built from driver-side Python lists
+    for node in ("BroadcastExchange", "LeftAnti", "Scan ExistingRDD"):
+        assert node not in plan, f"{node} in the ETL plan:\n{plan[:2000]}"
+    # each record is decompressed once
+    assert plan.count("_gunzip(") == 1, plan[:4000]
     written = res.repartition("source").sortWithinPartitions("domain_name")
     wplan = plan_of(written)
     wshuffles = wplan.count("+- Exchange") + wplan.count(":- Exchange")

@@ -17,6 +17,11 @@ is the fleet-wide sweep that catches a NEW query regressing a shape
 nobody wrote a dedicated assertion for.
 
 Usage: python tools/plan_audit.py [sf_dir] (writes PLAN_AUDIT.md in cwd)
+
+The tool's own session has a fixed width (AUDIT_MASTER,
+AUDIT_SHUFFLE_PARTITIONS) so the counts do not depend on the host: some
+operators add a round-robin spread only when defaultParallelism > 1, and
+shuffle partitioning follows the session's settings.
 """
 
 from __future__ import annotations
@@ -379,10 +384,18 @@ def flags_for(row: dict) -> list[str]:
     return [f for f in out if (row["query"], f) not in KNOWN_OK_PAIRS]
 
 
+AUDIT_MASTER = "local[4]"
+AUDIT_SHUFFLE_PARTITIONS = 4
+
+
 def audit(sf_dir: str, spark=None) -> list[dict]:
     own_session = spark is None
     if own_session:
-        spark = get_spark(app_name="plan_audit")
+        spark = get_spark(
+            app_name="plan_audit",
+            master=AUDIT_MASTER,
+            shuffle_partitions=AUDIT_SHUFFLE_PARTITIONS,
+        )
         spark.sparkContext.setLogLevel("ERROR")
     rows = []
     for name, spec in sorted(all_specs().items()):

@@ -265,11 +265,11 @@ URL_SUBSTRING_BLACKLIST: tuple[str, ...] = (
 
 
 def on_blacklist(hostname: Column, url: Column) -> Column:
-    """True when the record must be dropped (blacklist.rs:52-57).
-
-    Expressed as literal isin/contains — for a *large* dynamic blacklist the
-    scale form is a broadcast left-anti join against a blacklist DataFrame
-    (see plans.pipeline.apply_blacklist)."""
+    """True when the record must be dropped (blacklist.rs:52-57): an exact
+    hostname or URL match, or a URL containing one of the substrings
+    (case-sensitive). Literal isin/contains, evaluated in the scan's map
+    stage before any decompression; a blacklist too large to inline as
+    literals would need a join against a blacklist table instead."""
     cond = hostname.isin(*HOSTNAME_BLACKLIST) | url.isin(*URL_BLACKLIST)
     for sub in URL_SUBSTRING_BLACKLIST:
         cond = cond | url.contains(sub)

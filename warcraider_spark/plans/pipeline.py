@@ -6,8 +6,13 @@ One lazy DataFrame graph replacing the reference's hardcoded Rust loop
 
 - cheap native predicates (WARC-type, version sentinel, blacklist) run
   BEFORE any Python UDF — Catalyst will not hoist filters above a UDF;
+  the blacklist is one literal-set predicate (``extract.on_blacklist``),
+  so it adds no join, no broadcast and no Spark job;
 - each pandas UDF is invoked ONCE and projected via its struct fields —
-  duplicated UDF expressions may be re-executed;
+  duplicated UDF expressions may be re-executed. The gunzip UDF is
+  marked nondeterministic for this reason: otherwise Catalyst pushes the
+  ``content_str IS NOT NULL`` filter below the projection by inlining
+  the UDF call, and the plan decompresses every record twice;
 - the 2 MB oversize guard feeds the parse UDF an empty string instead of
   wrapping it in when/otherwise (the UDF column would be evaluated for all
   rows anyway; an empty input makes the skip actually cheap);
@@ -43,7 +48,7 @@ from warcraider_spark.functions.textfn import word_count as _word_count
 from warcraider_spark.functions.urls import absolutize_udf, root_domain_udf
 from warcraider_spark.schema import URL_RESOURCE_AVRO_JSON, URL_RESOURCE_FIELDS
 
-__all__ = ["url_resource_from_warc_records", "apply_blacklist", "write_url_resource"]
+__all__ = ["url_resource_from_warc_records", "write_url_resource"]
 
 OVERSIZE_BYTES = 2_000_000
 
@@ -67,21 +72,8 @@ def _decompress_udf() -> Column:
 
         return blobs.map(one)
 
-    return _gunzip
-
-
-def apply_blacklist(records: DataFrame, hostname_col: str, url_col: str) -> DataFrame:
-    """Blacklist as a broadcast LEFT-ANTI join — the scale form of
-    blacklist.rs:52-57 (substring rules stay as native predicates)."""
-    spark = records.sparkSession
-    hosts = spark.createDataFrame([(h,) for h in X.HOSTNAME_BLACKLIST], ["bad_host"])
-    urls = spark.createDataFrame([(u,) for u in X.URL_BLACKLIST], ["bad_url"])
-    out = records.join(
-        F.broadcast(hosts), records[hostname_col] == hosts.bad_host, "left_anti"
-    ).join(F.broadcast(urls), records[url_col] == urls.bad_url, "left_anti")
-    for sub in X.URL_SUBSTRING_BLACKLIST:
-        out = out.filter(~F.col(url_col).contains(sub))
-    return out
+    # keeps the null filter above the projection (module docstring)
+    return _gunzip.asNondeterministic()
 
 
 def url_resource_from_warc_records(records: DataFrame, metrics: dict | None = None) -> DataFrame:
@@ -118,7 +110,9 @@ def url_resource_from_warc_records(records: DataFrame, metrics: dict | None = No
         .withColumn("source", F.element_at(F.split("warc_file", "/"), -1))
     )
     base = _observe(base, "responses", F.count(F.lit(1)).alias("n_responses"))
-    filtered = apply_blacklist(base, "regex_hostname", "url")
+    # regex_hostname and url are never null (regexp_extract over a
+    # coalesced URL), so the negated predicate keeps every other row
+    filtered = base.filter(~X.on_blacklist(F.col("regex_hostname"), F.col("url")))
     filtered = _observe(filtered, "post_blacklist", F.count(F.lit(1)).alias("n_kept"))
 
     # --- UDF crossing 1: gzip decompress (bad rows dropped) ---------------

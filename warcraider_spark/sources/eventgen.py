@@ -1,8 +1,6 @@
 """Custom Python STREAMING data source (Spark 4 `pyspark.sql.datasource`):
 a deterministic event generator with real offset tracking.
 
-This is the streaming twin of sources/warc.py's batch Python DataSource —
-together they cover both halves of the Spark 4 Python data source API.
 Offsets are JSON dicts checkpointed by the engine; `read` advances the
 offset and returns the rows for exactly that range, so a query restarted
 from a checkpoint resumes at the committed offset with no duplicates and

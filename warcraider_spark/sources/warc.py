@@ -1,28 +1,37 @@
 """WARC source (SURVEY §2.1, §2.9 #1).
 
 Replaces the reference's sequential ``rust_warc`` reader loop
-(/root/reference/src/main.rs:199-226) with ``binaryFile`` scan +
-``mapInPandas`` record splitter: one WARC file per input partition, records
-streamed out in Arrow batches. The REPLICAS/OFFSET env-var sharding and the
-2×50k record batching (main.rs:129-164) disappear — Spark's scheduler and
-Arrow batching bound parallelism and memory instead.
+(/root/reference/src/main.rs:199-226) with Spark reads whose record
+splitting runs in ``mapInPandas``: records stream out in Arrow batches of
+at most ``WARC_BATCH_ROWS`` rows. The REPLICAS/OFFSET env-var sharding and
+the 2×50k record batching (main.rs:129-164) disappear — Spark's scheduler
+and the batch bound limit parallelism and memory instead.
 
-Scale notes: ``read_warc`` is one task per FILE (binaryFile never splits
-mid-file) — right when the corpus is many files. For the skewed-file-size
-case (one 100 GB WARC = one straggler task), ``read_warc_ranged`` byte-
-splits a single file the way Common Crawl's CDX sidecars do: WARC members
-are individually gzipped, so a member-offset index turns one file into N
-(path, offset, length) range tasks, each independently parseable — the
-same shape as q196's restart-segment parallel JPEG decode, applied to the
-container. ``index_warc_members`` is the index builder (header-only scan,
-payloads seek-skipped); at production scale the index is computed once at
-ingest and persisted as a CDX-style sidecar table instead of being rebuilt
-per read (the reference's intra-file record-range scan, main.rs:159-160,
-205-219, is the sequential ancestor of this shape).
+Every reader hands (uri, bytes, first_idx) to one row emitter,
+``warc_record_batches``; ``split_warc_files`` is the one ``mapInPandas``
+splitter over ``binaryFile`` rows, shared by the batch reader and the
+streaming pipeline.
 
-Also provides ``write_warc_gz_records`` to synthesize test fixtures
-(FIXTURES B1) and a Spark 4 Python DataSource (``warc`` format) wrapping
-the same parser.
+Scale notes: ``read_warc`` never splits a file (``binaryFile`` is not
+splittable), but it does not give each file its own task either: Spark
+packs whole files into tasks up to a byte budget of
+``min(maxPartitionBytes, max(openCostInBytes, total bytes / cores))``,
+each file counted with a 4 MiB open cost — so 8 small files at local[2]
+run as 2 tasks. That is right when the corpus is many small files. For the
+skewed-file-size case (one 100 GB WARC = one straggler task),
+``read_warc_ranged`` byte-splits a single file the way Common Crawl's CDX
+sidecars do: WARC members are individually gzipped, so a member-offset
+index turns one file into N (path, offset, length) range tasks, each
+independently parseable — the same shape as q196's restart-segment
+parallel JPEG decode, applied to the container. ``index_warc_members`` is
+the index builder (header-only scan, payloads seek-skipped); at production
+scale the index is computed once at ingest and persisted as a CDX-style
+sidecar table instead of being rebuilt per read (the reference's
+intra-file record-range scan, main.rs:159-160, 205-219, is the sequential
+ancestor of this shape). ``read_warc_auto`` picks between the two.
+
+Also provides ``build_warc_bytes`` to synthesize test fixtures
+(FIXTURES B1).
 """
 
 from __future__ import annotations
@@ -43,7 +52,10 @@ from pyspark.sql.types import (
 
 __all__ = [
     "WARC_RECORD_SCHEMA",
+    "WARC_BATCH_ROWS",
     "parse_warc_stream",
+    "warc_record_batches",
+    "split_warc_files",
     "read_warc",
     "read_warc_ranged",
     "read_warc_auto",
@@ -62,6 +74,11 @@ WARC_RECORD_SCHEMA = StructType(
         StructField("content", BinaryType(), True),
     ]
 )
+_WARC_COLUMNS = WARC_RECORD_SCHEMA.fieldNames()
+
+# rows per pandas batch out of the splitters: bounds a worker's memory
+# for files with many small records
+WARC_BATCH_ROWS = 2000
 
 
 def parse_warc_stream(data: bytes) -> Iterator[tuple[str, dict[str, str], bytes]]:
@@ -99,36 +116,44 @@ def parse_warc_stream(data: bytes) -> Iterator[tuple[str, dict[str, str], bytes]
         yield version, headers, content
 
 
-def read_warc(spark: SparkSession, path: str) -> DataFrame:
-    """WARC files → DataFrame[warc_file, record_idx, version, headers,
-    content]. One task per file; records stream out in Arrow batches."""
-    from warcraider_spark.dist import ensure_package_on_executors
-    ensure_package_on_executors()
+def warc_record_batches(uri: str, data: bytes, first_idx: int = 0) -> Iterator:
+    """The row emitter every WARC reader shares: the records of one byte
+    stream as pandas batches of WARC_RECORD_SCHEMA rows, at most
+    ``WARC_BATCH_ROWS`` rows each. ``record_idx`` counts from
+    ``first_idx`` (a ranged slice starts at its first member's index);
+    the malformed-tail sentinel row comes through as an ordinary row."""
     import pandas as pd
 
-    binary = spark.read.format("binaryFile").load(path).select("path", "content")
+    rows: list[tuple] = []
+    for idx, (version, headers, content) in enumerate(parse_warc_stream(data), first_idx):
+        rows.append((uri, idx, version, headers, content))
+        if len(rows) == WARC_BATCH_ROWS:
+            yield pd.DataFrame(rows, columns=_WARC_COLUMNS)
+            rows = []
+    if rows:
+        yield pd.DataFrame(rows, columns=_WARC_COLUMNS)
 
-    def split_files(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def split_warc_files(binary: DataFrame) -> DataFrame:
+    """``binaryFile`` rows (batch or streaming) → WARC_RECORD_SCHEMA rows;
+    ``warc_file`` is the ``path`` column as ``binaryFile`` wrote it."""
+    from warcraider_spark.dist import ensure_package_on_executors
+
+    ensure_package_on_executors()
+
+    def split(batches: Iterator) -> Iterator:
         for pdf in batches:
-            for _, row in pdf.iterrows():
-                out: list[dict] = []
-                for idx, (version, headers, content) in enumerate(parse_warc_stream(row["content"])):
-                    out.append(
-                        {
-                            "warc_file": row["path"],
-                            "record_idx": idx,
-                            "version": version,
-                            "headers": headers,
-                            "content": content,
-                        }
-                    )
-                    if len(out) >= 2000:  # bound batch memory
-                        yield pd.DataFrame(out)
-                        out = []
-                if out:
-                    yield pd.DataFrame(out)
+            for uri, data in zip(pdf["path"], pdf["content"]):
+                yield from warc_record_batches(uri, data)
 
-    return binary.mapInPandas(split_files, WARC_RECORD_SCHEMA)
+    return binary.select("path", "content").mapInPandas(split, WARC_RECORD_SCHEMA)
+
+
+def read_warc(spark: SparkSession, path: str) -> DataFrame:
+    """WARC files → DataFrame[warc_file, record_idx, version, headers,
+    content]. Whole files: a file is never split, and Spark packs small
+    files together into one task (see the module docstring)."""
+    return split_warc_files(spark.read.format("binaryFile").load(path))
 
 
 def index_warc_members(stream: io.BufferedReader) -> list[int]:
@@ -193,7 +218,7 @@ def plan_warc_splits(
 DEFAULT_SPLIT_BYTES = 128 << 20  # mirrors spark.sql.files.maxPartitionBytes
 
 
-# --- filesystem adapter (VERDICT r6 #7: object-store ranged reads) ---------
+# --- filesystem adapter (object-store ranged reads) ------------------------
 # Plain local paths stay on the raw os/io fast path. Any scheme'd URI
 # (file://, s3://, gs://, hdfs://, …) routes through pyarrow.fs, whose
 # open_input_file gives a SEEKABLE reader — read_at(length, offset) is a
@@ -319,8 +344,6 @@ def read_warc_ranged(
     from warcraider_spark.dist import ensure_package_on_executors
 
     ensure_package_on_executors()
-    import os as _os
-
     import pandas as pd
 
     files = _enumerate_warc_files(path)
@@ -342,11 +365,11 @@ def read_warc_ranged(
         for pdf in batches:
             rows = []
             for p, n in zip(pdf["path"], pdf["n_splits"]):
-                # ADVICE r7 #2: one unstatable/unreadable file (dangling
-                # symlink, permission hole, object deleted between
-                # enumerate and index) must not fail the whole ranged
-                # job at index time — skip it, matching the driver-side
-                # routing behavior in read_warc_auto (ADVICE r6).
+                # One unstatable/unreadable file (dangling symlink,
+                # permission hole, object deleted between enumerate and
+                # index) must not fail the whole ranged job at index
+                # time — skip it, as the driver-side routing in
+                # read_warc_auto does.
                 try:
                     size = _file_size(p)
                     with _open_stream(p) as f:
@@ -365,25 +388,11 @@ def read_warc_ranged(
 
     def read_range(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            for _, row in pdf.iterrows():
-                data = _read_range(row["path"], int(row["offset"]), int(row["length"]))
-                uri = _warc_uri(row["path"])
-                out: list[dict] = []
-                for i, (version, headers, content) in enumerate(parse_warc_stream(data)):
-                    out.append(
-                        {
-                            "warc_file": uri,
-                            "record_idx": int(row["first_idx"]) + i,
-                            "version": version,
-                            "headers": headers,
-                            "content": content,
-                        }
-                    )
-                    if len(out) >= 2000:
-                        yield pd.DataFrame(out)
-                        out = []
-                if out:
-                    yield pd.DataFrame(out)
+            for p, first_idx, off, length in zip(
+                pdf["path"], pdf["first_idx"], pdf["offset"], pdf["length"]
+            ):
+                data = _read_range(p, int(off), int(length))
+                yield from warc_record_batches(_warc_uri(p), data, int(first_idx))
 
     return splits.mapInPandas(read_range, WARC_RECORD_SCHEMA)
 
@@ -391,20 +400,20 @@ def read_warc_ranged(
 def read_warc_auto(
     spark: SparkSession,
     path: str,
-    ranged_threshold_bytes: int = DEFAULT_SPLIT_BYTES,
     target_split_bytes: int = DEFAULT_SPLIT_BYTES,
 ) -> DataFrame:
-    """Production WARC read path (VERDICT r5 directive #7): whole-file
-    ``read_warc`` while every file is under ``ranged_threshold_bytes``
-    (one task per file is the right granularity for a many-small-files
-    corpus), switching to ``read_warc_ranged`` as soon as ANY file
-    exceeds it — so a skewed crawl with one 100 GB WARC never produces
-    the monolithic straggler/OOM task SCALE.md §1 measured. In ranged
-    mode per-file fan-out comes purely from the byte budget
+    """Production WARC read path: whole-file ``read_warc`` while every
+    file fits the per-task byte budget ``target_split_bytes`` (whole
+    files packed into tasks is the cheaper plan for a many-small-files
+    corpus: no index pass, no descriptor shuffle), switching to
+    ``read_warc_ranged`` as soon as ANY file exceeds it — so a skewed
+    crawl with one 100 GB WARC never produces the monolithic
+    straggler/OOM task SCALE.md §1 measured. In ranged mode per-file
+    fan-out comes purely from the same budget
     (``ceil(size / target_split_bytes)``), so small files in a mixed
     corpus stay one task while big ones split.
 
-    The ranged branch works off local disk too (VERDICT r6 #7): scheme'd
+    The ranged branch works off local disk too: scheme'd
     URIs (file://, s3://, gs://, …) stat, index, and range-read through
     pyarrow.fs — ``read_at(length, offset)`` is a ranged GET on an
     object store, so the 100 GB-file story holds without a local copy
@@ -413,9 +422,9 @@ def read_warc_auto(
     the ``binaryFile`` route; the production pattern for re-scans is the
     persisted CDX sidecar (see ``read_warc_ranged``)."""
     def _statable_sizes():
-        # Per-file OSError handling (ADVICE r6): one unreadable file must
-        # not abort the scan and silently route a directory that also
-        # holds a 100 GB WARC down the monolithic whole-file path.
+        # Per-file OSError handling: one unreadable file must not abort
+        # the scan and silently route a directory that also holds a
+        # 100 GB WARC down the monolithic whole-file path.
         for p in files:
             try:
                 yield _file_size(p)
@@ -429,7 +438,7 @@ def read_warc_auto(
         # Hadoop connector does its own range reads.
         big = False
     else:
-        big = any(s > ranged_threshold_bytes for s in _statable_sizes())
+        big = any(s > target_split_bytes for s in _statable_sizes())
     if big:
         return read_warc_ranged(
             spark, path, num_splits=1, target_split_bytes=target_split_bytes
@@ -454,62 +463,3 @@ def build_warc_bytes(records: list[tuple[dict[str, str], bytes]]) -> bytes:
         out.write(gz)
         out.write(b"\r\n\r\n")
     return out.getvalue()
-
-
-# ---------------------------------------------------------------------------
-# Spark 4 Python DataSource: spark.read.format("warc")
-# ---------------------------------------------------------------------------
-
-try:  # Python DataSource API (Spark 4+)
-    from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-    class _WarcInputPartition(InputPartition):
-        def __init__(self, path: str) -> None:
-            self.path = path
-
-    class WarcDataSourceReader(DataSourceReader):
-        """One input partition per WARC file (members are individually
-        gzipped so files are the split unit — see module docstring)."""
-
-        def __init__(self, options: dict) -> None:
-            self.path = options.get("path")
-            if not self.path:
-                raise ValueError("warc datasource requires a path")
-
-        def partitions(self):
-            return [_WarcInputPartition(p) for p in _enumerate_warc_files(self.path)]
-
-        def read(self, partition):
-            with open(partition.path, "rb") as f:
-                data = f.read()
-            for idx, (version, headers, content) in enumerate(parse_warc_stream(data)):
-                yield (partition.path, idx, version, headers, content)
-
-    class WarcDataSource(DataSource):
-        """``spark.read.format("warc").load(path)`` → WARC_RECORD_SCHEMA.
-
-        The upgrade path SURVEY §2.1 names: a first-class source instead
-        of binaryFile+mapInPandas. Register per-session with
-        ``register_warc_datasource(spark)``. Reads local/posix paths (the
-        reader runs on executors; for object stores the binaryFile route
-        in ``read_warc`` delegates range reads to the Hadoop connector).
-        """
-
-        @classmethod
-        def name(cls) -> str:
-            return "warc"
-
-        def schema(self):
-            return WARC_RECORD_SCHEMA
-
-        def reader(self, schema):
-            return WarcDataSourceReader(self.options)
-
-    def register_warc_datasource(spark: SparkSession) -> bool:
-        spark.dataSource.register(WarcDataSource)
-        return True
-
-except ImportError:  # pragma: no cover - Spark < 4 fallback
-
-    def register_warc_datasource(spark: SparkSession) -> bool:
-        return False

@@ -173,12 +173,8 @@ def stream_warc_pipeline(
     ``max_files_per_trigger`` bounds each micro-batch's file intake (the
     production back-pressure knob for a continuously-crawling source; also
     what tools/stream_warc_bench.py uses to measure per-batch overhead)."""
-    from warcraider_spark.dist import ensure_package_on_executors
-    ensure_package_on_executors()
     from warcraider_spark.plans.pipeline import url_resource_from_warc_records
-    from warcraider_spark.sources.warc import WARC_RECORD_SCHEMA, parse_warc_stream
-
-    import pandas as pd
+    from warcraider_spark.sources.warc import split_warc_files
 
     binary_schema = (
         "path string, modificationTime timestamp, length long, content binary"
@@ -190,26 +186,7 @@ def stream_warc_pipeline(
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    binary = reader.load(warc_dir).select("path", "content")
-
-    def split_files(batches):
-        for pdf in batches:
-            for _, row in pdf.iterrows():
-                out = []
-                for idx, (version, headers, content) in enumerate(parse_warc_stream(row["content"])):
-                    out.append(
-                        {
-                            "warc_file": row["path"],
-                            "record_idx": idx,
-                            "version": version,
-                            "headers": headers,
-                            "content": content,
-                        }
-                    )
-                if out:
-                    yield pd.DataFrame(out)
-
-    records = binary.mapInPandas(split_files, WARC_RECORD_SCHEMA)
+    records = split_warc_files(reader.load(warc_dir))
     resource = url_resource_from_warc_records(records)
     return (
         resource.writeStream.format("parquet")
