@@ -1098,7 +1098,7 @@ def test_scan_tag_close_property():
 HAZ = "<script>var x='<!'+'[CD'+'ATA';</script>"  # the moneysmart shape
 
 
-def test_parse_path_classifier():
+def test_parse_path_classifier(monkeypatch):
     """parse_path routes pages by the mechanism the reference actually
     exhibits (lib.rs:184-239): strict quick-xml success → 'strict';
     a quick-xml FATAL token preserved through tidy+ammonia (script
@@ -1111,12 +1111,22 @@ def test_parse_path_classifier():
     reference tree every synthetic assertion still runs before the
     counted skip."""
     from tests.test_reference_fidelity import ref_file
+    from warcraider_spark.functions import html as H
     from warcraider_spark.functions.html import parse_path, quickxml_fatal_hazard
 
     assert parse_path("<p>x</p>") == "strict"
     assert parse_path("<div><p>x") == "tidy"
     # bang hazard → soup, even on an otherwise balanced page
     assert parse_path(HAZ + "<p>x</p>") == "soup"
+    # one hazard scan per page, whichever leg wins
+    calls = []
+    scan = H._rawtext_scan
+    monkeypatch.setattr(H, "_rawtext_scan", lambda doc: calls.append(doc) or scan(doc))
+    for page in ("<p>x</p>", "<div><p>x", HAZ + "<p>x</p>"):
+        calls.clear()
+        H.parse_html_py(page)
+        assert calls == [page], (page, len(calls))
+    monkeypatch.undo()
     assert quickxml_fatal_hazard(HAZ)
     # '<!' shapes quick-xml accepts are NOT hazards: comment (closed
     # later), CDATA (closed), DOCTYPE-ish (scan to '>')
@@ -1148,6 +1158,27 @@ def test_parse_path_classifier():
     assert parse_path(raw) == "soup"
 
 
+def test_hazard_scan_linear_time():
+    """The hazard scan stays linear on the page shapes that once made it
+    quadratic (times on a 4-vCPU host):
+    - 40,000 markup comments after a script's unterminated '<!--': each
+      '-->' candidate is tested against the comments with one binary
+      search (against every comment: about a minute);
+    - 100,000 script elements (1.8 MB): each rawtext end tag is searched
+      in place (copying the rest of the page per region: about 6 s)."""
+    import time
+
+    from warcraider_spark.functions.html import quickxml_fatal_hazard
+
+    for page, limit_s in (
+        ("<script>//<!--\n</script>" + "<!-- c -->" * 40_000 + "<p>x --> y</p>", 5.0),
+        ("<script>x</script>" * 100_000, 2.0),
+    ):
+        t0 = time.perf_counter()
+        assert not quickxml_fatal_hazard(page)
+        assert time.perf_counter() - t0 < limit_s, page[:40]
+
+
 def test_soup_leg_semantics():
     """Soup pages (double parse failure) read html5ever's DOM: values
     entity-DECODED (lib.rs:419-553), duplicate attrs keep-FIRST
@@ -1176,18 +1207,36 @@ def test_soup_leg_semantics():
     assert isinstance(r["html_errors"], str)
 
 
+def _ref_tag_end(s: str, lt: int) -> int | None:
+    """Literal character loop of quick-xml 0.17's read_elem_until: from
+    the '<' at ``lt``, the index past the first '>' outside quotes
+    (either quote char toggles); None = EOF inside the tag."""
+    q = None
+    for p in range(lt + 1, len(s)):
+        c = s[p]
+        if q:
+            if c == q:
+                q = None
+        elif c in "\"'":
+            q = c
+        elif c == ">":
+            return p + 1
+    return None
+
+
 def test_rawtext_scan_property():
-    """Property pin for _rawtext_scan (the soup classifier's tokenizer):
-    compare the find/regex fast path against a LITERAL character-by-
-    character transcription of the html5ever tokenization it models —
-    NORMAL / TAG(quote-aware) / rawtext-to-'</name'+delimiter /
-    spec-comment states — on dense random soup from the trigger
-    alphabet. Both the script spans AND the markup-comment spans must
-    agree (the hazard search excludes terminators inside the latter)."""
+    """Property pin for _rawtext_scan (the soup classifier's tokenizer)
+    and its regex tag scanner _qx_tag_scan_end: compare the find/regex
+    fast path against a LITERAL character-by-character transcription of
+    the html5ever tokenization it models — NORMAL / TAG(quote-aware) /
+    rawtext-to-'</name'+delimiter / spec-comment states — on dense
+    random soup from the trigger alphabet. Both the script spans AND the
+    markup-comment spans must agree (the hazard search excludes
+    terminators inside the latter)."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from warcraider_spark.functions.html import _rawtext_scan
+    from warcraider_spark.functions.html import _qx_tag_scan_end, _rawtext_scan
 
     RAW = ("script", "style", "noscript", "noframes")
 
@@ -1215,20 +1264,7 @@ def test_rawtext_scan_property():
             )
             if raw is not None:
                 # tag-open scan: quote-aware to the first unquoted '>'
-                q = None
-                p = pos + 1
-                gt = None
-                while p < n:
-                    c = s[p]
-                    if q:
-                        if c == q:
-                            q = None
-                    elif c in "\"'":
-                        q = c
-                    elif c == ">":
-                        gt = p + 1
-                        break
-                    p += 1
+                gt = _ref_tag_end(s, pos)
                 if gt is None:
                     break  # EOF inside the start tag
                 m = _re.search(
@@ -1255,20 +1291,7 @@ def test_rawtext_scan_property():
                 pos = e
                 continue
             # ordinary '<...': quote-aware scan to '>' or treat as text
-            q = None
-            p = pos + 1
-            end = None
-            while p < n:
-                c = s[p]
-                if q:
-                    if c == q:
-                        q = None
-                elif c in "\"'":
-                    q = c
-                elif c == ">":
-                    end = p + 1
-                    break
-                p += 1
+            end = _ref_tag_end(s, pos)
             pos = end if end is not None else pos + 1
         return scripts, comments
 
@@ -1278,6 +1301,7 @@ def test_rawtext_scan_property():
     @settings(max_examples=600, deadline=None)
     def check(s):
         assert _rawtext_scan(s) == ref_scan(s), s
+        assert _qx_tag_scan_end(s, 0) == _ref_tag_end(s, 0), s
 
     check()
     # directed shapes at the state seams
@@ -1293,5 +1317,11 @@ def test_rawtext_scan_property():
         "<style>.a{}</style><script>s</script>",
         "<scriptx>not raw</scriptx><script/>still raw</script>",
         "<script></scripts></script>",
+        '<a title="unterminated',                # '"' open at EOF
+        """<a title="it's">x""",                 # "'" inside "…"
+        """<a t='1>2' u="3>4">x""",             # '>' inside both quote kinds
+        "<>x",
+        "<a" + " b='c'" * (2**20 // 6),          # 1 MB tag with no '>'
     ):
-        assert _rawtext_scan(s) == ref_scan(s), s
+        assert _rawtext_scan(s) == ref_scan(s), s[:80]
+        assert _qx_tag_scan_end(s, 0) == _ref_tag_end(s, 0), s[:80]

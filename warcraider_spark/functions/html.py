@@ -16,16 +16,16 @@ Event-routing semantics replicated from the strict parser
   such end tag (lib.rs:302-324). style/noscript/noframes are ammonia
   clean_content_tags (lib.rs:134-137): deleted WITH content before any
   parser runs, so they contribute nothing anywhere and never touch
-  in_body (r10 — the lib.rs noscript branch is dead code on the cleaned
-  document, and a noscript end no longer spuriously restores text
-  collection after a <link>);
+  in_body (the lib.rs noscript branch is dead code on the cleaned
+  document, so a noscript end cannot restore text collection after a
+  <link>);
 - meta key = LAST present of name/http-equiv/itemprop/property in
   attribute order, value = content, both non-empty (lib.rs:268-289);
 - links: every a[href], document order, duplicates kept — the SOUP-path
   semantics (lib.rs:435-439) that the golden snapshot pins; the strict
   path's '_'/'#' prefix filter is available separately as
   extract.filter_link_prefixes. Scheme filtering replicates ammonia's
-  default ALLOWLIST (r10): an href whose scheme is outside the set
+  default ALLOWLIST: an href whose scheme is outside the set
   loses the attribute, relative URLs pass (lib.rs:61-153 + 188 — the
   cleaner runs on every page before parsing);
 - resource_urls: src/href of script/link tags (lib.rs:303-314; style is
@@ -35,11 +35,11 @@ Event-routing semantics replicated from the strict parser
   order the golden pins;
 - per-event text trimming (quick-xml ``trim_text(true)``), empties dropped.
 
-Attribute BYTES are path-keyed (r12, VERDICT r11 #1 + ADVICE #1):
-ammonia cleans EVERY page before any parser runs (lib.rs:188), so the
-strict quick-xml pass reads html5ever's re-serialized output and takes
-its values raw (``from_utf8_lossy(&a.value)``, lib.rs:294/303-314 —
-never ``unescape_and_decode_value``). A strict-OK page therefore emits
+Attribute BYTES are path-keyed: ammonia cleans EVERY page before any
+parser runs (lib.rs:188), so the strict quick-xml pass reads html5ever's
+re-serialized output and takes its values raw
+(``from_utf8_lossy(&a.value)``, lib.rs:294/303-314 — never
+``unescape_and_decode_value``). A strict-OK page therefore emits
 attribute-derived strings (links, resource_urls, meta keys AND values)
 in html5ever's attribute-serializer escaping: ``&``→``&amp;``,
 U+00A0→``&nbsp;``, ``"``→``&quot;`` of the DECODED value (the tokenizer
@@ -47,14 +47,13 @@ decoded the page's own charrefs first), everything else literal —
 ``href="p?a=1&amp;b=2"`` stays ``&amp;``. Same pre-clean reason,
 duplicate same-name attributes resolve keep-FIRST on strict pages
 (html5ever's duplicate rule drops the NEW attr; quick-xml never sees a
-dupe, so the r10-documented keep-first TRUNCATION sliver is
-unreachable — ADVICE r11 #3). Pages that fail the strict replay take
-the tidy leg, which re-parses the RAW bytes: tidy's default
-``repeated-attributes: keep-last`` repair applies and values stay
-entity-DECODED (the soup fallback, lib.rs:419-553, decodes; tidy's own
-re-serialized entity byte stream is a documented COVERAGE sliver).
-Comment termination is path-keyed the same way (ADVICE r11 #2): the
-spec tokenizer closes ``<!-->``/``<!--->`` immediately
+dupe, so its checked-iterator keep-first TRUNCATION is unreachable).
+Pages that fail the strict replay take the tidy leg, which re-parses the
+RAW bytes: tidy's default ``repeated-attributes: keep-last`` repair
+applies and values stay entity-DECODED (the soup fallback,
+lib.rs:419-553, decodes; tidy's own re-serialized entity byte stream is
+a documented COVERAGE sliver). Comment termination is path-keyed the
+same way: the spec tokenizer closes ``<!-->``/``<!--->`` immediately
 (abrupt-closing-of-empty-comment) and at ``--!>``
 (incorrectly-closed-comment), swallowing to EOF only on genuine
 eof-in-comment; tidy's lexer needs ``--`` + ``>`` and otherwise reads
@@ -69,7 +68,7 @@ repeated-attribute drops, ``'<' + '/' + letter`` inside CDATA content,
 message text, ordering (parse-time warnings in document order, then
 attribute checks, then trims) and tab-expanded (tabstop 8) line/column
 accounting, verified byte-for-byte against the golden snapshot. The
-trigger condition matches too (round 4): ``strict_parse_ok`` replays the
+trigger condition matches too: ``strict_parse_ok`` replays the
 strict quick-xml first pass, and diagnostics are emitted only when it
 fails — a page the strict parser accepts reports "" exactly like the
 reference (tidy never runs, lib.rs:193-207).
@@ -123,16 +122,16 @@ HTML_RESULT_SCHEMA = StructType(
 
 _HEADINGS = frozenset({"h1", "h2", "h3", "h4", "h5", "h6"})
 _META_KEY_ATTRS = ("name", "http-equiv", "itemprop", "property")
-# ammonia URL policy (r10, closing a fidelity gap): the reference runs
+# ammonia URL policy: the reference runs
 # cleaner.clean() on EVERY page before parsing (lib.rs:188), and ammonia
 # filters URL-valued attributes against an ALLOWLIST of schemes (its
 # Builder default — url_schemes), not a denylist: an href whose scheme
 # is outside the set has the attribute stripped (the <a> survives, its
-# text stays). Relative URLs (no scheme) always pass. The previous
-# 3-scheme denylist kept exotic-scheme links (whatsapp://, steam://,
-# file:) that the reference DROPS. Scheme detection per RFC 3986:
-# [A-Za-z][A-Za-z0-9+.-]* followed by ':' — "C:\\path" parses as scheme
-# "c" and is stripped, exactly as url::Url::parse gives ammonia.
+# text stays), so exotic-scheme links (whatsapp://, steam://, file:)
+# are DROPPED. Relative URLs (no scheme) always pass. Scheme detection
+# per RFC 3986: [A-Za-z][A-Za-z0-9+.-]* followed by ':' — "C:\\path"
+# parses as scheme "c" and is stripped, exactly as url::Url::parse gives
+# ammonia.
 _ALLOWED_SCHEMES = frozenset(
     "bitcoin ftp ftps geo http https im irc ircs magnet mailto mms mx news "
     "nntp openpgp4fpr sip sms smsto ssh tel url webcal wtai xmpp".split()
@@ -141,8 +140,8 @@ _SCHEME_RE = re.compile(r"^[A-Za-z][A-Za-z0-9+.\-]*:")
 # WHATWG URL pre-processing (url::Url::parse, which ammonia calls):
 # strip leading/trailing C0 controls and space, then remove ASCII
 # tab/newline ANYWHERE in the input — so 'java\tscript:alert(1)' parses
-# as scheme 'javascript' and is filtered (ADVICE r10 #1; the regex
-# alone fails to match through the tab and wrongly KEPT the link).
+# as scheme 'javascript' and is filtered (the regex alone fails to
+# match through the tab and would keep the link).
 _C0_SPACE = "".join(chr(i) for i in range(0x21))
 _TAB_NL_RE = re.compile(r"[\t\n\r]")
 
@@ -175,10 +174,10 @@ def empty_html_result(ok: bool = False, html_errors: str = " ") -> dict:
 # runs — so nothing inside them (text, headings, meta, links,
 # resources) is ever observable downstream, and they do not touch the
 # in_body state machine (the lib.rs:302 noscript branch is dead code on
-# the cleaned document). r10: previously modelled as in_body=False
-# regions, which wrongly RESTORED in_body on their end tags (visible
-# after `<link><noscript>..</noscript>text`) and collected meta/links
-# inside noscript (GA fallback pixels) that the reference never sees.
+# the cleaned document). Modelling them as in_body=False regions would
+# wrongly RESTORE in_body on their end tags (visible after
+# `<link><noscript>..</noscript>text`) and collect meta/links inside
+# noscript (GA fallback pixels) that the reference never sees.
 _DELETED_CONTENT_TAGS = frozenset({"style", "noscript", "noframes"})
 
 
@@ -195,27 +194,44 @@ def _h5_escape_attr(value: str) -> str:
 _SPEC_COMMENT_CLOSE = re.compile(r"-{2,}!?>")
 
 
+def _spec_comment_end(doc: str, i: int) -> int:
+    """End of the comment whose '<!--' starts at ``i``, per the spec
+    tokenizer: '<!-->' and '<!--->' close at once
+    (abrupt-closing-of-empty-comment), '--!>' closes
+    (incorrectly-closed-comment), and only genuine eof-in-comment
+    swallows to EOF."""
+    j = i + 4
+    if doc[j : j + 1] == ">":
+        return j + 1
+    if doc[j : j + 2] == "->":
+        return j + 2  # comment-start-dash then '>'
+    m = _SPEC_COMMENT_CLOSE.search(doc, j)
+    return m.end() if m else len(doc)
+
+
 def _spec_comment_spans(raw_html: str) -> list[tuple[int, int]]:
     """(start, end) spans of comments per the spec tokenizer — what
     html5ever consumed (and ammonia then stripped) before the strict
-    quick-xml pass ever saw the page. Handles the abrupt empty forms
-    ('<!-->', '<!--->'), the '--!>' terminator, and eof-in-comment
-    (unterminated → the span runs to EOF, masking everything after)."""
+    quick-xml pass ever saw the page. An unterminated comment runs to
+    EOF, masking everything after it."""
     spans: list[tuple[int, int]] = []
     pos = 0
-    n = len(raw_html)
     while (i := raw_html.find("<!--", pos)) != -1:
-        j = i + 4
-        if raw_html[j : j + 1] == ">":
-            end = j + 1  # abrupt-closing-of-empty-comment
-        elif raw_html[j : j + 2] == "->":
-            end = j + 2  # comment-start-dash then '>'
-        else:
-            m = _SPEC_COMMENT_CLOSE.search(raw_html, j)
-            end = m.end() if m else n  # eof-in-comment swallows
-        spans.append((i, end))
-        pos = end
+        pos = _spec_comment_end(raw_html, i)
+        spans.append((i, pos))
     return spans
+
+
+def _in_spans(
+    starts: list[int], ends: list[int], pos: int, *, open_start: bool = False
+) -> bool:
+    """Whether ``pos`` lies inside one of the sorted, disjoint spans
+    ``(starts[k], ends[k])``: ``s <= pos < e``, or ``s < pos < e`` with
+    ``open_start``. Disjointness makes the nearest span starting at or
+    before ``pos`` the only candidate, so a probe is one binary search
+    and comment-dense pages stay O(probes · log spans)."""
+    i = (bisect.bisect_left if open_start else bisect.bisect_right)(starts, pos) - 1
+    return i >= 0 and pos < ends[i]
 
 
 # delimiter set per the tag-name state: the name ends only at
@@ -224,6 +240,11 @@ def _spec_comment_spans(raw_html: str) -> list[tuple[int, int]]:
 _RAWTEXT_OPEN_RE = re.compile(
     r"<(script|style|noscript|noframes)(?=[\t\n\r\f />]|$)", re.I
 )
+# the end tag that closes each rawtext region, by the same delimiter rule
+_RAWTEXT_CLOSE_RE = {
+    tag: re.compile(r"</%s(?=[\t\n\r\f />]|$)" % tag, re.I)
+    for tag in ("script", "style", "noscript", "noframes")
+}
 
 
 def _rawtext_scan(raw_html: str) -> tuple[list[tuple[int, int]], list[tuple[int, int]]]:
@@ -247,50 +268,35 @@ def _rawtext_scan(raw_html: str) -> tuple[list[tuple[int, int]], list[tuple[int,
             gt = _qx_tag_scan_end(raw_html, i)
             if gt is None:
                 break  # EOF inside the start tag
-            close = re.search(
-                r"</%s(?=[\t\n\r\f />]|$)" % tag, raw_html[gt:], re.I
-            )
-            body_end = gt + close.start() if close else n
+            close = _RAWTEXT_CLOSE_RE[tag].search(raw_html, gt)
+            body_end = close.start() if close else n
             if tag == "script":
                 spans.append((gt, body_end))
             pos = body_end + 2 if close else n
             continue
         if raw_html.startswith("<!--", i):
-            j = i + 4
-            if raw_html[j : j + 1] == ">":
-                end = j + 1
-            elif raw_html[j : j + 2] == "->":
-                end = j + 2
-            else:
-                mm = _SPEC_COMMENT_CLOSE.search(raw_html, j)
-                end = mm.end() if mm else n
-            comments.append((i, end))
-            pos = end
+            pos = _spec_comment_end(raw_html, i)
+            comments.append((i, pos))
             continue
         end = _qx_tag_scan_end(raw_html, i)
         pos = end if end is not None else i + 1
     return spans, comments
 
 
-def _script_text_spans(raw_html: str) -> list[tuple[int, int]]:
-    return _rawtext_scan(raw_html)[0]
+# The rest of a tag after its '<', to the first '>' outside quotes
+# (either quote char toggles). Written unrolled: a quote can only be
+# consumed by its own quoted alternative, so a tag with no closing '>'
+# fails in linear time — the looser '(?:[^"\'>]+|…)*' backtracks
+# exponentially on it.
+_QX_TAG_REST_RE = re.compile(r"""[^"'>]*(?:(?:"[^"]*"|'[^']*')[^"'>]*)*>""")
 
 
 def _qx_tag_scan_end(doc: str, lt: int) -> int | None:
-    """quick-xml 0.17's read_elem_until: from '<', consume to the first
-    '>' outside quotes (either quote char toggles); None = EOF inside
-    the tag (Error::UnexpectedEof)."""
-    q = None
-    for p in range(lt + 1, len(doc)):
-        c = doc[p]
-        if q:
-            if c == q:
-                q = None
-        elif c in "\"'":
-            q = c
-        elif c == ">":
-            return p + 1
-    return None
+    """quick-xml 0.17's read_elem_until: from the '<' at ``lt``, the
+    index just past the first '>' outside quotes; None = EOF inside the
+    tag (Error::UnexpectedEof)."""
+    m = _QX_TAG_REST_RE.match(doc, lt + 1)
+    return m.end() if m else None
 
 
 def quickxml_fatal_hazard(raw_html: str) -> bool:
@@ -327,6 +333,8 @@ def quickxml_fatal_hazard(raw_html: str) -> bool:
     spans, markup_comments = _rawtext_scan(raw_html)
     if not spans:
         return False
+    comment_starts = [s for s, _ in markup_comments]
+    comment_ends = [e for _, e in markup_comments]
 
     # A terminator candidate inside a true markup comment never reaches
     # quick-xml: ammonia strips those comments from the clean stream
@@ -336,7 +344,7 @@ def quickxml_fatal_hazard(raw_html: str) -> bool:
     def _find_outside_comments(needle: str, start: int) -> int:
         p = start
         while (h := raw_html.find(needle, p)) != -1:
-            if not any(s < h < e for s, e in markup_comments):
+            if not _in_spans(comment_starts, comment_ends, h, open_start=True):
                 return h
             p = h + 1
         return -1
@@ -374,12 +382,15 @@ def quickxml_fatal_hazard(raw_html: str) -> bool:
 
 
 def parse_path(raw_html: str) -> str:
-    """Which reference leg wins this page (lib.rs:184-239):
+    """Which reference leg wins this page (lib.rs:184-239), decided by
+    the hazard scan and then the tag-balance replay, each run once:
 
-    'strict' — parse_html(clean(raw), check_end_names=true) succeeds;
     'soup'   — a preserved fatal hazard kills quick-xml on BOTH legs
                (quickxml_fatal_hazard), so parse_html_soup(clean(raw))
                wins — html5ever DOM reads, entity-decoded values;
+    'strict' — no hazard and the end-name replay balances
+               (_end_names_balance), so parse_html(clean(raw),
+               check_end_names=true) succeeds;
     'tidy'   — strict fails structurally but clean(tidy(raw)) has no
                preserved fatal token: with check_end_names=false every
                remaining quick-xml error class is either skipped
@@ -387,17 +398,26 @@ def parse_path(raw_html: str) -> str:
                the tidy-leg parse succeeds — quick-xml raw reads of
                ammonia's (post-tidy) serialization, html5ever-escaped
                attribute bytes."""
-    if strict_parse_ok(raw_html):
-        return "strict"
     if quickxml_fatal_hazard(raw_html):
         return "soup"
-    return "tidy"
+    return "strict" if _end_names_balance(raw_html) else "tidy"
+
+
+def strict_parse_ok(raw_html: str) -> bool:
+    """The reference's tidy TRIGGER condition (lib.rs:193-207): diagnostics
+    are captured only when the strict quick-xml first pass FAILS; a page
+    the strict parser accepts gets html_errors = "" (tidy never runs).
+    The strict pass fails on a preserved fatal token (quick-xml's
+    UnexpectedBang / UnexpectedEof fire independently of
+    check_end_names) or on an end-name mismatch, which is exactly what
+    parse_path decides."""
+    return parse_path(raw_html) == "strict"
 
 
 class _Extractor(HTMLParser):
     def __init__(self, path: str = "tidy") -> None:
         super().__init__(convert_charrefs=True)
-        # Three-leg path key (r13, ADVICE r12): 'strict' and 'tidy' are
+        # Three-leg path key: 'strict' and 'tidy' are
         # the quick-xml-on-ammonia-serialization legs (escaped attr
         # bytes); 'soup' is the double-parse-failure fallback (decoded).
         # Duplicate-attr and comment rules are keyed per leg below.
@@ -417,7 +437,7 @@ class _Extractor(HTMLParser):
     def _attr_out(self, value: str) -> str:
         """Attribute bytes as the winning reference leg emits them.
 
-        ADVICE r12: BOTH quick-xml legs end in ammonia's
+        BOTH quick-xml legs end in ammonia's
         re-serialization read raw — strict parses clean(raw)
         (lib.rs:188/294/303-314), the tidy leg parses clean(tidy(raw))
         (lib.rs:204) — and ammonia serializes with html5ever's
@@ -436,7 +456,7 @@ class _Extractor(HTMLParser):
         return value if self.path == "soup" else _h5_escape_attr(value)
 
     def parse_comment(self, i: int, report: int = 1) -> int:
-        """Path-keyed comment termination (ADVICE r11 #2; 3-leg r13).
+        """Path-keyed comment termination, per leg.
 
         Strict AND soup paths — the winning parser consumed clean(raw),
         and html5ever ate the comments during the ammonia pre-clean, so
@@ -453,21 +473,14 @@ class _Extractor(HTMLParser):
         wrong under ALL engines and never used. (Whole-document feeds
         only: parse_html_py always feeds the full page at once.)"""
         if self.path != "tidy":
-            rawdata = self.rawdata
-            j = i + 4
-            if rawdata[j : j + 1] == ">":
-                return j + 1
-            if rawdata[j : j + 2] == "->":
-                return j + 2
-            m = _SPEC_COMMENT_CLOSE.search(rawdata, j)
-            return m.end() if m else len(rawdata)
+            return _spec_comment_end(self.rawdata, i)
         k = super().parse_comment(i, report)
         return len(self.rawdata) if k < 0 else k
 
     def handle_starttag(self, tag: str, attrs: list[tuple[str, str | None]]) -> None:
         if len(attrs) > 1:
-            # Path-keyed duplicate-attribute repair (ADVICE r11 #1;
-            # 3-leg r13): every reference leg parses a deduplicated
+            # Path-keyed duplicate-attribute repair: every reference
+            # leg parses a deduplicated
             # stream. Strict AND soup pages were deduped by html5ever
             # during the ammonia pre-clean of the RAW bytes — the
             # spec's duplicate-attribute rule drops the NEW attr, so
@@ -478,8 +491,7 @@ class _Extractor(HTMLParser):
             # ... for repeated attribute' warning; the kept twin sits
             # at its LATER position) — html5ever then sees no dupe.
             # quick-xml itself never sees a duplicate on any leg, so
-            # its checked-iterator truncation is unreachable (ADVICE
-            # r11 #3).
+            # its checked-iterator truncation is unreachable.
             if self.path != "tidy":
                 seen: set[str] = set()
                 deduped = []
@@ -507,11 +519,11 @@ class _Extractor(HTMLParser):
             # everything until the first case-insensitive matching end
             # tag is TEXT, so '<!--' inside the region is NOT a comment
             # and a '</noscript>' inside comment-looking bytes DOES
-            # close it. HTMLParser's cdata mode finds the candidate end
-            # tags (ADVICE r10 #2 — previously the tokenizer parsed the
-            # comment and the region swallowed to the outer end tag);
-            # parse_endtag below replaces its '</name…>' recognition
-            # with the spec tokenizer's exact rules.
+            # close it (parsing the comment instead would let the region
+            # swallow to the outer end tag). HTMLParser's cdata mode
+            # finds the candidate end tags; parse_endtag below replaces
+            # its '</name…>' recognition with the spec tokenizer's exact
+            # rules.
             self.set_cdata_mode(tag)
             return
         if tag == "meta":
@@ -717,11 +729,10 @@ class _Extractor(HTMLParser):
 
     def close(self) -> None:
         super().close()
-        # r9 cascade-fuzz find: an UNCLOSED heading at EOF must still
-        # surface its text — the reference pushes heading text per text
-        # EVENT (lib.rs:334-336), so it never depends on the end tag;
-        # our buffered form flushed only on </hN> and silently dropped
-        # the tail heading of a truncated page.
+        # an UNCLOSED heading at EOF must still surface its text — the
+        # reference pushes heading text per text EVENT (lib.rs:334-336),
+        # so it never depends on the end tag; the buffer here flushes on
+        # </hN>, so flush the tail heading of a truncated page too.
         if self.heading_level:
             raw = "".join(self._heading_buf).strip()
             if raw:
@@ -809,16 +820,16 @@ _HEAD_CONTEXT_TAGS = frozenset(
 # any of these before inferring an implicit <ul> (class 14)
 _LIST_CONTAINERS = frozenset("ul ol menu dir".split())
 
-# class 21 (r11): attributes tidy's dictionary types as URLs (attrs.c
+# class 21: attributes tidy's dictionary types as URLs (attrs.c
 # entries wired to CheckUrl; the CH_URLS list-valued 'archive' checker
 # is separate and unmodelled)
 _URL_ATTRS = frozenset(
     "action background cite classid codebase data formaction href icon "
     "longdesc poster profile src usemap".split()
-)  # 'manifest' stays out: our r8 class-9 dictionary treats it as
+)  # 'manifest' stays out: the class-9 dictionary treats it as
 # proprietary (certified surface) and an attribute can't be both
 
-# class 23 (r11): block-level START tags that imply closing open
+# class 23: block-level START tags that imply closing open
 # required-end inline elements / headings (tidy's ParseInline returns
 # the token to the enclosing block parser, MISSING_ENDTAG_BEFORE).
 # td/th/tr are deliberately absent — the table parser's moved-content
@@ -837,7 +848,7 @@ _INLINE_REQUIRED_END = frozenset(
     "small span strike strong sub sup tt u var".split()
 )
 
-# classes 27+28 (r11): typed attribute-value checkers from tidy's
+# classes 27+28: typed attribute-value checkers from tidy's
 # attrs.c dictionary (the attrchk column). Each CH_* type below maps an
 # attribute NAME (any element — the dictionary is global) to the checker
 # whose semantics are modelled in _typed_attr_check; attributes typed
@@ -857,7 +868,6 @@ _LENGTH_ATTRS = frozenset(("width", "height"))  # CH_LENGTH -> CheckLength
 _CM_IMG_TAGS = frozenset("img applet object embed input".split())
 _ALIGN_VALUES = frozenset(("left", "right", "center", "justify"))
 _VALIGN_OK = frozenset(("top", "middle", "bottom", "baseline"))
-_VALIGN_BAD_LR = frozenset(("left", "right"))
 _VALIGN_PROPRIETARY = frozenset(("texttop", "absmiddle", "absbottom", "textbottom"))
 _CLEAR_VALUES = frozenset(("none", "left", "right", "all"))
 _SCROLL_VALUES = frozenset(("yes", "no", "auto"))
@@ -1055,7 +1065,7 @@ def tidy_diagnostics(raw_html: str) -> str:
     Reproduces the four warning classes the reference's tidy subprocess
     emits on its golden fixture (lib.rs:197-206; snapshot pins the exact
     stderr), byte-for-byte on that golden, plus twenty-two more classes
-    (r6-r11) pinned by our own adversarial fixtures — twenty-eight total:
+    pinned by our own adversarial fixtures — twenty-eight total:
 
     1. ``<tag> dropping value "V" for repeated attribute "A"`` — a start
        tag repeats an attribute name (first value reported, tidy keeps one);
@@ -1073,7 +1083,7 @@ def tidy_diagnostics(raw_html: str) -> str:
     6. ``discarding unexpected <form>`` — a ``<form>`` start tag while a
        form is already open (forms cannot nest; tidy parser
        DISCARDING_UNEXPECTED drops the inner tag, keeping its content).
-    7. ``missing </tag>`` — (r7) an element whose end tag the spec
+    7. ``missing </tag>`` — an element whose end tag the spec
        REQUIRES is closed implicitly: by an ancestor's end tag closing
        over it (anchored at that end tag, innermost-popped first — tidy
        parser MISSING_ENDTAG_FOR) or by end-of-document (anchored at
@@ -1082,7 +1092,7 @@ def tidy_diagnostics(raw_html: str) -> str:
        triggered implied closes (tidy's "missing </x> before <y>"
        variant) are not modelled — our scanner implies closes only at
        end tags and EOF.
-    8. ``missing <!DOCTYPE> declaration`` — (r7) no doctype token
+    8. ``missing <!DOCTYPE> declaration`` — no doctype token
        before the first element tag (tidy MISSING_DOCTYPE, fired when
        the parser builds the root element). Anchored at that first
        element tag and ordered BEFORE any other warning at the same
@@ -1090,7 +1100,7 @@ def tidy_diagnostics(raw_html: str) -> str:
        attribute/parse warnings are handled. A doctype inside a
        comment doesn't count; a doctype after the first element is
        too late (tidy would additionally discard it — not modelled).
-    9. ``<tag> proprietary attribute "name"`` — (r8) an attribute
+    9. ``<tag> proprietary attribute "name"`` — an attribute
        outside tidy's dictionary (``_KNOWN_ATTRS`` — HTML5-vintage
        attrs.c — plus the standard event handlers and the
        data-*/aria-*/xml*-prefixed families). Checked once per KEPT
@@ -1099,20 +1109,20 @@ def tidy_diagnostics(raw_html: str) -> str:
        same-element class-3 (tidy checks each attribute before the
        element-level checks); a class-6-discarded node never reaches
        the attribute checks.
-    10. ``inserting missing 'title' element`` — (r8) no ``<title>``
+    10. ``inserting missing 'title' element`` — no ``<title>``
        element anywhere (tidy MISSING_TITLE_ELEMENT: the head parser
        inserts an empty one). Anchored where the (implied) head
        CLOSES — the first of an explicit ``</head>``, a ``<body>``
        start tag, or any start tag that cannot live in head
        (``_HEAD_CONTEXT_TAGS``); all-head-context documents close the
        head at EOF. Same at-least-one-element precondition as class 8.
-    11. ``discarding unexpected </tag>`` — (r8) an end tag with no
+    11. ``discarding unexpected </tag>`` — an end tag with no
        matching open element on the parser stack; tidy drops the token
        (DISCARDING_UNEXPECTED, the end-tag sibling of class 6),
        anchored at the end tag. A class-5-broken start tag still OPENS
        its element (position-driven push, whether or not a pseudo-tag
        forms at it), so its own end tag matches rather than discards.
-    12. ``unescaped & or unknown entity "&name"`` — (r8) an entity
+    12. ``unescaped & or unknown entity "&name"`` — an entity
        parse (``&`` + namechar/'#') whose consumed name is not in
        tidy's dictionary, or a known entity mapping above U+00FF
        without its terminating ``;`` (tidy requires the semicolon for
@@ -1123,15 +1133,15 @@ def tidy_diagnostics(raw_html: str) -> str:
        is silent, both pinned by the moneysmart golden (bare `` & ``
        text runs and script-body ``&l=``/``&profile`` URLs produce
        none of its 217 warnings).
-    13. ``entity "&name" doesn't end in ';'`` — (r8) a known entity
+    13. ``entity "&name" doesn't end in ';'`` — a known entity
        mapping below U+0100 (the HTML 4.01 Latin-1 range, where tidy
        substitutes anyway) terminated by a non-namechar instead of
        ``;`` (MISSING_SEMICOLON). Numeric forms (``&#160``,
        ``&#xA0``) take the same split by codepoint but use tidy's
-       numeric wording (r9, MISSING_SEMICOLON_NCR): ``numeric
+       numeric wording (MISSING_SEMICOLON_NCR): ``numeric
        character reference "&#160" doesn't end in ';'``.
     14. ``inserting implicit <ul>`` / ``inserting implicit <dl>`` —
-       (r9) a ``<li>`` start tag with no list container (ul/ol/menu/
+       a ``<li>`` start tag with no list container (ul/ol/menu/
        dir) open anywhere on the stack, or a ``<dt>``/``<dd>`` with no
        open ``<dl>``: tidy's parser creates the container node and
        warns INSERTING_TAG, anchored at the item's start tag, after
@@ -1141,12 +1151,12 @@ def tidy_diagnostics(raw_html: str) -> str:
        search (tidy's ancestor walk); start-tag-implied list closes
        are not modelled (same limit as class 7's start-tag variant).
     15. ``replacing invalid numeric character reference N`` /
-       ``discarding invalid numeric character reference N`` — (r9)
+       ``discarding invalid numeric character reference N`` —
        INVALID_NCR: a numeric reference into the Windows-1252 alias
        range (C1 controls, 128-159) is remapped (DecodeWin1252) with
        the "replacing" wording — EXCEPT the five CP1252-undefined
        slots 129/141/143/144/157, whose Win2Unicode entry is 0, so
-       they take "discarding" (r11 fix); surrogate halves
+       they take "discarding"; surrogate halves
        (U+D800-U+DFFF) and beyond-Unicode codes are dropped with
        "discarding". N is
        DECIMAL regardless of input radix (tidy's NtoS). Fires after a
@@ -1154,7 +1164,7 @@ def tidy_diagnostics(raw_html: str) -> str:
        a >=U+0100 reference MISSING its ';' is class 12 instead, so
        un-terminated surrogate refs never reach this check. C0
        controls and other charset-dependent remaps are not modelled.
-    16. ``missing </a> before <a>`` — (r9) anchors cannot nest: a new
+    16. ``missing </a> before <a>`` — anchors cannot nest: a new
        ``<a>`` start tag while an ``<a>`` is open implies closing the
        old one (tidy ParseInline pops the pushed anchor,
        MISSING_ENDTAG_BEFORE), warning for the popped anchor AND each
@@ -1164,14 +1174,14 @@ def tidy_diagnostics(raw_html: str) -> str:
        own later ``</a>`` then discards (class 11) — the full tidy
        cascade. Other inline-nesting implied closes (b-in-b etc.) are
        not modelled; anchors are the overwhelmingly common crawl case.
-    17. ``<x> isn't allowed in <head> elements`` — (r9) the FIRST
+    17. ``<x> isn't allowed in <head> elements`` — the FIRST
        body-content start tag inside an explicit still-open ``<head>``
        (tidy TAG_NOT_ALLOWED_IN: ParseHead ungets the token and
        returns, so head parsing ends there — the same place the
        class-10 anchor lands — and later body tags are ordinary
        content, warned once). ``<body>``/``<html>``/``<frameset>``
        transition silently.
-    18. ``plain text isn't allowed in <head> elements`` — (r10) a
+    18. ``plain text isn't allowed in <head> elements`` — a
        non-whitespace PCDATA run DIRECTLY inside an explicit still-open
        ``<head>`` (top of the open-element stack is head — text inside
        an open ``<title>``/script/style belongs to that element, and
@@ -1190,7 +1200,7 @@ def tidy_diagnostics(raw_html: str) -> str:
        tag's recovery point inside head IS scanned; text swallowed
        into a masked-to-EOF attribute value is not (it never reaches
        tidy's PCDATA lexer either).
-    19. ``missing </hM> before <hN>`` — (r10) headings cannot nest: a
+    19. ``missing </hM> before <hN>`` — headings cannot nest: a
        new heading start tag of a DIFFERENT level while a heading is
        open implies closing the old one (tidy ParseBlock's heading
        check: MISSING_ENDTAG_BEFORE, then UngetToken so the new
@@ -1203,7 +1213,7 @@ def tidy_diagnostics(raw_html: str) -> str:
        stack-wide scope limit as class 16: an intervening BLOCK
        element would have closed the heading at ITS start tag in real
        tidy (unmodelled start-tag-triggered closes, residual family 2).
-    20. ``replacing unexpected <hN> with </hN>`` — (r10) the SAME-level
+    20. ``replacing unexpected <hN> with </hN>`` — the SAME-level
        twin of class 19: tidy coerces the second ``<h2>`` start token
        into ``</h2>`` (NON_MATCHING_ENDTAG) — it closes the open
        heading and opens NOTHING, so required-end children pop with
@@ -1212,7 +1222,7 @@ def tidy_diagnostics(raw_html: str) -> str:
        class-6 discard, and the heading's own later end tag discards
        (class 11).
 
-    21. URI-attribute hygiene — (r11) tidy's ``CheckUrl`` (attrs.c) on
+    21. URI-attribute hygiene — tidy's ``CheckUrl`` (attrs.c) on
        URL-typed attribute values (``_URL_ATTRS``, the dictionary's
        CH_URL entries; per-attribute-NAME, any element). Sub-behaviors,
        in CheckUrl's code order, anchored at the element like class 3:
@@ -1235,19 +1245,19 @@ def tidy_diagnostics(raw_html: str) -> str:
        (space-discard variant in some configs) unmodelled; 'manifest'
        stays under class 9 (can't be both). CheckUrl operates on the
        entity-DECODED value (tidy's ParseEntity substitutes while the
-       value is lexed — modelled by ``_decode_entities_tidy``, r11), so
+       value is lexed — modelled by ``_decode_entities_tidy``), so
        an ``&#10;``-encoded newline or ``&#32;`` space IS an illegal
        byte to the escape check and a ``java&#115;cript:`` prefix IS
        javascript:; the raw-newline discard above it stays raw (the
        ParseValue character loop only sees literal input newlines).
-    22. ``missing <table>`` — (r11) a tr/td/th start tag with NO
+    22. ``missing <table>`` — a tr/td/th start tag with NO
        ``<table>`` open anywhere on the stack: tidy's parser infers the
        missing table (MISSING_STARTTAG), anchored at the offending tag.
        Same non-pushing scope limit as class 14: the inferred container
        is not tracked, so a SECOND bare table part warns again where
        real tidy's inferred table would absorb it.
-    23. ``missing </x> before <y>``, the GENERAL block-start form —
-       (r11, closing residual family 2's main body): a start tag for a
+    23. ``missing </x> before <y>``, the GENERAL block-start form
+       (residual family 2's main body): a start tag for a
        BLOCK-level element (``_BLOCK_TRIGGERS``) implies closing the
        open required-end INLINE elements (``_INLINE_REQUIRED_END``) —
        and an open heading, when the trigger is not itself a heading
@@ -1265,7 +1275,7 @@ def tidy_diagnostics(raw_html: str) -> str:
        unknown elements stop the walk where tidy's dict-driven content
        model might pop them.
 
-    24. ``<b> is probably intended as </b>`` — (r11) DIRECT same-tag
+    24. ``<b> is probably intended as </b>`` — DIRECT same-tag
        inline nesting with NO attributes: tidy's ParseInline
        same-element check coerces the start token into the end tag
        (COERCE_TO_ENDTAG, TidyCoerceEndTags default) — the element
@@ -1273,19 +1283,19 @@ def tidy_diagnostics(raw_html: str) -> str:
        element's own later end tag discards (class 11). TOP of stack
        only (node->tag == element->tag — the innermost open element);
        alternating nesting (b>i>b) is legal and silent.
-    25. ``nested emphasis <b>`` — (r11) the same check WITH attributes:
+    25. ``nested emphasis <b>`` — the same check WITH attributes:
        NESTED_EMPHASIS, warning only, the element nests normally.
        Scope for both: the inline required-end set minus <a> (the
        class-16 anchor branch runs first, stack-wide) and minus <q>
        (class 26 below).
-    26. ``nested q elements, possible typo.`` — (r11) tidy excludes q
+    26. ``nested q elements, possible typo.`` — tidy excludes q
        from the same-tag emphasis branch and reports NESTED_QUOTATION
        for a <q> start while a q is pushed — ANYWHERE on the inline
        stack (q-in-q and q > b > q alike), with or without attributes;
        warning only, the element nests normally.
 
-    27. Typed attribute-value validation — (r11, closing the bulk of
-       residual families 8/9/10): tidy's attrs.c dictionary wires each
+    27. Typed attribute-value validation (the bulk of residual
+       families 8/9/10): tidy's attrs.c dictionary wires each
        known attribute to a typed checker; the CH_NUMBER, CH_LENGTH,
        CH_ALIGN, CH_VALIGN, CH_CLEAR, CH_SCROLL and CH_TARGET checkers
        are modelled 1:1 (see ``_typed_attr_check``): a VALUELESS typed
@@ -1302,7 +1312,7 @@ def tidy_diagnostics(raw_html: str) -> str:
        types (residual slivers): CH_COLOR (CheckColor's hash-prefix
        fix + replaced-value wording), CH_VTYPE, CH_SHAPE, CH_TEXTDIR,
        CH_LANG/CH_CHARSET/CH_CHARACTER, CH_URLS, and 'border'.
-    28. Element-level missing-attribute reports — (r11) the remaining
+    28. Element-level missing-attribute reports — the remaining
        attrs.c element checkers with default-config warnings, the
        class-3 CheckLINK pattern generalized: CheckIMG (``<img> lacks
        "alt" attribute``; ``<img> should use client-side image map``
@@ -1324,7 +1334,7 @@ def tidy_diagnostics(raw_html: str) -> str:
     document, else newline-joined warnings with a trailing newline (the
     stderr shape the snapshot records).
 
-    CONTRACT SURFACE (r8): the reference's invocation is ``tidy -q
+    CONTRACT SURFACE: the reference's invocation is ``tidy -q
     --show-errors=0 --show-info=no …`` (lib.rs:197) — ``-q`` drops the
     summary header, ``--show-errors=0`` suppresses ALL Error-level
     messages, and ``--show-info=no`` suppresses ALL Info-level ones
@@ -1333,7 +1343,7 @@ def tidy_diagnostics(raw_html: str) -> str:
     above competes only against tidy's remaining warning classes, not
     its full message table.
 
-    KNOWN DIVERGENCE (documented, r4→r11): real tidy's warning catalog
+    KNOWN DIVERGENCE (documented): real tidy's warning catalog
     is larger — the residual is the CLOSED 10-family list in
     COVERAGE.md §2.4 (general NON_MATCHING_ENDTAG, CANT_BE_NESTED,
     USING_BR_INPLACE_OF, element-vintage OBSOLETE/PROPRIETARY_ELEMENT,
@@ -1345,12 +1355,12 @@ def tidy_diagnostics(raw_html: str) -> str:
     tag's attributes lexed BEFORE the broken quote are not re-scanned
     for classes 1/3 (tidy lexes them; the warning classes they could
     add are rare on a tag already being reported broken) — the broken
-    tag's ELEMENT, however, is opened on the stack like tidy does
-    (ADVICE r7 #4), so it participates in class-7 missing-end-tag
+    tag's ELEMENT, however, is opened on the stack like tidy does,
+    so it participates in class-7 missing-end-tag
     accounting AND — being a created element node — a broken
     non-head-context tag closes the head region and anchors the
     class-10 missing-'title' insert exactly like a well-formed one
-    (ADVICE r8 #2, pinned by fixture; tidy's parser leaves head on
+    (pinned by fixture; tidy's parser leaves head on
     the created node regardless of the lexing breakage). This applies
     to the '</'-recovered breakage only — a value swallowed to EOF
     opens no element (the rest of the document is masked), so it
@@ -1367,13 +1377,13 @@ def tidy_diagnostics(raw_html: str) -> str:
     only emitted for documents containing at least one element tag and
     anchors there — tidy would anchor at a leading bare-text token
     (implicit <html>) instead; tagless or text-only documents emit no
-    doctype warning here. Class-12/13 divergences (r8): the entity
+    doctype warning here. Class-12/13 divergences: the entity
     dictionary is the HTML 4.01 set + &apos; (tidy entities.c vintage)
     — a name only later tidy builds know would warn class 12 here;
     and a class-5 value swallowed to EOF is not entity-scanned (tidy's
     ParseValue would scan it — the document is already one broken
-    attribute value at that point). The r8-listed Win-1252 NCR gap is
-    closed by class 15 (r9); remaining INVALID_NCR divergence: C0 and
+    attribute value at that point). Win-1252 NCRs are class 15; the
+    remaining INVALID_NCR divergence: C0 and
     charset-conditional remaps beyond the C1/surrogate/overflow cases.
     Class-14 scope: li/dt/dd only — tidy also infers <tr>/<table>
     around stray table cells ("missing <tr>"/"missing <table>"
@@ -1389,9 +1399,7 @@ def tidy_diagnostics(raw_html: str) -> str:
     # within a line, expansion resumes from the previous warning instead
     # of rescanning from the line start, so a warning-dense minified
     # single-line page costs O(doc + warnings·log) total, not
-    # O(warnings × doc) (ADVICE r3 #1).
-    import bisect
-
+    # O(warnings × doc).
     nls: list[int] = []
     _i = raw_html.find("\n")
     while _i != -1:
@@ -1447,7 +1455,7 @@ def tidy_diagnostics(raw_html: str) -> str:
     # tidy's attribute lexer LINEARLY over the document: each candidate
     # tag consumes its quote-balanced attribute text (so a '<' inside a
     # closed quoted value never spawns a nested candidate). tidy's actual
-    # recovery signal (ADVICE r6 #1; tidy ParseValue) is '</' appearing
+    # recovery signal (tidy ParseValue) is '</' appearing
     # BEFORE the closing quote — a bare '<' or a newline inside the value
     # stays literal and does NOT warn — the value ends at the '</' and
     # the lexer resumes on that tag; a quote still open at EOF (no
@@ -1552,10 +1560,9 @@ def tidy_diagnostics(raw_html: str) -> str:
             )
         else:
             if not semicolon:
-                # r9: tidy distinguishes the numeric form
+                # tidy distinguishes the numeric form
                 # (MISSING_SEMICOLON_NCR) from the named one
-                # (MISSING_SEMICOLON) — previously both used the
-                # named-entity wording (documented divergence, fixed)
+                # (MISSING_SEMICOLON)
                 if name.startswith("#"):
                     parse_time.append(
                         (
@@ -1569,7 +1576,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                     parse_time.append(
                         (em.start(), 0, f"entity \"&{name}\" doesn't end in ';'")
                     )
-            # class 15 (r9): INVALID_NCR — the Windows-1252 alias range
+            # class 15: INVALID_NCR — the Windows-1252 alias range
             # (C1 controls 128-159) is not a legal character reference;
             # tidy remaps it (DecodeWin1252) and warns "replacing ...";
             # surrogate halves and beyond-Unicode codes are dropped with
@@ -1583,8 +1590,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                     # table, not the range: the five CP1252-undefined
                     # slots (129/141/143/144/157) map to 0 in
                     # DecodeWin1252, so ReportEncodingError gets
-                    # replaceMode == DISCARDED_CHAR for them (r11 fix —
-                    # previously the whole range said "replacing").
+                    # replaceMode == DISCARDED_CHAR for them.
                     verb = "replacing" if code in _WIN1252_MAP else "discarding"
                     parse_time.append(
                         (
@@ -1608,7 +1614,7 @@ def tidy_diagnostics(raw_html: str) -> str:
     head_close_anchor: int | None = None  # class 10 anchor (see below)
     # stack frames: [tag, start_pos, has_attrs, content_start, has_child]
     stack: list[list] = []
-    # ADVICE r7 #4: tidy still CREATES the element node from a class-5
+    # tidy still CREATES the element node from a class-5
     # broken tag (ParseValue ends the value, the token is emitted, the
     # parser opens it), so it participates in class-7/11 accounting.
     # The broken tag may or may not be visible to _TAG_RE (a later
@@ -1642,7 +1648,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                 )
 
     def _head_text_check(span_end: int) -> None:
-        # class 18 (r10): plain text directly inside an explicit open
+        # class 18: plain text directly inside an explicit open
         # <head> — tidy ParseHead's TextNode branch (the class-17 twin):
         # the first non-blank PCDATA run warns TAG_NOT_ALLOWED_IN with
         # the node described as "plain text", head parsing ends there
@@ -1686,8 +1692,8 @@ def tidy_diagnostics(raw_html: str) -> str:
             # class-5 breakage (pseudo-tag case): a later paired quote
             # made _TAG_RE swallow real tags into one pseudo-tag — the
             # flush above already opened the element; resume at the
-            # interrupting '</' exactly like tidy's lexer (ADVICE r6 #1
-            # post-breakage recovery). text_scan_from stays at the
+            # interrupting '</' exactly like tidy's lexer
+            # (post-breakage recovery). text_scan_from stays at the
             # recovery point (set by the flush): the pass re-reads from
             # there, so the pseudo-tag's tail is NOT consumed as markup.
             pos = broken_recovery[m.start()]
@@ -1711,7 +1717,7 @@ def tidy_diagnostics(raw_html: str) -> str:
             # cannot live in <head> (<body> included — it's outside the
             # head-context set)
             if head_close_anchor is None and tag not in _HEAD_CONTEXT_TAGS:
-                # class 17 (r9): the FIRST body-content start tag inside
+                # class 17: the FIRST body-content start tag inside
                 # an EXPLICIT still-open <head> warns TAG_NOT_ALLOWED_IN
                 # ("<x> isn't allowed in <head> elements") — tidy's
                 # ParseHead ungets the token and returns, so head parsing
@@ -1730,8 +1736,8 @@ def tidy_diagnostics(raw_html: str) -> str:
                         )
                     )
                 head_close_anchor = m.start()
-            # tidy lexes attributes BEFORE the parser can discard the tag
-            # (ADVICE r6 #2): a nested <form a="1" a="2"> still emits its
+            # tidy lexes attributes BEFORE the parser can discard the tag:
+            # a nested <form a="1" a="2"> still emits its
             # class-1 repeated-attribute warning, then the class-6 discard
             seen: dict[str, str] = {}
             has_rel = False
@@ -1758,7 +1764,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                 if name in seen:
                     # the quoted dropped value is the value AS STORED
                     # on the node — entity-DECODED (RepairDuplicate-
-                    # Attributes runs on lexed attvals, r11), matching
+                    # Attributes runs on lexed attvals), matching
                     # what class 21 checks on the kept twin
                     parse_time.append(
                         (
@@ -1783,7 +1789,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                         proprietary.append(
                             (m.start(), f'<{tag}> proprietary attribute "{name}"')
                         )
-                    # class 21 (r11): tidy's CheckUrl (attrs.c) on
+                    # class 21: tidy's CheckUrl (attrs.c) on
                     # URL-typed attributes, slotted per attribute in the
                     # attribute-check phase exactly where the dict's
                     # attrchk runs (after the same attribute's
@@ -1826,9 +1832,8 @@ def tidy_diagnostics(raw_html: str) -> str:
                             # decoded string — an '&#10;'-encoded
                             # newline or '&#32;' space IS a <= 0x20
                             # byte to its escape check, and a
-                            # 'java&#115;cript:' prefix IS javascript:
-                            # (r11, closing the documented
-                            # entity-decoding limit). The raw-newline
+                            # 'java&#115;cript:' prefix IS javascript:.
+                            # The raw-newline
                             # discard above stays raw: it happens in
                             # ParseValue's character loop, which only
                             # sees literal input newlines.
@@ -1864,7 +1869,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                                         "URI reference",
                                     )
                                 )
-                    # class 27 (r11): typed attribute-value checkers
+                    # class 27: typed attribute-value checkers
                     # (attrs.c CH_NUMBER/CH_LENGTH/CH_ALIGN/CH_VALIGN/
                     # CH_CLEAR/CH_SCROLL/CH_TARGET), slotted per
                     # attribute in the attribute-check phase exactly
@@ -1879,7 +1884,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                             tag, name, None if kv27 is None else _decode_entities_tidy(kv27)
                         ):
                             proprietary.append((m.start(), msg27))
-            # class 23 (r11): a BLOCK-level start tag implies closing the
+            # class 23: a BLOCK-level start tag implies closing the
             # open required-end INLINE elements (and an open heading, when
             # the trigger is not itself a heading — heading-vs-heading
             # stays with classes 19/20) above the nearest flow container:
@@ -1893,7 +1898,7 @@ def tidy_diagnostics(raw_html: str) -> str:
             # residual family-2 general form; li/dt/dd/td/th/tr triggers
             # stay out (list/table parsers repair by moving content, the
             # documented scope limit).
-            # class 29 (r12, VERDICT r11 #4 family 6): the p→br coercion
+            # class 29 (residual family 6): the p→br coercion
             # inside preformatted/definition-term content. Tidy handles
             # a <p> START tag specially in TWO places, BEFORE any
             # implied-close machinery sees the token:
@@ -1951,7 +1956,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                         stack.pop()
                     else:
                         break
-            # class 22 (r11): a table-part start tag (tr/td/th) with NO
+            # class 22: a table-part start tag (tr/td/th) with NO
             # <table> open anywhere on the stack — tidy's parser infers
             # the missing table, warning MISSING_STARTTAG ("missing
             # <table>"), anchored at the offending tag. Same non-pushing
@@ -1962,7 +1967,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                 fr[0] == "table" for fr in stack
             ):
                 parse_time.append((m.start(), 0, "missing <table>"))
-            # class 14 (r9): a list item with NO open list container —
+            # class 14: a list item with NO open list container —
             # tidy's parser creates the container and warns INSERTING_TAG
             # ("inserting implicit <ul>"); same for dt/dd vs <dl>. The
             # notice lands while HANDLING the token, i.e. after the
@@ -1974,7 +1979,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                 parse_time.append((m.start(), 0, "inserting implicit <ul>"))
             elif tag in ("dt", "dd") and not any(fr[0] == "dl" for fr in stack):
                 parse_time.append((m.start(), 0, "inserting implicit <dl>"))
-            # class 16 (r9): anchors cannot nest — a new <a> while an <a>
+            # class 16: anchors cannot nest — a new <a> while an <a>
             # is open IMPLIES closing the old one (tidy ParseInline pops
             # the pushed anchor), warning MISSING_ENDTAG_BEFORE for the
             # popped <a> AND for every still-open required-end-tag child
@@ -2003,7 +2008,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                             p[4] = True  # closed subtree = parent content
                         del stack[i:]
                         break
-            # classes 24 + 25 (r11): DIRECT same-tag inline nesting —
+            # classes 24 + 25: DIRECT same-tag inline nesting —
             # tidy's ParseInline same-element check (node->tag ==
             # element->tag, so TOP of stack only; anchors took the
             # class-16 branch above, which is stack-wide):
@@ -2040,7 +2045,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                 parse_time.append(
                     (m.start(), 0, f"nested emphasis <{tag}>")
                 )
-            # class 26 (r11): a <q> start while a q is OPEN — tidy's
+            # class 26: a <q> start while a q is OPEN — tidy's
             # ParseInline EXCLUDES q from the same-tag emphasis branch,
             # so every pushed-q case (direct q-in-q AND q nested deeper,
             # e.g. q > b > q — the check is IsPushed, i.e. anywhere on
@@ -2057,7 +2062,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                 parse_time.append(
                     (m.start(), 0, "nested q elements, possible typo.")
                 )
-            # classes 19 + 20 (r10): headings cannot nest. A new hN start
+            # classes 19 + 20: headings cannot nest. A new hN start
             # while a heading is open implies closing the old one — tidy's
             # ParseBlock heading check:
             #   different tag  -> MISSING_ENDTAG_BEFORE ("missing </h1>
@@ -2125,7 +2130,7 @@ def tidy_diagnostics(raw_html: str) -> str:
             attr_checks.extend(proprietary)
             if tag == "link" and not has_rel:
                 attr_checks.append((m.start(), '<link> lacks "rel" attribute'))
-            # class 28 (r11): element-level missing-attribute reports —
+            # class 28: element-level missing-attribute reports —
             # the other attrs.c element checkers with default-config
             # warnings, in each checker's code order, AFTER the element's
             # per-attribute checks (the checker loops CheckAttribute over
@@ -2192,7 +2197,7 @@ def tidy_diagnostics(raw_html: str) -> str:
                     del stack[i:]
                     break
             else:
-                # class 11 (r8): an end tag with NO matching open element —
+                # class 11: an end tag with NO matching open element —
                 # tidy's parser drops the token, DISCARDING_UNEXPECTED
                 # (same message family as the nested-<form> discard),
                 # anchored at the end tag
@@ -2250,12 +2255,9 @@ def tidy_diagnostics(raw_html: str) -> str:
     return "\n".join(out) + "\n" if out else ""
 
 
-def strict_parse_ok(raw_html: str) -> bool:
-    """The reference's tidy TRIGGER condition (lib.rs:193-207): diagnostics
-    are captured only when the strict quick-xml first pass FAILS; a page
-    the strict parser accepts gets html_errors = "" (tidy never runs).
-
-    quick-xml with ``check_end_names`` rejects exactly XML-style
+def _end_names_balance(raw_html: str) -> bool:
+    """The strict pass's structural check, for a page with no fatal
+    hazard. quick-xml with ``check_end_names`` rejects exactly XML-style
     ill-formedness: an end tag that doesn't match the innermost open
     element, and EOF with elements still open. We replay those conditions
     over the same tag scan tidy_diagnostics uses (comments masked; no
@@ -2263,34 +2265,18 @@ def strict_parse_ok(raw_html: str) -> bool:
     ``<br>`` or ``<meta>`` fails strict exactly as it does upstream, which
     is why real-web pages overwhelmingly take the tidy path while clean
     XHTML passes and reports "")."""
-    if not raw_html:
-        return True
-    # r13: a preserved fatal token (script-interior '<!' bang, scan to
-    # EOF — see quickxml_fatal_hazard) kills the strict pass no matter
-    # how balanced the tag stream is: quick-xml's UnexpectedBang /
-    # UnexpectedEof fire independently of check_end_names. The balance
-    # replay below only models EndEventMismatch.
-    if quickxml_fatal_hazard(raw_html):
-        return False
-    # Comment masking uses the SPEC spans (r12): html5ever consumed the
+    # Comment masking uses the SPEC spans: html5ever consumed the
     # comments (ammonia strips them) before quick-xml ever saw the page,
     # so an unterminated comment hides everything to EOF from the strict
     # replay and the abrupt forms ('<!-->'/'<!--->'/'--!>') close where
     # the spec closes them — tidy's '--\\s*>' rule belongs to the tidy
     # leg only (tidy_diagnostics keeps it).
     comment_spans = _spec_comment_spans(raw_html)
-    # spans are sorted and non-overlapping by construction: binary-search
-    # membership so comment-dense pages stay O(tags log comments) in this
-    # per-page Python pass (the UDF hot path runs it on every record)
-    span_starts = [s for s, _ in comment_spans]
-
-    def _in_comment(pos: int) -> bool:
-        i = bisect.bisect_right(span_starts, pos) - 1
-        return i >= 0 and pos < comment_spans[i][1]
-
+    starts = [s for s, _ in comment_spans]
+    ends = [e for _, e in comment_spans]
     stack: list[str] = []
     for m in _TAG_RE.finditer(raw_html):
-        if _in_comment(m.start()):
+        if _in_spans(starts, ends, m.start()):
             continue
         closing, tag = m.group(1), m.group(2).lower()
         # group 3 can absorb a trailing '/' ("<link .../>"): treat either
@@ -2310,7 +2296,7 @@ def parse_html_py(raw_html: str) -> dict:
     """Parse one document → HTMLResult dict (schema above)."""
     if not raw_html:
         return empty_html_result(ok=False)
-    # The three-state path (r13) steers attribute bytes, duplicate-attr
+    # The three-state path steers attribute bytes, duplicate-attr
     # repair and comment termination inside the extractor, as well as
     # the html_errors trigger (tidy runs — and its stderr is captured —
     # on BOTH non-strict legs, lib.rs:196-207/240), so compute it ONCE
