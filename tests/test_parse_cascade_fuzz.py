@@ -51,6 +51,7 @@ choice is pinned.
 from __future__ import annotations
 
 import random
+import re
 
 from warcraider_spark.functions.html import (
     parse_html_py,
@@ -1226,7 +1227,7 @@ def _ref_tag_end(s: str, lt: int) -> int | None:
 
 def test_rawtext_scan_property():
     """Property pin for _rawtext_scan (the soup classifier's tokenizer)
-    and its regex tag scanner _qx_tag_scan_end: compare the find/regex
+    and its tag scanner _TagScanner.end: compare the find/regex
     fast path against a LITERAL character-by-character transcription of
     the html5ever tokenization it models — NORMAL / TAG(quote-aware) /
     rawtext-to-'</name'+delimiter / spec-comment states — on dense
@@ -1236,7 +1237,7 @@ def test_rawtext_scan_property():
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from warcraider_spark.functions.html import _qx_tag_scan_end, _rawtext_scan
+    from warcraider_spark.functions.html import _rawtext_scan, _TagScanner
 
     RAW = ("script", "style", "noscript", "noframes")
 
@@ -1301,7 +1302,7 @@ def test_rawtext_scan_property():
     @settings(max_examples=600, deadline=None)
     def check(s):
         assert _rawtext_scan(s) == ref_scan(s), s
-        assert _qx_tag_scan_end(s, 0) == _ref_tag_end(s, 0), s
+        assert _TagScanner(s).end(0) == _ref_tag_end(s, 0), s
 
     check()
     # directed shapes at the state seams
@@ -1324,4 +1325,79 @@ def test_rawtext_scan_property():
         "<a" + " b='c'" * (2**20 // 6),          # 1 MB tag with no '>'
     ):
         assert _rawtext_scan(s) == ref_scan(s), s[:80]
-        assert _qx_tag_scan_end(s, 0) == _ref_tag_end(s, 0), s[:80]
+        assert _TagScanner(s).end(0) == _ref_tag_end(s, 0), s[:80]
+
+
+# The tag regexes the scanner replaced, kept as its oracle: _ORACLE_TAG_RE
+# was the element-tag scan of the balance replay and tidy's main pass,
+# _ORACLE_REST_RE quick-xml's tag-end scan in the rawtext and hazard scans.
+_ORACLE_TAG_RE = re.compile(
+    r"<(/?)([a-zA-Z][a-zA-Z0-9]*)((?:[^>\"']|\"[^\"]*\"|'[^']*')*)(/?)>"
+)
+_ORACLE_REST_RE = re.compile(r"""[^"'>]*(?:(?:"[^"]*"|'[^']*')[^"'>]*)*>""")
+
+
+def test_tag_scanner_matches_regex_oracle():
+    """_TagScanner answers every query like the regexes it replaced:
+    ``end(i)`` like _ORACLE_REST_RE from i + 1, ``search(pos)`` like
+    _ORACLE_TAG_RE.search (same span and groups 1-3; the oracle's group
+    4 is always empty, its group 3 keeps a trailing '/'). Strings carry
+    unmatched quotes of both kinds, and the queries of one page run in a
+    random order on one scanner, so answers read from the memo of an
+    earlier failed scan are checked too."""
+    from hypothesis import given, settings
+    from hypothesis import strategies as st
+
+    from warcraider_spark.functions.html import _TagScanner
+
+    @given(
+        st.text(alphabet="<>\"'/ab= \n-!", max_size=60),
+        st.randoms(use_true_random=False),
+    )
+    @settings(max_examples=600, deadline=None)
+    def check(s, rnd):
+        scan = _TagScanner(s)
+        positions = list(range(len(s) + 1))
+        rnd.shuffle(positions)
+        for i in positions:
+            m = _ORACLE_REST_RE.match(s, i + 1)
+            assert scan.end(i) == (m.end() if m else None), (s, i)
+            want = _ORACLE_TAG_RE.search(s, i)
+            got = scan.search(i)
+            if want is None:
+                assert got is None, (s, i)
+                continue
+            assert want.group(4) == ""
+            assert got is not None, (s, i)
+            assert (got.span(), got.group(1, 2, 3)) == (
+                want.span(),
+                want.group(1, 2, 3),
+            ), (s, i)
+
+    check()
+
+
+def test_tag_scans_linear_on_unclosed_tail():
+    """A '>'-free tail of 'a<b' (200 KB) fails the tag scan from every
+    '<'; each failed chain is followed once, so the rawtext scan, the
+    balance replay and tidy's tag pass stay linear. With one regex scan
+    per '<' each took minutes (20 KB: 3-14 s, 4-vCPU host)."""
+    import time
+
+    from warcraider_spark.functions.html import (
+        _end_names_balance,
+        _rawtext_scan,
+        tidy_diagnostics,
+    )
+
+    page = "<script>x</script>" + "a<b" * (200 * 1024 // 3) + "it's"
+    for fn in (_rawtext_scan, _end_names_balance, tidy_diagnostics):
+        t0 = time.perf_counter()
+        fn(page)
+        assert time.perf_counter() - t0 < 1.0, fn.__name__
+    # tidy's missing-quote lexer looks for a '</' only up to the closing
+    # quote: 20,000 quoted attributes with no end tag after them (260 KB)
+    # took 4.4 s when each quote searched for '</' to EOF
+    t0 = time.perf_counter()
+    tidy_diagnostics('<img src="a">' * 20_000)
+    assert time.perf_counter() - t0 < 2.0

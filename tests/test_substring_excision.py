@@ -178,15 +178,15 @@ def test_span_merge_kernel_scattered_input(spark):
 
     rows = [(d, p) for d in (1, 2, 3) for p in (1, 30, 60, 90, 120, 150)]
     cuts = spark.createDataFrame(rows, "doc_id long, p int").repartition(8, "p")
-    got = _merge_spans_arrow(cuts, accounting_only=True).collect()
-    assert sorted((r.doc_id, r.n_spans) for r in got) == [(1, 6), (2, 6), (3, 6)]
+    got = _merge_spans_arrow(cuts).collect()
+    assert sorted((r.doc_id, len(r.spans)) for r in got) == [(1, 6), (2, 6), (3, 6)]
 
 
 def test_span_merge_kernel_batch_spanning_groups(spark):
     """_merge_spans_arrow must merge correctly when one document's cut
     positions span multiple Arrow batches: force 3-row batches and
     compare against a Python interval merge of the same cut stream."""
-    from warcraider_spark.operators.dedup import _merge_spans_arrow
+    from warcraider_spark.operators.dedup import _merge_spans_arrow, _span_accounting
 
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     try:
@@ -201,7 +201,9 @@ def test_span_merge_kernel_batch_spanning_groups(spark):
         }
         acc = {
             (r.doc_id, r.n_spans, r.chars_removed)
-            for r in _merge_spans_arrow(cuts, accounting_only=True).collect()
+            for r in _merge_spans_arrow(cuts)
+            .select("doc_id", *_span_accounting())
+            .collect()
         }
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)

@@ -1,4 +1,4 @@
-"""q062_winnowing_dedup_keep (NEW r13): the end-to-end substring-dedup
+"""q062_winnowing_dedup_keep: the end-to-end substring-dedup
 keep decision — winnowing pairs → connected-component clusters →
 longest-document canonical election — pinned on hand-built corpora
 where the cluster structure and the election are known by construction."""
@@ -111,13 +111,13 @@ def test_plan_shape(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan
     assert "max_by" in plan
-    # the pair stream enters the CC contraction without its cosmetic
-    # global sort (ordered=False): no Sort over (doc_a, doc_b) exists
+    # the composition reads the unordered pair builder, not
+    # winnowing_pairs' ordered output: no Sort over (doc_a, doc_b) exists
     phys = plan.split("== Physical Plan ==")[-1]
     assert "Sort [doc_a" not in phys
 
 
-# --- q063_winnowing_soft_dedup_weights (NEW r13) ---------------------------
+# --- q063_winnowing_soft_dedup_weights ------------------------------------
 
 
 def test_soft_dedup_weights_semantics(spark):

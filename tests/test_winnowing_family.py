@@ -1,4 +1,4 @@
-"""q197_winnowing_family_manifest (NEW r14, VERDICT r13 #4): the
+"""q197_winnowing_family_manifest: the
 composed winnowing dedup family — keep decision + soft-dedup weight +
 excision accounting from ONE shared selector pass. The semantics
 contract is the three standalone operators, so the primary pin is
@@ -136,3 +136,16 @@ def test_family_dictionary_join_regimes(spark):
     assert "ResolvedHint" in dflt._jdf.queryExecution().analyzed().toString()
     assert "ResolvedHint" not in shuf._jdf.queryExecution().analyzed().toString()
     assert sorted(map(tuple, dflt.collect())) == sorted(map(tuple, shuf.collect()))
+
+
+def test_family_one_cluster_aggregation(spark):
+    """Cluster size and canonical survivor come from ONE aggregation on
+    the cluster key (count + max_by over the members joined to their
+    lengths), joined back to the members once."""
+    import re
+
+    docs = _docs(spark, _corpus(11))
+    plan = winnowing_family(docs)._jdf.queryExecution().optimizedPlan().toString()
+    aggs = re.findall(r"Aggregate \[comp#\d+L?\], \[[^\n]*", plan)
+    assert len(aggs) == 1, aggs
+    assert "count(1)" in aggs[0] and "max_by(node" in aggs[0]

@@ -63,28 +63,28 @@ KNOWN_OK_PAIRS = {
     # bucketing policy (o_totalprice div 2000 — ~hundreds of rows).
     ("q102_decile_distribution", "unpartitioned window"),
     ("q102_decile_distribution", "broadcast of unbounded aggregate"),
-    # r13: q063's broadcast side is the (clustered-doc -> cluster-size)
+    # q063's broadcast side is the (clustered-doc -> cluster-size)
     # dictionary — 16 bytes/row over duplicate-cluster MEMBERS only, a
     # small minority of a crawled corpus; the hint is an explicit
     # parameter (broadcast_dictionary) with a documented shuffle-join
     # degradation for the pathological all-duplicates regime, so the
     # broadcast is a declared regime choice, not an unbounded surprise
-    # (operators/dedup.py q063 docstring; plan-CI pins the default).
+    # (operators/dedup.py _join_dictionary; plan-CI pins the default).
     ("q063_winnowing_soft_dedup_weights", "broadcast of unbounded aggregate"),
-    # r13: q088's broadcast side is the (excised-doc -> merged spans)
+    # q088's broadcast side is the (excised-doc -> merged spans)
     # dictionary — only documents carrying non-owned shared fingerprints,
     # each row a doc id + a handful of int pairs; like q063 it is the
     # declared dictionary-fits regime (map-side surgery, zero corpus
     # shuffle), with the same documented degradation path if duplication
     # were pervasive (drop the hint -> doc_id-keyed shuffle join).
     ("q088_exact_substring_excision", "broadcast of unbounded aggregate"),
-    # r14: q197's broadcast side is the family dictionary — the full
+    # q197's broadcast side is the family dictionary — the full
     # outer join of the q063 cluster dictionary and the q088 spans
     # dictionary (one row per clustered-or-excised document, ids +
     # small ints only). Same declared regime as its two parents, same
     # explicit broadcast_dictionary parameter with the documented
     # doc_id-keyed shuffle degradation (operators/dedup.py
-    # winnowing_family docstring; both plan shapes pinned in
+    # _join_dictionary; both plan shapes pinned in
     # tests/test_winnowing_family.py).
     ("q197_winnowing_family_manifest", "broadcast of unbounded aggregate"),
     ("q057_lm_score", "BroadcastNestedLoopJoin"),

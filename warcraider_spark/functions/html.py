@@ -260,12 +260,13 @@ def _rawtext_scan(raw_html: str) -> tuple[list[tuple[int, int]], list[tuple[int,
     span inside script rawtext."""
     spans: list[tuple[int, int]] = []
     comments: list[tuple[int, int]] = []
+    tag_end = _TagScanner(raw_html).end
     pos, n = 0, len(raw_html)
     while (i := raw_html.find("<", pos)) != -1:
         m = _RAWTEXT_OPEN_RE.match(raw_html, i)
         if m:
             tag = m.group(1).lower()
-            gt = _qx_tag_scan_end(raw_html, i)
+            gt = tag_end(i)
             if gt is None:
                 break  # EOF inside the start tag
             close = _RAWTEXT_CLOSE_RE[tag].search(raw_html, gt)
@@ -278,25 +279,97 @@ def _rawtext_scan(raw_html: str) -> tuple[list[tuple[int, int]], list[tuple[int,
             pos = _spec_comment_end(raw_html, i)
             comments.append((i, pos))
             continue
-        end = _qx_tag_scan_end(raw_html, i)
+        end = tag_end(i)
         pos = end if end is not None else i + 1
     return spans, comments
 
 
 # The rest of a tag after its '<', to the first '>' outside quotes
 # (either quote char toggles). Written unrolled: a quote can only be
-# consumed by its own quoted alternative, so a tag with no closing '>'
-# fails in linear time — the looser '(?:[^"\'>]+|…)*' backtracks
-# exponentially on it.
-_QX_TAG_REST_RE = re.compile(r"""[^"'>]*(?:(?:"[^"]*"|'[^']*')[^"'>]*)*>""")
+# consumed by its own quoted alternative, so the match never backtracks
+# (the looser '(?:[^"\'>]+|…)*' backtracks exponentially on a tag with
+# no closing '>'). The optional '>' group makes a tag that never closes
+# a match that stops where its scan failed, instead of a retry at the
+# next '<'.
+_TAG_REST = r"""[^"'>]*(?:(?:"[^"]*"|'[^']*')[^"'>]*)*"""
+_TAG_REST_RE = re.compile(_TAG_REST + "(>)?")
+# an element tag: '/' if an end tag, the name, the rest without its '>'
+# (a trailing '/' of "<link .../>" stays in group 3), then the '>'
+_ELEMENT_TAG_RE = re.compile(r"<(/?)([a-zA-Z][a-zA-Z0-9]*)(" + _TAG_REST + ")(>)?")
+_ELEMENT_OPEN_RE = re.compile(r"</?[a-zA-Z]")
+_QUOTE_OR_GT_RE = re.compile(r"[\"'>]")
 
 
-def _qx_tag_scan_end(doc: str, lt: int) -> int | None:
-    """quick-xml 0.17's read_elem_until: from the '<' at ``lt``, the
-    index just past the first '>' outside quotes; None = EOF inside the
-    tag (Error::UnexpectedEof)."""
-    m = _QX_TAG_REST_RE.match(doc, lt + 1)
-    return m.end() if m else None
+class _TagScanner:
+    """The quote-aware tag scan of one page: quick-xml 0.17's
+    read_elem_until, from a '<' to the first '>' outside quotes.
+
+    A scan that never closes runs to EOF, and so does the scan from every
+    later '<' it passes outside quotes: 'a<b' repeated with no '>' after
+    it costs one EOF scan per '<'. So the C regex serves the scans only
+    until the first one fails. From then on the scanner follows the
+    page's quote and '>' positions and memoizes where the scan from each
+    one ends, so a failed chain settles every '<' that joins it and the
+    page costs linear time."""
+
+    def __init__(self, doc: str):
+        self.doc = doc
+        self._events: list[int] | None = None
+        self._memo: dict[int, int | None] = {}
+
+    def end(self, lt: int) -> int | None:
+        """The index just past the first '>' outside quotes after the
+        '<' at ``lt``; None = EOF inside the tag (quick-xml's
+        Error::UnexpectedEof)."""
+        if self._events is None:
+            m = _TAG_REST_RE.match(self.doc, lt + 1)
+            if m.lastindex:  # the '>' group matched
+                return m.end()
+            self._events = [e.start() for e in _QUOTE_OR_GT_RE.finditer(self.doc)]
+        return self._chain_end(lt + 1)
+
+    def search(self, pos: int) -> re.Match | None:
+        """The first closed element tag starting at or after ``pos``:
+        group 1 '/' for an end tag, group 2 the name (longest
+        alphanumeric run), group 3 the rest before the '>'."""
+        doc = self.doc
+        if self._events is None:
+            m = _ELEMENT_TAG_RE.search(doc, pos)
+            if m is None or m.lastindex == 4:  # the '>' group matched
+                return m
+            self._events = [e.start() for e in _QUOTE_OR_GT_RE.finditer(doc)]
+            pos = m.start()
+        while (m := _ELEMENT_OPEN_RE.search(doc, pos)) is not None:
+            end = self._chain_end(m.start() + 1)
+            if end is not None:
+                return _ELEMENT_TAG_RE.match(doc, m.start(), end)
+            pos = m.start() + 1
+        return None
+
+    def _chain_end(self, start: int) -> int | None:
+        # Outside quotes the scan from ``start`` ends where the scan from
+        # its next quote or '>' ends: a '>' closes it, a quote jumps to
+        # its partner (or fails at EOF) and the scan goes on from there.
+        doc, events, memo = self.doc, self._events, self._memo
+        k = bisect.bisect_left(events, start)
+        path = []
+        end = None
+        while k < len(events):
+            if k in memo:
+                end = memo[k]
+                break
+            e = events[k]
+            if doc[e] == ">":
+                end = e + 1
+                break
+            path.append(k)
+            close = doc.find(doc[e], e + 1)
+            if close == -1:
+                break
+            k = bisect.bisect_right(events, close)
+        for j in path:
+            memo[j] = end
+        return end
 
 
 def quickxml_fatal_hazard(raw_html: str) -> bool:
@@ -349,6 +422,7 @@ def quickxml_fatal_hazard(raw_html: str) -> bool:
             p = h + 1
         return -1
 
+    tag_end = _TagScanner(raw_html).end
     n = len(raw_html)
     for s, e in spans:
         p = s
@@ -372,7 +446,7 @@ def quickxml_fatal_hazard(raw_html: str) -> bool:
                 else:
                     return True  # UnexpectedBang (includes '<!' at EOF)
             else:
-                end = _qx_tag_scan_end(raw_html, q)
+                end = tag_end(q)
                 if end is None:
                     return True
                 p = end
@@ -876,7 +950,6 @@ _TYPED_ATTRS = (
     _NUMBER_ATTRS | _LENGTH_ATTRS | {"align", "valign", "clear", "scrolling", "target"}
 )
 
-_TAG_RE = re.compile(r"<(/?)([a-zA-Z][a-zA-Z0-9]*)((?:[^>\"']|\"[^\"]*\"|'[^']*')*)(/?)>")
 _ATTR_RE = re.compile(
     r"""([a-zA-Z_:][-a-zA-Z0-9_:.]*)\s*(?:=\s*("[^"]*"|'[^']*'|[^\s>]*))?"""
 )
@@ -1450,7 +1523,7 @@ def tidy_diagnostics(raw_html: str) -> str:
         for i in range(m.start(), m.end()):
             masked[i] = 1
 
-    # class 5: missing trailing quote. _TAG_RE cannot usually match a tag
+    # class 5: missing trailing quote. The tag scan cannot usually match a tag
     # whose quoted value runs into '<', so these are found by replaying
     # tidy's attribute lexer LINEARLY over the document: each candidate
     # tag consumes its quote-balanced attribute text (so a '<' inside a
@@ -1462,7 +1535,7 @@ def tidy_diagnostics(raw_html: str) -> str:
     # closing quote, no '</') swallows the rest of the document exactly
     # like tidy's value parser. Both are MISSING_QUOTEMARK, anchored at
     # the element's '<' like class 1. Each breakage records its recovery
-    # point so the main _TAG_RE pass below also resumes at the
+    # point so the main tag pass below also resumes at the
     # interrupting '</' instead of letting a later paired quote swallow
     # real tags into one pseudo-tag (post-breakage tag recovery).
     _tag_start = re.compile(r"<([a-zA-Z][a-zA-Z0-9]*)")
@@ -1484,7 +1557,8 @@ def tidy_diagnostics(raw_html: str) -> str:
             c = raw_html[i]
             if c in "\"'":
                 close = raw_html.find(c, i + 1)
-                lt = raw_html.find("</", i + 1)
+                # only a '</' before the closing quote matters
+                lt = raw_html.find("</", i + 1, n if close == -1 else close)
                 if close == -1 and lt == -1:
                     # unterminated at EOF: the value swallows the rest of
                     # the document (tidy ParseValue reads to EndOfStream) —
@@ -1617,7 +1691,7 @@ def tidy_diagnostics(raw_html: str) -> str:
     # tidy still CREATES the element node from a class-5
     # broken tag (ParseValue ends the value, the token is emitted, the
     # parser opens it), so it participates in class-7/11 accounting.
-    # The broken tag may or may not be visible to _TAG_RE (a later
+    # The broken tag may or may not be visible to the tag scan (a later
     # paired quote forms a pseudo-tag at it; an odd quote count hides it
     # entirely), so the push happens HERE, by document position, as the
     # main pass advances past each breakage — left unclosed it warns
@@ -1675,8 +1749,9 @@ def tidy_diagnostics(raw_html: str) -> str:
                 head_close_anchor = j
                 return
 
+    tags = _TagScanner(raw_html)
     pos = 0
-    while (m := _TAG_RE.search(raw_html, pos)) is not None:
+    while (m := tags.search(pos)) is not None:
         pos = m.end()
         if masked[m.start()]:
             continue
@@ -1690,7 +1765,7 @@ def tidy_diagnostics(raw_html: str) -> str:
         _head_text_check(m.start())
         if m.start() in broken_recovery:
             # class-5 breakage (pseudo-tag case): a later paired quote
-            # made _TAG_RE swallow real tags into one pseudo-tag — the
+            # made the tag scan swallow real tags into one pseudo-tag — the
             # flush above already opened the element; resume at the
             # interrupting '</' exactly like tidy's lexer
             # (post-breakage recovery). text_scan_from stays at the
@@ -1699,15 +1774,10 @@ def tidy_diagnostics(raw_html: str) -> str:
             pos = broken_recovery[m.start()]
             continue
         text_scan_from = max(text_scan_from, m.end())
-        closing, tag, attrs_raw, selfclose = (
-            m.group(1),
-            m.group(2).lower(),
-            m.group(3),
-            m.group(4),
-        )
-        if not selfclose and attrs_raw.rstrip().endswith("/"):
-            # "<x attr/>": group 3 absorbed the slash (see strict_parse_ok)
-            selfclose = "/"
+        closing, tag, attrs_raw = m.group(1), m.group(2).lower(), m.group(3)
+        # "<x attr/>": group 3 keeps the slash (see _end_names_balance)
+        selfclose = attrs_raw.rstrip().endswith("/")
+        if selfclose:
             attrs_raw = attrs_raw.rstrip()[:-1]
         if not closing:
             if tag == "title":
@@ -2275,14 +2345,16 @@ def _end_names_balance(raw_html: str) -> bool:
     starts = [s for s, _ in comment_spans]
     ends = [e for _, e in comment_spans]
     stack: list[str] = []
-    for m in _TAG_RE.finditer(raw_html):
+    scan = _TagScanner(raw_html)
+    pos = 0
+    while (m := scan.search(pos)) is not None:
+        pos = m.end()
         if _in_spans(starts, ends, m.start()):
             continue
         closing, tag = m.group(1), m.group(2).lower()
-        # group 3 can absorb a trailing '/' ("<link .../>"): treat either
-        # an explicit group-4 slash or a '/'-terminated attr blob as
-        # self-closing, like quick-xml's Empty event
-        selfclose = bool(m.group(4)) or m.group(3).rstrip().endswith("/")
+        # a '/'-terminated attr blob ("<link .../>") is self-closing,
+        # like quick-xml's Empty event
+        selfclose = m.group(3).rstrip().endswith("/")
         if closing:
             if not stack or stack[-1] != tag:
                 return False

@@ -1996,7 +1996,7 @@ def q130_cdc_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Winnowing substring-duplicate pairs (r12 — the cross-document repeated-
+# Winnowing substring-duplicate pairs (the cross-document repeated-
 # substring primitive; Schleimer/Wilkerson/Aiken, "Winnowing: Local
 # Algorithms for Document Fingerprinting", SIGMOD 2003 — the MOSS selector)
 # ---------------------------------------------------------------------------
@@ -2196,7 +2196,7 @@ def _winnow_select(base: DataFrame, *, distinct: bool = False) -> DataFrame:
     )
 
 
-def _merge_spans_arrow(cuts: DataFrame, *, accounting_only: bool = False) -> DataFrame:
+def _merge_spans_arrow(cuts: DataFrame) -> DataFrame:
     """Per-document span merge of the excision cut stream as ONE
     vectorized Arrow kernel — no interpreted per-position fold over a
     collected position array.
@@ -2219,10 +2219,9 @@ def _merge_spans_arrow(cuts: DataFrame, *, accounting_only: bool = False) -> Dat
     span while ``p <= prev_p + K`` (equality merges), else opens a new
     span [p, p+K). All arithmetic is exact int32/int64.
 
-    accounting_only=True emits (doc_id, n_spans, chars_removed) directly
-    (the q197 manifest shape); False emits (doc_id, spans) as
-    array<struct<s,e>>, the shape the kept_text reconstruction consumes
-    (q088).
+    Output: (doc_id, spans) with spans an array<struct<s,e>>. The
+    kept_text reconstruction (q088) folds it; the manifest (q197) reads
+    only its size and summed extent (_span_accounting).
     """
     import pyarrow as pa
 
@@ -2259,17 +2258,6 @@ def _merge_spans_arrow(cuts: DataFrame, *, accounting_only: bool = False) -> Dat
         doc_ids = isl_doc[doc_b]
         seg = np.cumsum(doc_b) - 1
         n_spans = np.bincount(seg)
-        if accounting_only:
-            chars = np.bincount(seg, weights=ends - starts).astype(np.int64)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    pa.array(doc_ids, pa.int64()),
-                    pa.array(n_spans, pa.int64()),
-                    pa.array(chars, pa.int64()),
-                ],
-                ["doc_id", "n_spans", "chars_removed"],
-            )
-            return
         offsets = np.concatenate(([0], np.cumsum(n_spans))).astype(np.int32)
         span_structs = pa.StructArray.from_arrays(
             [pa.array(starts.astype(np.int32)), pa.array(ends.astype(np.int32))],
@@ -2280,12 +2268,9 @@ def _merge_spans_arrow(cuts: DataFrame, *, accounting_only: bool = False) -> Dat
             [pa.array(doc_ids, pa.int64()), spans], ["doc_id", "spans"]
         )
 
-    schema = (
-        "doc_id bigint, n_spans bigint, chars_removed bigint"
-        if accounting_only
-        else "doc_id bigint, spans array<struct<s: int, e: int>>"
+    return cuts.repartition("doc_id").mapInArrow(
+        gen, "doc_id bigint, spans array<struct<s: int, e: int>>"
     )
-    return cuts.repartition("doc_id").mapInArrow(gen, schema)
 
 
 def _winnow_pairs_arrow(fp: DataFrame, *, cap: int = WINNOW_DF_CAP) -> DataFrame:
@@ -2381,6 +2366,162 @@ def _winnow_pairs_arrow(fp: DataFrame, *, cap: int = WINNOW_DF_CAP) -> DataFrame
     )
 
 
+# ---------------------------------------------------------------------------
+# Winnowing stage builders: each stage of the five winnowing operators
+# below (q069 pairs, q062 keep, q063 weights, q088 excision, q197 family)
+# is built here once.
+# ---------------------------------------------------------------------------
+
+
+def _spreads(spread_partitions: int | None) -> bool:
+    return spread_partitions is not None and spread_partitions > 1
+
+
+def _winnow_base(
+    docs: DataFrame, spread_partitions: int | None, *, by_doc_id: bool = False
+) -> DataFrame:
+    """The documents long enough to hold one window (>= K + W - 1 chars),
+    spread round-robin, or by doc_id range with ``by_doc_id``.
+
+    spread_partitions (explicit, not an RDD probe): the selector's cost
+    is per character of text (a k-gram ranking per document), so Spark's
+    BYTE-based input splitting undersizes it on small dense files
+    (sf0.1's 581 KB documents.parquet is ONE split → the whole corpus
+    selected on one core). Callers that know the input is byte-dense
+    pass a target (the registry queries pass defaultParallelism — one
+    cheap shuffle of the narrow input rows, documented in the plan-shape
+    pin). At real scale file count ≫ cores, the spread is unnecessary,
+    and the default None keeps the 100 TB plan at zero extra shuffles —
+    the decision is static in the caller, never derived from a plan-time
+    RDD materialization, so the physical plan does not depend on
+    defaultParallelism or file-split layout."""
+    base = docs.filter(F.length("text") >= WINNOW_K + WINNOW_W - 1)
+    if not _spreads(spread_partitions):
+        return base
+    if by_doc_id:
+        return base.repartitionByRange(spread_partitions, "doc_id")
+    return base.repartition(spread_partitions)
+
+
+def _count_pairs(fp: DataFrame) -> DataFrame:
+    """(doc_id, f, …) fingerprint rows → (doc_a, doc_b, n_shared) for the
+    pairs sharing at least two fingerprints: the streaming pair kernel
+    (one f exchange, the df cap applied inside it), then one pair
+    exchange to count. The kernel dedups (doc_id, f) per fingerprint
+    group itself, so a position-annotated stream that repeats f within a
+    document needs no distinct first."""
+    return (
+        _winnow_pairs_arrow(fp.select("doc_id", "f"))
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .filter(F.col("n_shared") >= 2)
+    )
+
+
+def _doc_pairs(docs: DataFrame, spread_partitions: int | None) -> DataFrame:
+    """Unordered winnowing pairs of a (doc_id, text) frame: the selector
+    in distinct mode (one row per distinct fingerprint of a document, not
+    one per selected position, which a repetitive page multiplies), then
+    _count_pairs."""
+    base = _winnow_base(docs, spread_partitions)
+    return _count_pairs(_winnow_select(base, distinct=True))
+
+
+def _clusters(pairs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b) pairs → (node, comp) duplicate clusters, comp the
+    smallest doc_id of the cluster. doc_a < doc_b, distinct and
+    self-loop-free by construction, so the contraction skips its
+    canonicalization shuffle."""
+    from warcraider_spark.operators.graph import contracted_components
+
+    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+    return contracted_components(edges, assume_canonical=True)
+
+
+def _excision_spans(fpos: DataFrame) -> DataFrame:
+    """(doc_id, f, p) selector rows → (doc_id, spans): for every
+    fingerprint shared by 2..df-cap documents the smallest doc_id owns
+    it, every other document cuts the k-char extent at each of its
+    positions, and the span-merge kernel coalesces the cuts per document.
+
+    Ownership is one groupBy on the fingerprint key (min-doc and
+    distinct-doc df in one pass, seam-sized). No distinct on the cut
+    stream: fpos is unique on (doc_id, p) by construction — the kernel
+    emits each selected position once and each position carries exactly
+    one gram — and the stats are unique per f, so the equi-join cannot
+    duplicate a (doc_id, p) row (the oracle's SELECT DISTINCT dedups the
+    same already-unique set)."""
+    stats = (
+        fpos.groupBy("f")
+        .agg(F.countDistinct("doc_id").alias("df"), F.min("doc_id").alias("owner"))
+        .filter((F.col("df") >= 2) & (F.col("df") <= WINNOW_DF_CAP))
+        .select("f", "owner")
+    )
+    cuts = (
+        fpos.join(stats, "f")
+        .filter(F.col("doc_id") != F.col("owner"))
+        .select("doc_id", "p")
+    )
+    return _merge_spans_arrow(cuts)
+
+
+def _span_accounting() -> tuple[Column, Column]:
+    """n_spans and chars_removed of a spans column."""
+    return (
+        F.expr("cast(size(spans) as bigint)").alias("n_spans"),
+        F.expr(
+            "cast(aggregate(spans, 0, (a, iv) -> a + iv.e - iv.s) as bigint)"
+        ).alias("chars_removed"),
+    )
+
+
+def _cluster_weight() -> tuple[Column, Column]:
+    """cluster_size and the soft-dedup weight 1/cluster_size from a
+    nullable cluster size n (null = singleton)."""
+    n = F.coalesce(F.col("n"), F.lit(1))
+    return n.cast("bigint").alias("cluster_size"), (F.lit(1.0) / n).alias("weight")
+
+
+def _join_dictionary(
+    docs: DataFrame,
+    dictionary: DataFrame,
+    columns: tuple[Column, ...],
+    *,
+    spread_partitions: int | None,
+    broadcast_dictionary: bool,
+) -> DataFrame:
+    """One row per document of ``docs``, doc_id-ordered: its doc_id
+    left-joined to a doc_id-keyed dictionary, projected to ``columns``.
+
+    Dictionary-join regime (q063, q197; q088 joins its spans dictionary
+    onto the text the same way): the dictionary holds one row per
+    clustered or excised document. In the common crawled-corpus regime
+    that is a small minority of documents, and broadcast_dictionary=True
+    (default) makes the corpus pass a broadcast join — map-only over
+    100 TB, zero corpus shuffle (plan-shape pinned). When duplication is
+    pervasive (boilerplate-heavy corpora where most documents carry a
+    shared run) the dictionary is O(corpus) and a forced broadcast would
+    be an executor/driver OOM, not a slowdown: pass False and the join
+    degrades honestly to a doc_id-keyed shuffle-hash join — the corpus
+    shuffles once, which is the true cost of that data shape. Output rows
+    are identical in both regimes; only the plan shape changes.
+
+    Under the broadcast regime the narrow (doc_id-only) probe is
+    range-spread by doc_id, so the trailing sort is partition-local: a
+    broadcast join keeps the probe's range layout, and a global orderBy's
+    boundary sampling would re-run the corpus probe pass
+    (lineage.range_presort). The shuffle regime re-partitions by hash and
+    needs the global sort."""
+    if broadcast_dictionary:
+        dictionary = F.broadcast(dictionary)
+    probe = docs.select("doc_id")
+    presorted = broadcast_dictionary and _spreads(spread_partitions)
+    if presorted:
+        probe = probe.repartitionByRange(spread_partitions, "doc_id")
+    out = probe.join(dictionary, "doc_id", "left").select("doc_id", *columns)
+    return out.sortWithinPartitions("doc_id") if presorted else out.orderBy("doc_id")
+
+
 @query(
     "q069_winnowing_dup_pairs",
     oracle=f"""
@@ -2413,8 +2554,8 @@ ORDER BY doc_a, doc_b
 """,
     tags=("dedup", "winnowing", "substring", "fingerprint"),
     min_rows=1,
-    # r13 (VERDICT r12 #4): bench-tagged so the only first-class operator
-    # without a drift-tracked wall time gets a quiet-box band.
+    # bench-tagged: a first-class operator carries a drift-tracked wall
+    # time with a quiet-box band.
     bench=True,
 )
 def q069_winnowing_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2456,11 +2597,10 @@ def winnowing_pairs(
     docs: DataFrame,
     *,
     spread_partitions: int | None = None,
-    ordered: bool = True,
 ) -> DataFrame:
     """The winnowing pair pipeline over any (doc_id, text) frame — shared
     by the registry query and the scale harness's disjoint-replica
-    variant (tools/scale_bench.py).
+    variant (tools/scale_bench.py) — in (doc_a, doc_b) order.
 
     The selected fingerprints leave the map side as xxhash64 bigints —
     an 8-byte shuffle key instead of a 20-char string. Selection itself
@@ -2472,38 +2612,10 @@ def winnowing_pairs(
     distinct fps; equality on random corpora against a pure-Python
     string reference is pinned by tests/test_winnowing_fold.py).
 
-    The selector runs in distinct mode: one (doc_id, f) row per distinct
-    fingerprint of each document, not one per selected position, which a
-    repetitive page multiplies. Pairs come from the streaming Arrow
-    kernel (_winnow_pairs_arrow): one f exchange, the df cap applied
-    inside the kernel, then one pair exchange to count n_shared.
-
-    spread_partitions (explicit, not an RDD probe): the
-    selector's cost is per character of text (a k-gram ranking per
-    document), so Spark's BYTE-based input splitting undersizes it on
-    small dense files (sf0.1's 581 KB documents.parquet is ONE split →
-    the whole corpus selected on one core). Callers that know the input is
-    byte-dense pass a target (the registry query passes
-    defaultParallelism — one cheap round-robin shuffle of the narrow
-    input rows, documented in the plan-shape pin). At real scale file
-    count ≫ cores, the spread is unnecessary, and the default None keeps
-    the 100 TB plan at zero extra shuffles — the decision is static in
-    the caller, never derived from a plan-time RDD materialization, so
-    the physical plan does not depend on defaultParallelism or
-    file-split layout."""
-    base = docs.filter(F.length("text") >= WINNOW_K + WINNOW_W - 1)
-    if spread_partitions is not None and spread_partitions > 1:
-        base = base.repartition(spread_partitions)
-    out = (
-        _winnow_pairs_arrow(_winnow_select(base, distinct=True).select("doc_id", "f"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= 2)
-    )
-    # ordered=False lets compositions (winnowing_dedup_keep) consume the
-    # pair stream without a global sort the next aggregation would
-    # destroy anyway; the registry query keeps the deterministic order.
-    return out.orderBy("doc_a", "doc_b") if ordered else out
+    Built by _doc_pairs (length filter and spread, the selector in
+    distinct mode, _count_pairs); the compositions (q062, q063) read the
+    same pairs unordered."""
+    return _doc_pairs(docs, spread_partitions).orderBy("doc_a", "doc_b")
 
 
 # Oracle-side connected components WITHOUT a naive recursive CTE: the
@@ -2592,8 +2704,8 @@ ORDER BY canonical_doc_id
 """,
     tags=("dedup", "winnowing", "clusters", "e2e"),
     min_rows=1,
-    # r13: bench-tagged from introduction — every first-class operator
-    # carries a drift-tracked wall time (the r12 lesson).
+    # bench-tagged: every first-class operator carries a drift-tracked
+    # wall time.
     bench=True,
 )
 def q062_winnowing_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2640,15 +2752,7 @@ def winnowing_dedup_keep(
 ) -> DataFrame:
     """Cluster winnowing duplicate pairs and elect canonical survivors —
     see q062_winnowing_dedup_keep for semantics and the scale story."""
-    from warcraider_spark.operators.graph import contracted_components
-
-    pairs = winnowing_pairs(
-        docs, spread_partitions=spread_partitions, ordered=False
-    )
-    # doc_a < doc_b, distinct, no self-loops by construction: the CC
-    # contraction can skip its canonicalization shuffle
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    comp = contracted_components(edges, assume_canonical=True)
+    comp = _clusters(_doc_pairs(docs, spread_partitions))
     meta = docs.select(
         F.col("doc_id").alias("node"), F.length("text").alias("n_chars")
     )
@@ -2735,17 +2839,11 @@ def q063_winnowing_soft_dedup_weights(spark: SparkSession, sf_dir: str) -> DataF
     100 TB shape — deliberately DIFFERENT from q062's manifest: the
     cluster machinery runs on the pair graph (corpus-much-smaller),
     and the final corpus pass is a LEFT join of the full documents
-    table against the (clustered-doc → size) dictionary. With
-    broadcast_dictionary=True (default, and the common regime — the
-    dictionary holds only duplicate-cluster MEMBERS at 16 bytes/row,
-    a small minority of a crawled corpus) the pass is a broadcast
-    join: weight assignment over 100 TB is map-only with zero corpus
-    shuffle (plan-shape pinned). When duplication is so pervasive
-    that the dictionary outgrows executor memory, pass False and the
-    join degrades honestly to a doc_id-keyed shuffle-hash join — the
-    corpus shuffles once, which is the true cost of that data shape,
-    not an OOM. Reference scope: no dedup stage upstream (SURVEY §2
-    north-star extension family)."""
+    table against the (clustered-doc → size) dictionary, which holds
+    only duplicate-cluster MEMBERS at 16 bytes/row: broadcast by default
+    (map-only weight assignment), doc_id-keyed shuffle join with
+    broadcast_dictionary=False (see _join_dictionary). Reference scope:
+    no dedup stage upstream (SURVEY §2 north-star extension family)."""
     docs = load_table(spark, sf_dir, "documents")
     return winnowing_soft_dedup_weights(
         docs, spread_partitions=spark.sparkContext.defaultParallelism
@@ -2759,40 +2857,18 @@ def winnowing_soft_dedup_weights(
     broadcast_dictionary: bool = True,
 ) -> DataFrame:
     """Per-document sampling weights from winnowing duplication clusters
-    — see q063_winnowing_soft_dedup_weights for semantics and the
-    broadcast-vs-shuffle dictionary regime."""
-    from warcraider_spark.operators.graph import contracted_components
-
-    pairs = winnowing_pairs(
-        docs, spread_partitions=spread_partitions, ordered=False
-    )
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    comp = contracted_components(edges, assume_canonical=True)
+    — see q063_winnowing_soft_dedup_weights for semantics and
+    _join_dictionary for the broadcast-vs-shuffle dictionary regime."""
+    comp = _clusters(_doc_pairs(docs, spread_partitions))
     sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("n"))
-    weights = comp.join(sizes, "comp").select("node", "n")
-    if broadcast_dictionary:
-        weights = F.broadcast(weights)
-    # range-spread the narrow (doc_id-only) probe so the trailing doc_id
-    # sort is partition-local under the broadcast regime — a global
-    # orderBy's boundary sampling would re-run the corpus probe pass (see
-    # exact_substring_excision / lineage.range_presort)
-    probe = docs.select("doc_id")
-    presorted = (
-        broadcast_dictionary
-        and spread_partitions is not None
-        and spread_partitions > 1
+    weights = comp.join(sizes, "comp").select(F.col("node").alias("doc_id"), "n")
+    return _join_dictionary(
+        docs,
+        weights,
+        _cluster_weight(),
+        spread_partitions=spread_partitions,
+        broadcast_dictionary=broadcast_dictionary,
     )
-    if presorted:
-        probe = probe.repartitionByRange(spread_partitions, "doc_id")
-    out = (
-        probe.join(weights, probe["doc_id"] == weights["node"], "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("n"), F.lit(1)).cast("bigint").alias("cluster_size"),
-            (F.lit(1.0) / F.coalesce(F.col("n"), F.lit(1))).alias("weight"),
-        )
-    )
-    return out.sortWithinPartitions("doc_id") if presorted else out.orderBy("doc_id")
 
 
 @query(
@@ -2886,11 +2962,8 @@ def q088_exact_substring_excision(spark: SparkSession, sf_dir: str) -> DataFrame
     (doc_id, p) cut stream (no window over the corpus); and the
     text re-enters ONCE, via a join of the (excised-doc → spans)
     dictionary against the documents scan — broadcast by default
-    (map-side surgery, zero corpus shuffle; the dictionary holds only
-    documents that lose an extent, a small minority of a crawled
-    corpus), with broadcast_dictionary=False degrading honestly to a
-    doc_id-keyed shuffle join for pervasive-duplication corpora where
-    the dictionary is O(corpus) and a forced broadcast would OOM —
+    (map-side surgery, zero corpus shuffle), a doc_id-keyed shuffle join
+    with broadcast_dictionary=False (the regime of _join_dictionary) —
     reconstruction is an aggregate() fold either way. Reference scope:
     no dedup stage upstream (SURVEY §2 north-star extension family)."""
     docs = load_table(spark, sf_dir, "documents")
@@ -2906,40 +2979,19 @@ def exact_substring_excision(
     broadcast_dictionary: bool = True,
 ) -> DataFrame:
     """Winnowing-sampled exact-substring excision — see
-    q088_exact_substring_excision for semantics and the scale story.
-
-    Dictionary-join regime (mirrors winnowing_soft_dedup_weights): the
-    (excised-doc → spans) dictionary has one row per document that
-    loses at least one extent. In the common crawled-corpus regime
-    that is a small minority of documents and
-    broadcast_dictionary=True (default) keeps the text pass map-only —
-    surgery over 100 TB with zero corpus shuffle. When duplication is
-    pervasive (boilerplate-heavy corpora where most documents carry a
-    shared run), the dictionary is O(corpus) and a forced broadcast
-    would be an executor/driver OOM, not a slowdown: pass False and
-    the join degrades honestly to a doc_id-keyed shuffle-hash join —
-    the corpus shuffles once, which is the true cost of that data
-    shape. Output rows are identical in both regimes; only the plan
-    shape changes (both pinned in tests/test_substring_excision.py)."""
-    K, W = WINNOW_K, WINNOW_W
-    base = docs.filter(F.length("text") >= K + W - 1)
+    q088_exact_substring_excision for semantics and the scale story,
+    and _join_dictionary for the dictionary-join regime: the
+    (excised-doc → spans) dictionary has one row per document that loses
+    at least one extent. Output rows are identical in both regimes; both
+    plan shapes are pinned in tests/test_substring_excision.py."""
     # Under the broadcast regime the surgery pass probes `base` map-side
     # and the declared output is doc_id-ordered — range-spread by doc_id
     # (instead of round-robin) so the trailing global sort degenerates to
     # sortWithinPartitions and its boundary sampling does not RE-RUN the
     # whole probe+fold subtree (lineage.range_presort rationale; ~0.9 s
     # of the q088 bench time).
-    presorted = (
-        broadcast_dictionary
-        and spread_partitions is not None
-        and spread_partitions > 1
-    )
-    if spread_partitions is not None and spread_partitions > 1:
-        base = (
-            base.repartitionByRange(spread_partitions, "doc_id")
-            if presorted
-            else base.repartition(spread_partitions)
-        )
+    presorted = broadcast_dictionary and _spreads(spread_partitions)
+    base = _winnow_base(docs, spread_partitions, by_doc_id=presorted)
     # Materialize the selector output once. Unlike winnowing_pairs (where
     # every fp consumer sits above an identical f-keyed exchange that AQE
     # reuse deduplicates), the two fpos consumers here are a partial
@@ -2948,24 +3000,7 @@ def exact_substring_excision(
     # consumer. The cut stores the narrow (doc_id, f, p) stream (~20 B/row,
     # ~2/(W+1) of the k-grams) and both consumers read blocks — the same
     # shape as winnowing_family.
-    fpos = _winnow_select(base).transform(cut_lineage)
-    stats = (
-        fpos.groupBy("f")
-        .agg(F.countDistinct("doc_id").alias("df"), F.min("doc_id").alias("owner"))
-        .filter((F.col("df") >= 2) & (F.col("df") <= WINNOW_DF_CAP))
-        .select("f", "owner")
-    )
-    # No distinct on the cut stream: fpos is unique on (doc_id, p) by
-    # construction — the kernel emits each selected position once and
-    # each position carries exactly one gram — and stats is unique per f,
-    # so the equi-join cannot duplicate a (doc_id, p) row (the oracle's
-    # SELECT DISTINCT dedups the same already-unique set).
-    cuts = (
-        fpos.join(stats, "f")
-        .filter(F.col("doc_id") != F.col("owner"))
-        .select("doc_id", "p")
-    )
-    spans = _merge_spans_arrow(cuts)
+    spans = _excision_spans(_winnow_select(base).transform(cut_lineage))
     if broadcast_dictionary:
         spans = F.broadcast(spans)
     out = (
@@ -2973,10 +3008,7 @@ def exact_substring_excision(
         .join(spans, "doc_id")
         .select(
             "doc_id",
-            F.expr("cast(size(spans) as bigint)").alias("n_spans"),
-            F.expr(
-                "cast(aggregate(spans, 0, (a, iv) -> a + iv.e - iv.s) as bigint)"
-            ).alias("chars_removed"),
+            *_span_accounting(),
             F.expr(
                 """aggregate(
                      spans,
@@ -3134,98 +3166,50 @@ def winnowing_family(
     storage) and every downstream branch — the pair kernel (which
     applies the df cap itself), the CC clustering, the fingerprint
     stats and the ownership cuts — reads that materialization instead
-    of re-amplifying the text; the span merge is the same Arrow kernel
-    as exact_substring_excision's, in accounting-only form. The
-    corpus text never shuffles: it re-enters only as narrow
-    projections — (doc_id, n_chars) for the election, (doc_id) for
-    the final manifest join — and the family dictionary (one row per
-    clustered-or-excised document, a small minority of a crawled
-    corpus) broadcasts onto the documents scan by default;
-    broadcast_dictionary=False degrades honestly to a doc_id-keyed
-    shuffle join for pervasive-duplication corpora (same regime
-    contract as winnowing_soft_dedup_weights / exact_substring_excision).
+    of re-amplifying the text; the ownership, cuts and span merge are
+    exact_substring_excision's stages, read for their accounting only.
+    The corpus text never shuffles: it re-enters only as narrow
+    projections — (doc_id, n_chars) for the election, (doc_id) for the
+    final manifest join — and the family dictionary (one row per
+    clustered-or-excised document) joins onto the documents scan under
+    the regime of _join_dictionary.
     """
-    from warcraider_spark.operators.graph import contracted_components
-
-    K, W = WINNOW_K, WINNOW_W
-    base = docs.filter(F.length("text") >= K + W - 1)
-    if spread_partitions is not None and spread_partitions > 1:
-        base = base.repartition(spread_partitions)
+    base = _winnow_base(docs, spread_partitions)
     # THE shared selector pass (see _winnow_select): materialized once,
     # read by every branch.
     fpos = _winnow_select(base).transform(cut_lineage)
-    # Fingerprint stats for excision ownership: df cap + owner in one
-    # aggregation (seam-sized). Only the cuts branch reads it, so it is
-    # not materialized; the pair kernel applies the df cap itself.
-    stats = (
-        fpos.groupBy("f")
-        .agg(F.countDistinct("doc_id").alias("df"), F.min("doc_id").alias("owner"))
-        .filter((F.col("df") >= 2) & (F.col("df") <= WINNOW_DF_CAP))
-        .select("f", "owner")
-    )
     # Branch 1: candidate pairs (q069 semantics) -> clusters (q062/q063).
-    # The kernel dedups (doc_id, f) per fingerprint group itself (fpos CAN
-    # repeat f within a doc at different positions) and applies the 2..cap
-    # df guard — the same df as stats' distinct doc count, with no
-    # .distinct() and no stats join.
-    pairs = (
-        _winnow_pairs_arrow(fpos.select("doc_id", "f"))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .filter(F.col("n_shared") >= 2)
-    )
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    comp = contracted_components(edges, assume_canonical=True)
-    sizes = comp.groupBy("comp").agg(F.count(F.lit(1)).alias("n"))
+    comp = _clusters(_count_pairs(fpos))
+    # Size and canonical survivor in one aggregation on the cluster key.
+    # count() over the join equals the cluster size: every clustered
+    # node is a row of base, and doc_id is unique.
     meta = base.select(F.col("doc_id").alias("node"), F.length("text").alias("n_chars"))
-    canon = (
+    clusters = (
         comp.join(meta, "node")
         .groupBy("comp")
-        .agg(F.expr("max_by(node, struct(n_chars, -node))").alias("canon"))
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.expr("max_by(node, struct(n_chars, -node))").alias("canon"),
+        )
     )
-    clustered = comp.join(sizes, "comp").join(canon, "comp").select("node", "n", "canon")
+    clustered = comp.join(clusters, "comp").select(
+        F.col("node").alias("doc_id"), "n", "canon"
+    )
     # Branch 2: excision accounting (q088 semantics, accounting columns).
-    # No distinct: fpos is unique on (doc_id, p) by construction and stats
-    # is unique per f — see exact_substring_excision.
-    cuts = (
-        fpos.join(stats, "f")
-        .filter(F.col("doc_id") != F.col("owner"))
-        .select("doc_id", "p")
-    )
-    # Accounting-only span merge: no struct arrays ever materialize — the
-    # manifest needs only n_spans/chars_removed.
-    excise = _merge_spans_arrow(cuts, accounting_only=True)
+    excise = _excision_spans(fpos).select("doc_id", *_span_accounting())
     # The family dictionary: one row per clustered-or-excised document.
-    fam = (
-        clustered.select(F.col("node").alias("doc_id"), "n", "canon")
-        .join(excise, "doc_id", "full")
-    )
-    if broadcast_dictionary:
-        fam = F.broadcast(fam)
-    # range-spread the narrow probe; partition-local sort IS the doc_id
-    # order under the broadcast regime (see
-    # winnowing_soft_dedup_weights)
-    probe = docs.select("doc_id")
-    presorted = (
-        broadcast_dictionary
-        and spread_partitions is not None
-        and spread_partitions > 1
-    )
-    if presorted:
-        probe = probe.repartitionByRange(spread_partitions, "doc_id")
-    out = (
-        probe.join(fam, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("n"), F.lit(1)).cast("bigint").alias("cluster_size"),
-            (F.lit(1.0) / F.coalesce(F.col("n"), F.lit(1))).alias("weight"),
+    fam = clustered.join(excise, "doc_id", "full")
+    return _join_dictionary(
+        docs,
+        fam,
+        (
+            *_cluster_weight(),
             F.coalesce(F.col("doc_id") == F.col("canon"), F.lit(True)).alias(
                 "is_canonical"
             ),
-            F.coalesce(F.col("n_spans"), F.lit(0)).cast("bigint").alias("n_spans"),
-            F.coalesce(F.col("chars_removed"), F.lit(0)).cast("bigint").alias(
-                "chars_removed"
-            ),
-        )
+            F.coalesce(F.col("n_spans"), F.lit(0)).alias("n_spans"),
+            F.coalesce(F.col("chars_removed"), F.lit(0)).alias("chars_removed"),
+        ),
+        spread_partitions=spread_partitions,
+        broadcast_dictionary=broadcast_dictionary,
     )
-    return out.sortWithinPartitions("doc_id") if presorted else out.orderBy("doc_id")

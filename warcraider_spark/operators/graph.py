@@ -347,7 +347,7 @@ def _sym(df: DataFrame) -> DataFrame:
     """Both orientations of an (a, b) edge table in ONE read — an explode
     of the two structs instead of a union of two scans, so upstream
     subtrees are never executed twice and need no mid-round
-    materialization (r8, VERDICT r7 #5)."""
+    materialization."""
     return df.select(
         F.explode(
             F.array(
@@ -368,9 +368,9 @@ def alternating_components(
     small-star contraction (Kiveris et al., "Connected Components in
     MapReduce and Beyond", SoCC'14 — public algorithm, reimplemented).
 
-    Each half-round is ONE shuffle (r8, VERDICT r7 #5): the
-    min-per-neighborhood m(u) = min(N(u) ∪ {u}) comes from a window over
-    partitionBy(u) instead of the r7 groupBy+join pair, and each
+    Each half-round is ONE shuffle: the min-per-neighborhood
+    m(u) = min(N(u) ∪ {u}) comes from a window over partitionBy(u)
+    instead of a groupBy+join pair, and each
     intermediate edge table is read exactly once via the ``_sym``
     explode — so the large-star half needs no mid-round lineage cut.
       large-star: every neighbor v > u re-attaches to m(u)
@@ -391,8 +391,8 @@ def alternating_components(
     window shape is scale-safe: partitionBy(u) is the same hash shuffle
     the groupBy took, with no per-partition sort (the min window is
     unbounded and the (u, m) emission keys on v == min, not row_number).
-    No persist handles remain (the r7 initial-edge persist died with the
-    union-of-two-reads it served — ADVICE r7 #3 moot here)."""
+    No persist handle is needed: ``_sym`` reads each edge table once,
+    where a union of two reads would have to cache the initial edges."""
     from pyspark.sql import Observation
     from pyspark.sql.window import Window
 
@@ -464,10 +464,10 @@ def alternating_components(
         # contract further), so break WITHOUT the confirming round the
         # signature compare needs. This is the common case under
         # contracted_components: with id-local partitioning the residual
-        # seam graph is often EMPTY, and the old loop still paid two full
-        # rounds (2 window shuffles + eager cut + observe each) on zero
-        # rows — measured 2 rounds of (0, None) at sf0.1 for every CC
-        # bench query (r14, guide §2.4).
+        # seam graph is often EMPTY, and the signature compare alone would
+        # pay two full rounds (2 window shuffles + eager cut + observe
+        # each) on zero rows — measured 2 rounds of (0, None) at sf0.1 for
+        # every CC bench query.
         if cur == prev_sig or cur[0] == 0:
             break
         prev_sig = cur
@@ -524,7 +524,7 @@ def contracted_components(
     residual graph grows toward |E| and the algorithm degrades gracefully
     toward plain alternating CC.
 
-    SIDE EFFECT (r14/r15, VERDICT r14 note #4): calling this function
+    SIDE EFFECT: calling this function
     RUNS Spark jobs eagerly — the local union-find and the seam graph are
     materialized (eager checkpoint + Observation) at plan-construction
     time, before any caller action. Batch-only by design; do not wrap it
@@ -594,10 +594,10 @@ def contracted_components(
         .select(F.col("y").alias("src"), F.col("x").alias("dst"))
         .distinct()
     )
-    # r14 (guide §2.4): materialize the seam graph with an observed count.
-    # Under id-local partitioning the residual is often EMPTY (true for
-    # every CC bench query at sf0.1 — the contraction collapses each
-    # range partition's chains whole), and the old code still paid two
+    # Materialize the seam graph with an observed count. Under id-local
+    # partitioning the residual is often EMPTY (true for every CC bench
+    # query at sf0.1 — the contraction collapses each range partition's
+    # chains whole), and running the rounds regardless would pay two
     # full alternating rounds plus a left join on zero rows. When no
     # seams exist, every local root IS the global component id. When they
     # do, the rounds read the materialized links blocks instead of
@@ -610,7 +610,7 @@ def contracted_components(
         links.observe(obs, F.count(F.lit(1)).alias("n"))
     )
     if obs.get["n"] == 0:
-        # ADVICE r14 #1: record the observed empty residual as a sentinel
+        # Record the observed empty residual as a sentinel
         # round so diagnostic callers reading rounds_out still see that
         # the seam graph was checked (and found empty) instead of a
         # silent no-signal; the rounds contract stays "one entry per
@@ -667,12 +667,12 @@ def q134_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     found exactly the true components — including that bridged chains
     merged and unbridged ones did not (min_rows guards vacuity).
 
-    100 TB shape (r11): ``contracted_components`` — one range shuffle +
+    100 TB shape: ``contracted_components`` — one range shuffle +
     one Arrow-batched partition-local union-find pass collapses every
     intra-partition edge map-side; the alternating large-star/small-star
     rounds (each ONE window shuffle on a uniform key, one eager lineage
-    cut whose materialization doubles as the convergence-checksum action
-    — r8, VERDICT r7 #5) then run on the residual cross-partition seam
+    cut whose materialization doubles as the convergence-checksum
+    action) then run on the residual cross-partition seam
     graph only, so the O(log n) iterative rounds touch seam-sized data
     instead of the full edge set. chain_edges emits src < dst, deduped,
     self-loop-free BY CONSTRUCTION (consecutive/bridge doc_ids), so the
