@@ -136,15 +136,14 @@ def main() -> None:
         "q060_token_stats",
     ]
     comparable_total = round(sum(timings[q] for q in comparable if q in timings), 3)
-    # r14 (VERDICT r13 #3): the driver records only the LAST 2000 bytes
-    # of this line; r12/r13 embedded the per-query diagnostic blocks
-    # (spread, bands) and the line never parsed whole ("parsed": null)
-    # even after key reordering. The stdout line now carries ONLY the
-    # parseable essentials — per-query medians, headline total, frozen
-    # comparable subset, and the (normally empty) re-run list — and the
-    # bulky diagnostics move to a side artifact the judge can open:
-    # tools/bench_last_run.json (spread + reference bands + reran, same
-    # content as before). Reference bands stay in tools/bench_bands.json.
+    # A reader of this line may keep only its LAST 2000 bytes, and with the
+    # per-query diagnostic blocks (spread, bands) embedded it no longer
+    # parsed whole. The stdout line carries ONLY the parseable essentials
+    # — per-query medians, headline total, frozen comparable subset, and
+    # the (normally empty) re-run list — and the bulky diagnostics go to
+    # a side artifact: tools/bench_last_run.json (spread + reference
+    # bands + reran, plus the run's width so the file reads on its own).
+    # Reference bands stay in tools/bench_bands.json.
     diag_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "tools", "bench_last_run.json"
     )
@@ -162,6 +161,8 @@ def main() -> None:
                     "queries": timings,
                     "total": total,
                     "comparable_subset": comparable_total,
+                    "cpus": cpus,
+                    "shuffle_partitions": shuffle_parts,
                     "sf": sf_dir,
                 },
                 fh,

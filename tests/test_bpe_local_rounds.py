@@ -1,10 +1,10 @@
-"""r14: the BPE merge rounds run executor-LOCALLY by default (one task
-over the ≤BPE_VOCAB_TOP-row vocabulary) instead of one distributed
-pair-count shuffle + top-1 + broadcast-replace trio per round. These
-tests pin that the local path is output-identical to the distributed
-loop — merges AND final segmented words — on the real corpus and on a
-constructed tie-heavy vocabulary, and that the empty-vocabulary edge
-emits zero rows rather than erroring."""
+"""The BPE merge rounds run executor-locally (one task over the
+≤BPE_VOCAB_TOP-row vocabulary). These tests pin that trainer against a
+distributed per-round reference kept here — one pair-count shuffle +
+top-1 + broadcast-replace per round — on the real corpus vocabulary and
+on a constructed tie-heavy vocabulary (merges AND final segmented
+words), and that the empty-vocabulary edge emits zero rows rather than
+erroring."""
 
 from __future__ import annotations
 
@@ -12,7 +12,31 @@ from warcraider_spark.operators.text import (
     BPE_MERGES,
     _bpe_rounds_local,
     _bpe_train,
+    _bpe_vocab,
 )
+
+
+def _pair_counts(words):
+    """Adjacent-pair counts over the wrapped-word table: unwrap to the
+    symbol array, zip-with-next, weight by word frequency."""
+    from pyspark.sql import functions as F
+
+    syms = F.split(F.regexp_replace("s", "^<|>$", ""), "><")
+    return (
+        words.select(syms.alias("syms"), "cnt")
+        .filter(F.size("syms") >= 2)
+        .select(
+            F.explode(
+                F.expr(
+                    "transform(sequence(1, size(syms) - 1),"
+                    " k -> struct(syms[k - 1] AS l, syms[k] AS r))"
+                )
+            ).alias("p"),
+            "cnt",
+        )
+        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+        .agg(F.sum("cnt").alias("pc"))
+    )
 
 
 def _distributed_rounds_on(spark, words_rows):
@@ -20,7 +44,6 @@ def _distributed_rounds_on(spark, words_rows):
     from pyspark.sql import functions as F
 
     from warcraider_spark.lineage import cut_lineage
-    from warcraider_spark.operators.text import _bpe_pair_counts
 
     words = spark.createDataFrame(words_rows, "s string, cnt long").transform(
         cut_lineage
@@ -28,7 +51,7 @@ def _distributed_rounds_on(spark, words_rows):
     merges = []
     for i in range(1, BPE_MERGES + 1):
         best = (
-            _bpe_pair_counts(words)
+            _pair_counts(words)
             .orderBy(F.desc("pc"), "l", "r")
             .limit(1)
             .transform(cut_lineage)
@@ -54,17 +77,12 @@ def _distributed_rounds_on(spark, words_rows):
 
 
 def test_local_equals_distributed_on_corpus(spark, sf_correct):
-    words_df, merge_rows = _bpe_train(spark, sf_correct, distributed_rounds=True)
-    dist_merges = sorted(
-        tuple(r)
-        for m in merge_rows
-        for r in m.collect()
-    )
-    dist_final = sorted((r["s"], r["cnt"]) for r in words_df.collect())
+    vocab = [(r["s"], r["cnt"]) for r in _bpe_vocab(spark, sf_correct).collect()]
+    dist_final, dist_merges = _distributed_rounds_on(spark, vocab)
 
-    lwords_df, lmerges = _bpe_train(spark, sf_correct)
-    local_merges = sorted(tuple(r) for m in lmerges for r in m.collect())
-    local_final = sorted((r["s"], r["cnt"]) for r in lwords_df.collect())
+    words_df, merges_df = _bpe_train(spark, sf_correct)
+    local_merges = sorted(tuple(r) for r in merges_df.collect())
+    local_final = sorted((r["s"], r["cnt"]) for r in words_df.collect())
 
     assert local_merges == dist_merges
     assert local_final == dist_final
@@ -103,6 +121,6 @@ def test_empty_vocabulary_emits_zero_rows(spark, tmp_path):
                   "lang": pa.array([], "string")}),
         str(d / "documents.parquet"),
     )
-    words_df, merge_rows = _bpe_train(spark, str(d))
-    assert merge_rows[0].count() == 0
+    words_df, merges_df = _bpe_train(spark, str(d))
+    assert merges_df.count() == 0
     assert words_df.count() == 0

@@ -377,23 +377,6 @@ def test_rollup_layers_reaggregate_partials(spark):
     assert plan.count("HashAggregate") >= 12  # >= 6 nodes: 3 layers x 2 phases
 
 
-def test_bpe_pair_counts_partial_final(spark):
-    """q040: the per-round pair count must partial-aggregate before its one
-    exchange on the uniform (l, r) key — per merge round the shuffle moves
-    bounded partial counts over the vocabulary, never the corpus. Asserted
-    on the round subplan (the full q040 plan hides rounds behind
-    localCheckpoint leaves)."""
-    from warcraider_spark.operators.text import _bpe_pair_counts
-
-    words = spark.createDataFrame(
-        [("<l><o><w>", 5), ("<l><o><g>", 3)], "s string, cnt long"
-    )
-    plan = plan_of(_bpe_pair_counts(words))
-    assert "partial_sum" in plan
-    assert plan.count("hashpartitioning") == 1
-    assert "Join" not in plan
-
-
 def test_duplicate_spans_single_shuffle_topk(spark):
     """q133: span discovery is pure aggregation — ONE hash exchange on the
     gram key (count-distinct expands to a two-phase agg on that same key),
@@ -691,9 +674,9 @@ BUILD_TIME_EXECUTION_OK = {
     # convergence check) is the operator's documented contract
     "q159_pagerank": "fixed-round power iteration, per-round reliable lineage cut",
     "q134_connected_components": "r11 hybrid: eager node→root mapping materialization + residual large/small-star loop with data-dependent convergence check",
-    "q040_bpe_merge_train": "per-round best-pair selection is data-dependent",
+    "q040_bpe_merge_train": "cut_lineage materializes the bounded BPE vocabulary table at build, read by the executor-local merge rounds (q023 contract)",
     "q046_kmeans_codebook": "per-round assign/update with reliable lineage cuts",
-    "q141_bpe_encode": "replays the q040 merge-train loop to build the vocab",
+    "q141_bpe_encode": "trains the q040 merges to segment the vocabulary: same build-time vocabulary cut (q023 contract)",
     "q142_pq_encode": "per-subspace k-means loops (q046 contract)",
     "q151_semantic_dedup": "k-means clustering loop (q046 contract)",
     "q099_dedup_clusters": "connected-components loop (q134 contract)",

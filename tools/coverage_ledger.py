@@ -3,8 +3,8 @@ which driver round each registry query last held a green CORRECTNESS row,
 so window staleness is visible at a glance and rotations are auditable.
 
 Queries are keyed by their name SUFFIX (everything after the qNNN_ prefix):
-every renumber rotation (tools/renumber.py + its per-round mapping files
-under tools/renumber_maps/) preserves suffix<->content identity while
+every renumber rotation (the one-shot renumber tool and its per-round
+mapping files, now in git history) preserved suffix<->content identity while
 swapping slot numbers, so a suffix seen green in CORRECTNESS_r01.json under
 an old number is the same operator content as today's query with that
 suffix. Suffixes are unique across the registry (asserted).

@@ -76,13 +76,12 @@ def q060_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The BPE-ish subword count variant is q087's token_per_char; this is the
     reference's exact word_count tokenizer (main.rs:468-471) — Unicode
-    split_whitespace as of r11, so empty/whitespace-only docs count 0
-    tokens (was 1 under the old trim+split convention).
+    split_whitespace, so empty/whitespace-only docs count 0 tokens.
     """
     # range_presort + sortWithinPartitions, not a trailing orderBy: the
     # per-doc HOF work then runs ONCE (no range-boundary sampling re-run)
-    # and in parallel (the local single-row-group scan is one task) — r14,
-    # see lineage.range_presort.
+    # and in parallel (the local single-row-group scan is one task) — see
+    # lineage.range_presort. The other per-doc text queries do the same.
     docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")
     tok = unicode_tokens("text")
     tok_lens = F.transform(tok, lambda t: F.length(t).cast("double"))
@@ -193,7 +192,7 @@ ORDER BY doc_id
 def q087_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length/diversity/word-shape composite with buckets
     (the heuristic-filter stage of a training-data pipeline)."""
-    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")  # r15 §C sweep
+    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")
     tok = tokens("text")
     n = F.size(tok)
     # intermediates rounded to 4 BEFORE the composite so quality is
@@ -220,9 +219,9 @@ def q087_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _NORM_SQL = (
     # lower + case-fold canon (ς→σ, i+U+0307→i): see functions.textfn.norm_text;
-    # [\s\v] = Java \s (RE2's \s lacks U+000B — r9 BMP whitespace sweep);
+    # [\s\v] = Java \s (RE2's \s lacks U+000B);
     # trim(…, ' ') NOT bare trim: DuckDB's bare trim strips Unicode
-    # whitespace, Spark's F.trim strips ASCII space only (r11 finding)
+    # whitespace, Spark's F.trim strips ASCII space only
     r"trim(regexp_replace(replace(replace(lower(text), 'ς', 'σ'), 'i̇', 'i'),"
     r" '[\s\v]+', ' ', 'g'), ' ')"
 )
@@ -241,7 +240,7 @@ ORDER BY doc_id
 def q089_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact document fingerprint: md5 of normalized text, plus the portable
     60-bit integer form used by minhash/simhash."""
-    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")  # r15 §C sweep
+    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")
     return (
         docs.select(
             "doc_id",
@@ -254,7 +253,7 @@ def q089_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q192_shingle_fingerprint",
-    # shingles_sql carries the r8 short-doc CASE guard (whole doc as one
+    # shingles_sql carries the short-doc CASE guard (whole doc as one
     # shingle below k, matching Spark's concat_ws semantics) — the former
     # inline greatest(len-2,1) form NULLed sub-3-token docs' shingles
     oracle=f"""
@@ -274,7 +273,7 @@ def q192_shingle_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from warcraider_spark.functions.textfn import shingles
 
-    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")  # r15 §C sweep
+    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")
     sh = shingles(tokens("text"), 3)
     return (
         docs.select(
@@ -299,22 +298,21 @@ ORDER BY doc_id
 def q064_word_count_ref(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's word_count operator verbatim: Unicode
     split_whitespace token count as i32, 0 for empty
-    (/root/reference/src/main.rs:468-471; r11 Unicode class fix)."""
-    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")  # r15 §C sweep
+    (/root/reference/src/main.rs:468-471)."""
+    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")
     return docs.select("doc_id", word_count("text").cast("long").alias("word_count")).sortWithinPartitions("doc_id")
 
 
 # ---------------------------------------------------------------------------
-# Distributed RAKE (the reference's flagship per-document aggregation,
-# SURVEY §2.6, re-expressed as explode/groupBy — oracle replicates the
-# whole algorithm in DuckDB SQL)
+# RAKE (the reference's flagship per-document operator, SURVEY §2.6 — the
+# oracle replicates the whole algorithm in DuckDB SQL)
 # ---------------------------------------------------------------------------
 
 def _rake_oracle_sql() -> str:
     from warcraider_spark.functions.stopwords import SMART_STOPWORDS
 
     stoplist = ", ".join("'" + w.replace("'", "''") + "'" for w in sorted(SMART_STOPWORDS))
-    # Rust \s = Unicode White_Space; RE2 needs the explicit class (r11)
+    # Rust \s = Unicode White_Space; RE2 needs the explicit class
     punc = rf"[^\P{{P}}-]|{DUCK_UWS}+-{DUCK_UWS}+"
     num = r"-?\p{N}+[./٫,'']?\p{N}*"
     return f"""
@@ -374,16 +372,22 @@ ORDER BY d.doc_id, keyword
     bench=True,
 )
 def q043_rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed RAKE (functions.rake.rake_native): the reference's
-    keyword operator (src/rake/rake.rs) as explode/groupBy — the DuckDB
+    """RAKE keywords (src/rake/rake.rs): the ETL's per-document kernel
+    (functions.rake.rake_keywords_udf) exploded to (doc_id, keyword,
+    score) rows, map-side. The input is range-presorted on doc_id, so
+    the kernel runs once, after the only exchange, and the presentation
+    sort is partition-local (see lineage.range_presort). The DuckDB
     oracle re-implements the full algorithm independently in SQL."""
-    from warcraider_spark.functions.rake import rake_native
+    from warcraider_spark.functions.rake import rake_keywords_udf
 
-    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200).select("doc_id", "text")
+    rake = rake_keywords_udf()
+    docs = range_presort(
+        load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 200), "doc_id"
+    )
     return (
-        rake_native(docs)
+        docs.select("doc_id", F.explode(rake(F.col("text"))).alias("keyword", "score"))
         .select("doc_id", "keyword", F.round("score", 4).alias("score"))
-        .orderBy("doc_id", "keyword")
+        .sortWithinPartitions("doc_id", "keyword")
     )
 
 
@@ -421,7 +425,7 @@ def q191_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = table_row_count(sf_dir, "documents")  # footer count, no job
     idf = F.log((F.lit(n_docs) + 1.0) / (F.col("df") + 1.0)) + 1.0
     # No broadcast hint on df: at 100 TB the token vocabulary is far beyond
-    # driver/broadcast limits (VERDICT r1 #4). The join key is uniform, so
+    # driver/broadcast limits. The join key is uniform, so
     # AQE picks broadcast when df is actually small and SMJ when it isn't.
     return (
         tf.join(df, "tok")
@@ -442,8 +446,7 @@ WITH t AS (
 ),
 -- len(ts) > 0 mirrors the engine's empty-vector exclusion: MinHashLSH
 -- REQUIRES >= 1 non-zero entry (an empty token set has no minhash), so
--- token-less docs carry no sketch on either side (r8 adversarial sweep;
--- corpus-unreachable)
+-- token-less docs carry no sketch on either side (corpus-unreachable)
 g AS (SELECT ts, COUNT(*) AS k FROM t WHERE len(ts) > 0 GROUP BY ts)
 SELECT * FROM (VALUES
   ('brp_vectors_hashed', (SELECT CAST(COUNT(*) AS BIGINT) FROM embeddings)),
@@ -461,7 +464,7 @@ def q146_ml_lsh_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
     BRP-LSH hashing. The native q189/q105 carry the hash-checked
     banded-LSH equivalents.
 
-    Certification (r8 — the last rows-only registry query upgraded):
+    Certification:
     raw candidate counts are seed/engine-specific (LSH recall at
     0 < dist ≤ 0.5 depends on the hash draw), so the driver
     hash-certifies the DETERMINISTIC invariants instead:
@@ -714,7 +717,7 @@ def q018_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     never be re-matched, and the injected corpus is deterministic so the
     oracle hash checks exact replacement spans, not just counts.
     """
-    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")  # r15 §C sweep
+    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")
     injected = F.when(
         F.col("doc_id") % 5 == 0,
         F.concat(
@@ -757,7 +760,7 @@ def q018_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "q111_repetition_ratio",
-    # shingles_sql carries the r8 short-doc CASE guard — the former inline
+    # shingles_sql carries the short-doc CASE guard — the former inline
     # gram NULLed below 5 tokens and DuckDB's list_distinct DROPS NULLs,
     # skewing distinct_5grams to 0 (rep_ratio 1.0) where Spark says 1 (0.0)
     oracle=f"""
@@ -780,7 +783,7 @@ def q111_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens inside the row via the shingle expression — a map-only linear
     scan, no explode, no shuffle.
     """
-    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")  # r15 §C sweep
+    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")
     base = docs.select("doc_id", tokens("text").alias("toks"))
     total = F.greatest(F.size("toks") - 4, F.lit(1))
     distinct = F.size(shingles(F.col("toks"), 5))
@@ -875,7 +878,7 @@ WITH t AS (
   -- trim(x, ' ') NOT trim(x): DuckDB's bare trim strips UNICODE
   -- whitespace (U+3000 et al.) where the kernel's .strip(' ') and
   -- Spark's F.trim strip ASCII space only — the house convention is
-  -- ASCII (r11 unicode-run corpus finding)
+  -- ASCII
   SELECT doc_id,
          list_filter(string_split_regex(trim(text, ' '), '[\\s\\v]+'), x -> x <> '') AS toks,
          list_filter(list_transform(string_split(text, chr(10)), l -> trim(l, ' ')), l -> l <> '') AS ls,
@@ -980,7 +983,7 @@ def _rep_signals_kernel(s):
     document, vectorized ACROSS the batch (a per-doc numpy loop spends
     ~1 ms/doc in call overhead on ~50-token docs; this form measured
     ~10x less): all docs' tokens form one global id array (one
-    np.unique), then — VERDICT r8 #2's fuse — a suffix-doubling-style
+    np.unique), then a suffix-doubling-style
     RANK CHAIN serves every n-gram order in one sweep instead of nine
     independent per-order sorts. r1 = dense rank of (doc, token id);
     r_n = dense rank of (r_{n-1}[i], r1[i+n-1]) via one int64
@@ -1208,7 +1211,7 @@ def gopher_repetition_table(docs: DataFrame) -> DataFrame:
 # \x0B spelled explicitly: Java \s includes VT, RE2's does not — and \v
 # can't bridge them inside a SHARED pattern (Java class \v = the vertical-
 # WHITESPACE set incl. U+0085/U+2028/U+2029; RE2 \v = the VT char). The
-# hex escape means the same single char in both (r9 BMP whitespace sweep).
+# hex escape means the same single char in both.
 #
 # _SKEW_L: the 56 BMP codepoints where \p{L} itself diverges (utf8proc's
 # newer Unicode tables classify them as letters, the JVM's don't — Arabic
@@ -1251,12 +1254,12 @@ def q054_bpe_pretokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-only stage at any scale."""
     from warcraider_spark.functions.textfn import word_count
 
-    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")  # r15 §C sweep
+    docs = range_presort(load_table(spark, sf_dir, "documents"), "doc_id")
     n_pre = F.regexp_count("text", F.lit(BPE_ISH_PATTERN))
     # empty text → rate 0.0, not DIVIDE_BY_ZERO: under ANSI mode the bare
     # division KILLS the job on the first zero-length doc — and a real
-    # 100 TB web corpus always carries some (found by the r8 short-doc
-    # adversarial sweep; the synthetic corpus never exposes it)
+    # 100 TB web corpus always carries some (the synthetic corpus never
+    # exposes it)
     rate = F.when(
         F.length("text") > 0,
         F.round(n_pre / F.length("text").cast("double"), 6),
@@ -1498,11 +1501,11 @@ def q057_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- BPE merge training -----------------------------------------------------
-# Distributed byte-pair-encoding trainer (the tokenizer-training stage of a
+# Byte-pair-encoding trainer (the tokenizer-training stage of a
 # pretraining pipeline; HuggingFace-tokenizers semantics: greedy left-to-right
 # non-overlapping merges within a word, global best pair per round, ties to
 # the lexicographically smallest (left, right)). Words are represented as
-# '<sym><sym>…' strings: every symbol individually wrapped, so one codegen
+# '<sym><sym>…' strings: every symbol individually wrapped, so one
 # string replace('<l><r>' -> '<lr>') IS the greedy non-overlapping merge —
 # adjacent matches share no characters, unlike a space-separated encoding.
 # Symbols stay in [a-z]+ (the pretokenizer below), so '<'/'>' are safe fences.
@@ -1536,28 +1539,6 @@ _BPE_OUT = "\nUNION ALL ".join(
 )
 
 
-def _bpe_pair_counts(words: DataFrame) -> DataFrame:
-    """Adjacent-pair counts over the wrapped-word table: unwrap to the symbol
-    array, zip-with-next, weight by word frequency. One shuffle on the
-    (l, r) key with map-side partial aggs."""
-    syms = F.split(F.regexp_replace("s", "^<|>$", ""), "><")
-    return (
-        words.select(syms.alias("syms"), "cnt")
-        .filter(F.size("syms") >= 2)
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(sequence(1, size(syms) - 1),"
-                    " k -> struct(syms[k - 1] AS l, syms[k] AS r))"
-                )
-            ).alias("p"),
-            "cnt",
-        )
-        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-        .agg(F.sum("cnt").alias("pc"))
-    )
-
-
 @query(
     "q040_bpe_merge_train",
     oracle=f"""
@@ -1582,44 +1563,32 @@ def q040_bpe_merge_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     (word, count) vocabulary; every merge round after that touches only
     the vocabulary table (size = distinct words, bounded by
     BPE_VOCAB_TOP, independent of corpus bytes) — the shape that makes
-    distributed BPE viable at 100 TB.
+    BPE training viable at 100 TB.
 
-    r14 (guide §1.2 order-of-operations): because the vocabulary is
-    BOUNDED by construction, the merge rounds are executor-LOCAL by
-    default — one repartition(1) + one Arrow batch runs all {BPE_MERGES}
-    rounds on the ≤{BPE_VOCAB_TOP}-row table in a single task
-    (_bpe_rounds_local), replacing ~3 jobs per round (pair-count
-    shuffle, global top-1, broadcast replace, each behind a lineage
-    cut) with one. This is how production tokenizer trainers are built:
-    distributed word counting, local merge training on the bounded
-    count table. The distributed per-round loop is kept under
-    ``distributed_rounds=True`` (regime documentation + the
-    equivalence test tests/test_bpe_local_rounds.py) for the
-    hypothetical unbounded-vocabulary regime. Counts are exact
-    integers, ties break lexicographically, the greedy non-overlapping
-    string replace is shared semantics across all three
-    implementations, so the merge table is hash-identical to the
-    independently-unrolled DuckDB oracle either way."""
-    _, merge_rows = _bpe_train(spark, sf_dir)
-    out = merge_rows[0]
-    for m in merge_rows[1:]:
-        out = out.unionAll(m)
-    # single range partition out of the local trainer: partition-local
-    # sort IS the total order (r14; no boundary-sampling re-run)
-    return out.sortWithinPartitions("merge_rank")
+    Because the vocabulary is bounded by construction, the merge rounds
+    run executor-locally: one repartition(1) + one Arrow batch runs all
+    {BPE_MERGES} rounds on the ≤{BPE_VOCAB_TOP}-row table in a single
+    task (_bpe_rounds_local). This is how production tokenizer trainers
+    are built: distributed word counting, local merge training on the
+    bounded count table. Counts are exact integers, ties break
+    lexicographically, and the greedy non-overlapping string replace has
+    the same semantics in Python and DuckDB, so the merge table is
+    hash-identical to the independently-unrolled DuckDB oracle."""
+    _, merges = _bpe_train(spark, sf_dir)
+    # single partition out of the local trainer: the partition-local sort
+    # IS the total order (no range-boundary sampling re-run)
+    return merges.sortWithinPartitions("merge_rank")
 
 
 def _bpe_rounds_local(rows: list[tuple[str, int]]) -> tuple[list, list]:
-    """Pure-python twin of the distributed merge loop, run on the bounded
-    (wrapped-word, count) vocabulary inside ONE task: returns
-    (final_words, merges). Shared semantics with the distributed loop
-    and the DuckDB oracle: exact integer pair counts, global best with
-    (pc DESC, l, r) tie-break ([a-z]+ symbols, so python/UTF8 binary
-    orderings agree), greedy left-to-right non-overlapping replace
-    (str.replace ≡ Spark replace ≡ DuckDB replace), and the
-    empty-pair-table edge (no mergeable pair → the crossJoin-with-empty
-    distributed semantics: words become EMPTY and no further merges
-    emit)."""
+    """The BPE merge rounds on the bounded (wrapped-word, count)
+    vocabulary, run inside ONE task: returns (final_words, merges).
+    Shared semantics with the DuckDB oracle: exact integer pair counts,
+    global best with (pc DESC, l, r) tie-break, greedy left-to-right
+    non-overlapping replace (str.replace ≡ DuckDB replace), and the
+    empty-pair-table edge (no mergeable pair → the oracle's cross join
+    with an empty best-pair table: words become EMPTY and no further
+    merges emit)."""
     words = [(s, int(c)) for s, c in rows]
     merges: list[tuple[int, str, str, str, int]] = []
     for i in range(1, BPE_MERGES + 1):
@@ -1632,10 +1601,10 @@ def _bpe_rounds_local(rows: list[tuple[str, int]]) -> tuple[list, list]:
         if not pc:
             words = []
             break
-        # ADVICE r14 #3: tie-break on UTF-8 BYTES, not python str order —
-        # identical for the [a-z]+ symbols the tokenizer emits today, and
-        # it stays equal to Spark/DuckDB binary collation if the token
-        # alphabet ever widens beyond ASCII.
+        # tie-break on UTF-8 BYTES, not python str order — identical for
+        # the [a-z]+ symbols the tokenizer emits today, and it stays equal
+        # to Spark/DuckDB binary collation if the token alphabet ever
+        # widens beyond ASCII.
         (left, right), count = min(
             pc.items(), key=lambda kv: (-kv[1], kv[0][0].encode(), kv[0][1].encode())
         )
@@ -1645,14 +1614,9 @@ def _bpe_rounds_local(rows: list[tuple[str, int]]) -> tuple[list, list]:
     return words, merges
 
 
-def _bpe_train(
-    spark: SparkSession, sf_dir: str, distributed_rounds: bool = False
-) -> tuple[DataFrame, list[DataFrame]]:
-    """The shared BPE training loop: returns (final merged-word table,
-    merge DataFrames whose union is the merge table). Default: one
-    corpus-scale tokenize+top-K shuffle, then ALL rounds in one
-    executor-local task (see q040 docstring). ``distributed_rounds``
-    restores the per-round pair-count-shuffle loop."""
+def _bpe_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The corpus-scale half of BPE training: tokenize, count, keep the
+    top BPE_VOCAB_TOP words, each as a wrapped '<s><y><m>' string."""
     docs = load_table(spark, sf_dir, "documents")
     wtok = (
         docs.select(
@@ -1663,80 +1627,52 @@ def _bpe_train(
         .orderBy(F.desc("cnt"), "word")
         .limit(BPE_VOCAB_TOP)
     )
-    words0 = wtok.select(F.regexp_replace("word", "(.)", "<$1>").alias("s"), "cnt")
-    if not distributed_rounds:
-        # the closures call the module-level _bpe_rounds_local, pickled by
-        # reference — ship the package so a foreign-cwd driver's workers
-        # can import it (the q196 pattern)
-        from warcraider_spark.dist import ensure_package_on_executors
+    return wtok.select(F.regexp_replace("word", "(.)", "<$1>").alias("s"), "cnt")
 
-        ensure_package_on_executors(spark)
-        # ADVICE r14 #2: cut lineage on the bounded count table so a
-        # caller consuming BOTH outputs (words_df and merges_df) reads
-        # one materialization of the corpus tokenize + top-K shuffle
-        # instead of re-running it per consumer. The cut stores
-        # <=BPE_VOCAB_TOP tiny rows; single-consumer callers (q040,
-        # q141) pay only that.
-        base = cut_lineage(words0.repartition(1))
 
-        def _final_words(batches):
-            import pandas as pd
+def _bpe_train(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """BPE training: returns (final merged-word table, merge table). One
+    corpus-scale tokenize + top-K shuffle, then ALL rounds in one
+    executor-local task (see q040 docstring)."""
+    # the closures call the module-level _bpe_rounds_local, pickled by
+    # reference — ship the package so a foreign-cwd driver's workers can
+    # import it (the q196 pattern)
+    from warcraider_spark.dist import ensure_package_on_executors
 
-            rows = [(s, c) for b in batches for s, c in zip(b["s"], b["cnt"])]
-            if rows:
-                final, _ = _bpe_rounds_local(rows)
-                yield pd.DataFrame(final, columns=["s", "cnt"])
+    ensure_package_on_executors(spark)
+    # cut lineage on the bounded count table so a caller consuming BOTH
+    # outputs reads one materialization of the corpus tokenize + top-K
+    # shuffle instead of re-running it per consumer. The cut stores
+    # <=BPE_VOCAB_TOP tiny rows; single-consumer callers (q040, q141) pay
+    # only that.
+    base = cut_lineage(_bpe_vocab(spark, sf_dir).repartition(1))
 
-        def _merges(batches):
-            import pandas as pd
+    def _final_words(batches):
+        import pandas as pd
 
-            rows = [(s, c) for b in batches for s, c in zip(b["s"], b["cnt"])]
-            if rows:
-                _, merges = _bpe_rounds_local(rows)
-                yield pd.DataFrame(
-                    merges,
-                    columns=[
-                        "merge_rank", "left_sym", "right_sym", "merged", "pair_count",
-                    ],
-                )
+        rows = [(s, c) for b in batches for s, c in zip(b["s"], b["cnt"])]
+        if rows:
+            final, _ = _bpe_rounds_local(rows)
+            yield pd.DataFrame(final, columns=["s", "cnt"])
 
-        words_df = base.mapInPandas(_final_words, "s string, cnt long")
-        merges_df = base.mapInPandas(
-            _merges,
-            "merge_rank long, left_sym string, right_sym string,"
-            " merged string, pair_count long",
-        )
-        return words_df, [merges_df]
-    words = words0.transform(cut_lineage)
-    merge_rows = []
-    for i in range(1, BPE_MERGES + 1):
-        best = (
-            _bpe_pair_counts(words)
-            .orderBy(F.desc("pc"), "l", "r")
-            .limit(1)
-            .transform(cut_lineage)
-        )
-        merge_rows.append(
-            best.select(
-                F.lit(i).cast("long").alias("merge_rank"),
-                F.col("l").alias("left_sym"),
-                F.col("r").alias("right_sym"),
-                F.concat("l", "r").alias("merged"),
-                F.col("pc").alias("pair_count"),
+    def _merges(batches):
+        import pandas as pd
+
+        rows = [(s, c) for b in batches for s, c in zip(b["s"], b["cnt"])]
+        if rows:
+            _, merges = _bpe_rounds_local(rows)
+            yield pd.DataFrame(
+                merges,
+                columns=["merge_rank", "left_sym", "right_sym", "merged", "pair_count"],
             )
-        )
-        words = (
-            words.crossJoin(F.broadcast(best.select("l", "r")))
-            .select(
-                F.expr(
-                    "replace(s, concat('<', l, '><', r, '>'),"
-                    " concat('<', l, r, '>'))"
-                ).alias("s"),
-                "cnt",
-            )
-            .transform(cut_lineage)
-        )
-    return words, merge_rows
+
+    words_df = base.mapInPandas(_final_words, "s string, cnt long")
+    merges_df = base.mapInPandas(
+        _merges,
+        "merge_rank long, left_sym string, right_sym string,"
+        " merged string, pair_count long",
+    )
+    return words_df, merges_df
 
 
 @query(
@@ -1764,11 +1700,11 @@ def q141_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE ENCODE (the apply half of q040): the vocabulary segmented by the
     {BPE_MERGES} trained merges — word, frequency, 'seg|men|tation', and
     resulting token count. Tokenizing a corpus with trained merges is the
-    same chain of broadcast-merge string replaces the trainer runs, so the
-    encode path reuses the trainer loop's final word table: per document
-    at scale this is a broadcast join from word to segmentation (the
-    vocabulary IS the lookup table), with out-of-vocab words falling back
-    to character symbols — zero additional shuffles over the corpus."""
+    same chain of merge string replaces the trainer runs, so the encode
+    path reuses the trainer's final word table: per document at scale
+    this is a broadcast join from word to segmentation (the vocabulary IS
+    the lookup table), with out-of-vocab words falling back to character
+    symbols — zero additional shuffles over the corpus."""
     words, _ = _bpe_train(spark, sf_dir)
     syms = F.split(F.regexp_replace("s", "^<|>$", ""), "><")
     return (
@@ -2219,7 +2155,7 @@ def q023_sparse_dot_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut_lineage routes to a RELIABLE checkpoint when a directory is
     configured (cluster path), localCheckpoint locally."""
     docs = load_table(spark, sf_dir, "documents")
-    # n_docs from the parquet FOOTER (no Spark job, VERDICT r6 #8):
+    # n_docs from the parquet FOOTER (no Spark job at plan build):
     # resolving it driver-side keeps the df-cap filter a literal
     # predicate instead of a 1-row cross-join subtree that the w/qw
     # lineages would duplicate
@@ -2392,18 +2328,18 @@ def q135_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     two marginal tables are vocab-sized re-aggregations of the count
     table joined back on w1/w2 via PLAIN shuffle joins — a web-scale
     vocab (typos, URLs, code) is 10^8..10^9 terms under Heaps' law, so
-    broadcasting the marginals OOMs executors (r4 verdict "What's
-    wrong" #2); the bigram table is already key-compatible, so the
+    broadcasting the marginals OOMs executors; the bigram table is
+    already key-compatible, so the
     joins reuse the same hash partitioning. The grand totals (nn, mx)
     are a 1-row grand-aggregate broadcast cross-joined onto the ranked
     table — bounded at exactly one row by construction (plan-audit
     exempt), resolved at first action, so building this plan launches
-    ZERO Spark jobs (VERDICT r6 #8). Final top-k is
+    ZERO Spark jobs. Final top-k is
     TakeOrderedAndProject.
 
     Int64 headroom guard (ENFORCED, runtime): the integer path needs
     BOTH max(n_xy)*nn*1e6 < 2^63 (numerator) AND max(n_x)*max(n_y) <
-    2^63 (denominator — ADVICE r7 #1: with a small max(n_xy) the
+    2^63 (denominator — with a small max(n_xy) the
     denominator overflows first, from nn ≈ 3e9 worst-case); a CASE WHEN
     on the broadcast totals (nn, mx, mxx, mxy) switches to the
     log-domain double variant (pmi_scaled = micro-nats, floor-scaled) —
@@ -2428,13 +2364,13 @@ def q135_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both marginals, the totals broadcast); AQE does NOT reuse the
     # exchange across them (column pruning differentiates the
     # subtrees), so persist() it: lazy — building this plan launches
-    # zero Spark jobs (VERDICT r6 #8; r6's cut_lineage here executed
-    # the whole bigram DAG at build time, since under AQE even a lazy
-    # localCheckpoint runs its stages) — and all four subtrees read the
-    # ONE materialization populated by the first action.
-    # MEMORY_AND_DISK, the same footprint the r6 localCheckpoint had;
-    # vocab-sized (Heaps' law), spills rather than OOMs at 100 TB.
-    # Lifecycle (ADVICE r7 #3): the returned plan is lazy, so there is
+    # zero Spark jobs (a cut_lineage here would execute the whole bigram
+    # DAG at build time, since under AQE even a lazy localCheckpoint
+    # runs its stages) — and all four subtrees read the ONE
+    # materialization populated by the first action. MEMORY_AND_DISK,
+    # the same footprint a localCheckpoint would have; vocab-sized
+    # (Heaps' law), spills rather than OOMs at 100 TB.
+    # Lifecycle: the returned plan is lazy, so there is
     # no terminal action here to unpersist after — the cache must stay
     # live for caller recomputation; reclamation is DELIBERATELY left to
     # ContextCleaner when the returned DataFrame is dropped.
@@ -2443,7 +2379,7 @@ def q135_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist()
     x = c.groupBy("w1").agg(F.sum("n_xy").cast("bigint").alias("n_x"))
     y = c.groupBy("w2").agg(F.sum("n_xy").cast("bigint").alias("n_y"))
-    # grand totals as a 1-ROW BROADCAST scalar (VERDICT r6 #8: plan
+    # grand totals as a 1-ROW BROADCAST scalar (plan
     # construction is side-effect-free — no .first() at build time; the
     # bounded broadcast is a grand aggregate, exactly 1 row by
     # construction, plan-audit pair-exempted). The int64 headroom guard
@@ -2456,7 +2392,7 @@ def q135_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_xy").cast("bigint").alias("nn"),
             F.max("n_xy").cast("bigint").alias("mx"),
         )
-        # ADVICE r7 #1: the numerator test alone leaves a gap — with a
+        # the numerator test alone leaves a gap — with a
         # small mx the denominator n_x*n_y can overflow int64 first
         # (worst case nn^2 overflows from nn ≈ 3.04e9, while the
         # numerator guard with mx=5 only fires from nn ≈ 1.8e12).
@@ -2492,7 +2428,7 @@ def pmi_needs_log_domain(
 ) -> bool:
     """True when the integer-exact PMI ratio would overflow int64 —
     either side: the numerator's worst case is max(n_xy)*nn*PMI_SCALE,
-    the denominator's is max(n_x)*max(n_y) (ADVICE r7 #1: with a small
+    the denominator's is max(n_x)*max(n_y) (with a small
     max(n_xy) the denominator overflows long before the numerator test
     fires). Python ints are unbounded, so the check cannot overflow."""
     if max_nxy * nn * 1_000_000 > 2**63 - 1:
@@ -2681,7 +2617,7 @@ def gopher_rule_table(docs: DataFrame) -> DataFrame:
     factored so tests can drive each rule both ways on constructed
     documents (the synthetic corpus never satisfies the stopword rule).
 
-    r14: input is range-presorted on doc_id and the presentation sort is
+    The input is range-presorted on doc_id and the presentation sort is
     partition-local (see lineage.range_presort) — the interpreted HOF
     rule pass runs once, in parallel, instead of twice on one task under
     the old trailing orderBy's range-boundary sampling."""

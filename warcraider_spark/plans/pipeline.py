@@ -195,9 +195,13 @@ def url_resource_from_warc_records(records: DataFrame, metrics: dict | None = No
     )
 
     # --- UDF crossing 4: RAKE + native word_count -------------------------
+    # the reference's keyword map is f32 (lib.rs:386-399): round the
+    # kernel's doubles here, at the output boundary
     rake = rake_keywords_udf()
     final = (
-        with_urls.withColumn("keywords", rake(F.col("text_content")))
+        with_urls.withColumn(
+            "keywords", rake(F.col("text_content")).cast("map<string,float>")
+        )
         .withColumn("word_count", _word_count("text_content"))
         .select(*URL_RESOURCE_FIELDS)
     )
