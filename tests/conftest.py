@@ -7,20 +7,6 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-# transformWithStateInPandas needs google.protobuf in every python process
-# the JVM spawns; when the real package is absent, the vendored shim must
-# be on PYTHONPATH BEFORE the JVM launches (workers merge the JVM's
-# inherited env — session.get_spark does the same, this just guarantees
-# it precedes any session a test might build differently).
-try:
-    import google.protobuf  # noqa: F401
-except ImportError:
-    _vendor = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "vendor")
-    if os.path.isdir(os.path.join(_vendor, "google")):
-        _existing = os.environ.get("PYTHONPATH", "")
-        if _vendor not in _existing.split(os.pathsep):
-            os.environ["PYTHONPATH"] = _vendor + (os.pathsep + _existing if _existing else "")
-
 from warcraider_spark.session import get_spark
 
 SF_SMOKE = "/root/testdata/sf0.001"

@@ -25,6 +25,8 @@ DOCS = [
     (5, "the of and which it"),
     (6, ""),
     (7, None),
+    # U+001F is not Unicode White_Space (Rust split_whitespace): one word
+    (8, "alpha\x1fbeta gamma"),
 ]
 
 
@@ -45,6 +47,7 @@ def test_rake_udf_matches_python_kernel(spark):
     assert etl == {d: rake_text(t or "") for d, t in DOCS}
     assert etl[2]["2024"] == 0.0
     assert etl[5] == etl[6] == etl[7] == {}
+    assert etl[8] == {"alpha\x1fbeta gamma": 4.0}
 
     # q043's shape: explode the same UDF, round the doubles to 4 places
     rows = (

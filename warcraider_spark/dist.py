@@ -1,4 +1,5 @@
-"""Executor-side package distribution.
+"""Executor-side package distribution: one function,
+``ensure_package_on_executors``.
 
 Python workers deserialize pandas-UDF closures with cloudpickle, which
 pickles module-level functions BY REFERENCE — the worker must be able to
@@ -10,73 +11,19 @@ sys.path and every UDF dies with ModuleNotFoundError.
 registers it with ``SparkContext.addPyFile`` — the idiomatic way to ship
 a Python library to executors without assuming a shared filesystem or a
 pre-provisioned image (works identically on a 1000-executor cluster).
-Every UDF factory calls it; repeat calls are no-ops.
+Every UDF factory and stateful streaming operator calls it; repeat
+calls are no-ops.
 """
 
 from __future__ import annotations
 
 import os
-import sys
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
 
 _SHIPPED: set[str] = set()
-_SHIM_SHIPPED: set[str] = set()
-
-
-def ensure_protobuf_shim(spark: SparkSession | None = None) -> bool:
-    """Activate the vendored mini-protobuf runtime when the real one is
-    absent (transformWithStateInPandas speaks protobuf to the JVM).
-
-    Returns True iff ``google.protobuf`` is importable afterwards. The
-    real distribution always wins: the vendor tree only joins sys.path
-    (and the worker PYTHONPATH, via addPyFile) after the import probe
-    fails, so an environment that has protobuf never sees the shim."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        vendor = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "vendor"
-        )
-        if not os.path.isdir(os.path.join(vendor, "google")):
-            return False
-        if vendor not in sys.path:
-            sys.path.insert(0, vendor)
-        try:
-            import google.protobuf  # noqa: F401
-        except ImportError:
-            return False
-    else:
-        return True  # real protobuf present; nothing to ship
-
-    # ship to python workers (the TWS driver worker is spawned by the JVM
-    # and resolves imports through the addPyFile path, exactly like UDF
-    # workers)
-    spark = spark or SparkSession.getActiveSession()
-    if spark is not None:
-        sc = spark.sparkContext
-        if sc.applicationId not in _SHIM_SHIPPED:
-            base = sys.modules["google"].__path__[0]  # .../vendor/google
-            zip_path = os.path.join(
-                tempfile.gettempdir(), f"protobuf_shim_{os.getpid()}.zip"
-            )
-            if not os.path.exists(zip_path):
-                with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as zf:
-                    for root, _dirs, files in os.walk(base):
-                        if "__pycache__" in root:
-                            continue
-                        for fn in files:
-                            if fn.endswith(".py"):
-                                full = os.path.join(root, fn)
-                                rel = os.path.join(
-                                    "google", os.path.relpath(full, base)
-                                )
-                                zf.write(full, rel)
-            sc.addPyFile(zip_path)
-            _SHIM_SHIPPED.add(sc.applicationId)
-    return True
 
 
 def ensure_package_on_executors(spark: SparkSession | None = None) -> None:

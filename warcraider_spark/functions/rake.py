@@ -18,6 +18,7 @@ so its DuckDB oracle can round them to 4 places without f32 drift.
 
 from __future__ import annotations
 
+import re
 import struct
 
 import pandas as pd
@@ -37,6 +38,11 @@ except ImportError:  # pragma: no cover - regex is available in this env
     PUNC_RE = _re.compile(r"[^\w\s-]|\s+-\s+")
     NUM_RE = _re.compile(r"-?\d+[./٫,']?\d*")
 
+# Words are runs between Unicode White_Space (Rust ``split_whitespace``,
+# rake.rs:81). ``str.split()`` would also split at U+001C–U+001F, which
+# ``str.isspace`` counts as space but White_Space does not.
+WORD_RE = re.compile(r"[\S\x1c-\x1f]+")
+
 __all__ = ["rake_scores", "rake_text", "rake_keywords_udf"]
 
 
@@ -49,7 +55,7 @@ def rake_scores(text: str) -> dict[str, float]:
         if not segment:
             continue
         phrase: list[str] = []
-        for word in segment.split():
+        for word in WORD_RE.findall(segment):
             if word.lower() in SMART_STOPWORDS:
                 if phrase:
                     phrases.append(phrase)

@@ -5,7 +5,7 @@ Iterative DataFrame loops must cut lineage each round or the plan tree
 grows O(rounds) and planning time explodes. ``localCheckpoint`` does that
 by storing blocks on EXECUTORS — fast, but on a real cluster a lost or
 preempted executor loses its blocks and fails the whole job partway
-through a long iteration (VERDICT r4 "What's wrong" note #3).
+through a long iteration.
 
 ``cut_lineage`` keeps localCheckpoint as the local default and switches
 to RELIABLE ``checkpoint()`` against fault-tolerant storage (HDFS / object
@@ -39,7 +39,7 @@ _dir: object = _UNSET
 # (applicationId, dir) we last pushed — keyed by context so a context
 # restart (new applicationId) always re-points, even when the configured
 # dir string is unchanged and the NEW context has a user-set dir of its
-# own that would otherwise satisfy isDefined() (ADVICE r6).
+# own that would otherwise satisfy isDefined().
 _last_set: tuple[str, str] | None = None
 
 
@@ -64,48 +64,44 @@ def reliable_checkpoint_dir() -> str | None:
     return os.environ.get("WARCRAIDER_CHECKPOINT_DIR") or None
 
 
+def _cut(df: DataFrame, eager: bool) -> DataFrame:
+    """Reliable checkpoint when a directory is configured, localCheckpoint
+    otherwise."""
+    global _last_set
+    d = reliable_checkpoint_dir()
+    if not d:
+        return df.localCheckpoint(eager=eager)
+    sc = df.sparkSession.sparkContext
+    # getCheckpointDir() returns a per-set UUID subdirectory, so it can't
+    # be compared to `d` directly; track the dir we last pushed ourselves
+    # and re-point the JVM context whenever the configured one changes (or
+    # nothing was ever set for this context).
+    key = (sc.applicationId, d)
+    if key != _last_set or not sc._jsc.sc().getCheckpointDir().isDefined():
+        sc.setCheckpointDir(d)
+        _last_set = key
+    return df.checkpoint(eager=eager)
+
+
 def cut_lineage(df: DataFrame) -> DataFrame:
     """Cut the plan lineage of ``df``: reliable checkpoint when a
     directory is configured, localCheckpoint otherwise. Lazy in both
-    paths — materialization happens at the round's action, exactly like
-    the localCheckpoint(eager=False) it replaces."""
-    global _last_set
-    d = reliable_checkpoint_dir()
-    if d:
-        sc = df.sparkSession.sparkContext
-        # getCheckpointDir() returns a per-set UUID subdirectory, so it
-        # can't be compared to `d` directly; track the dir we last pushed
-        # ourselves and re-point the JVM context whenever the configured
-        # one changes (or nothing was ever set for this context).
-        key = (sc.applicationId, d)
-        if key != _last_set or not sc._jsc.sc().getCheckpointDir().isDefined():
-            sc.setCheckpointDir(d)
-            _last_set = key
-        return df.checkpoint(eager=False)
-    return df.localCheckpoint(eager=False)
+    paths — materialization happens at the round's action."""
+    return _cut(df, eager=False)
 
 
 def cut_lineage_eager(df: DataFrame) -> DataFrame:
     """Eager variant of ``cut_lineage`` for loops that use the
-    checkpoint materialization itself as the round's ONLY action (r8:
-    alternating_components collects its convergence signature through
-    ``observe()`` metrics during this job, so a separate signature
-    action per round disappears). Same reliable-vs-local routing."""
-    global _last_set
-    d = reliable_checkpoint_dir()
-    if d:
-        sc = df.sparkSession.sparkContext
-        key = (sc.applicationId, d)
-        if key != _last_set or not sc._jsc.sc().getCheckpointDir().isDefined():
-            sc.setCheckpointDir(d)
-            _last_set = key
-        return df.checkpoint(eager=True)
-    return df.localCheckpoint(eager=True)
+    checkpoint materialization itself as the round's ONLY action
+    (alternating_components collects its convergence signature through
+    ``observe()`` metrics during this job, so no separate signature
+    action runs per round). Same reliable-vs-local routing."""
+    return _cut(df, eager=True)
 
 
 def range_presort(df: DataFrame, *keys: str, partitions: int | None = None) -> DataFrame:
     """Range-partition ``df`` by a query's presentation-sort keys BEFORE
-    its expensive per-row work (r14, guide §1.2/§2.4/§2.5).
+    its expensive per-row work.
 
     A trailing ``.orderBy(keys)`` plans as a range Exchange whose boundary
     sampling EXECUTES THE CHILD A SECOND TIME (RangePartitioner reservoir-

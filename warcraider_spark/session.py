@@ -37,31 +37,16 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the configured SparkSession."""
-    # transformWithStateInPandas: every python process the JVM spawns must
-    # import google.protobuf. When the real package is absent, point
-    # PYTHONPATH at the vendored shim BEFORE the JVM launches — worker
-    # factories merge the JVM's inherited PYTHONPATH (addPyFile reaches
-    # UDF workers but NOT the TWS driver worker, measured in-container).
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        vendor = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "vendor")
-        if os.path.isdir(os.path.join(vendor, "google")):
-            existing = os.environ.get("PYTHONPATH", "")
-            if vendor not in existing.split(os.pathsep):
-                os.environ["PYTHONPATH"] = (
-                    vendor + (os.pathsep + existing if existing else "")
-                )
     cpus = _default_parallelism()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master or f"local[{cpus}]")
-        # r15 (VERDICT r14 #2): shuffle partitions track the core count —
-        # the old max(cpus, 32) floor meant a local[8] driver run still
-        # planned 32-way shuffles, decoupling plan parallelism from the
-        # core count and making the scaling measurement uninformative. AQE
-        # coalescing still merges small partitions either way; a real
-        # cluster overrides via spark-submit / the explicit parameter.
+        # Shuffle partitions track the core count: a fixed floor (say 32)
+        # would make a local[8] run plan 32-way shuffles, decoupling plan
+        # parallelism from the core count and making a scaling measurement
+        # uninformative. AQE coalescing still merges small partitions
+        # either way; a real cluster overrides via spark-submit / the
+        # explicit parameter.
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

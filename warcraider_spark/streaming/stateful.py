@@ -1,4 +1,4 @@
-"""Custom stateful streaming operator (SURVEY §2.10:
+"""Custom stateful streaming operators (SURVEY §2.10:
 ``applyInPandasWithState`` for custom stateful operators).
 
 ``streaming_seen_filter`` — stateful exactly-once-per-key emission: the
@@ -7,11 +7,14 @@ carried across micro-batches and a processing-time timeout evicting idle
 keys (bounded state at stream scale — the streaming form of
 dropDuplicates on a key, but with an explicit eviction policy the
 built-in lacks).
+
+``streaming_spend_tracker`` — running per-user spend total and event
+count, carried in per-key state and re-emitted whenever the key appears.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterable
+from typing import Iterable
 
 import pandas as pd
 
@@ -30,8 +33,6 @@ __all__ = [
     "SEEN_OUTPUT_SCHEMA",
     "streaming_spend_tracker",
     "SPEND_OUTPUT_SCHEMA",
-    "tws_available",
-    "make_spend_tracker",
 ]
 
 SEEN_OUTPUT_SCHEMA = StructType(
@@ -92,10 +93,6 @@ def streaming_seen_filter(events: DataFrame) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 stateful processor API)
-# ---------------------------------------------------------------------------
-
 SPEND_OUTPUT_SCHEMA = StructType(
     [
         StructField("user_id", LongType(), True),
@@ -112,97 +109,31 @@ _SPEND_STATE_SCHEMA = StructType(
 )
 
 
-def tws_available() -> bool:
-    """Spark 4's transformWithState driver worker speaks protobuf to the
-    JVM for state-schema validation. When the real `protobuf` package is
-    missing (this container ships none), activate the repo's vendored
-    mini-protobuf runtime (vendor/google/protobuf — written from the
-    public wire spec; see its docstring) and ship it to the Python
-    workers the JVM spawns. Returns False only if neither the real
-    distribution nor the shim can satisfy the import."""
-    from warcraider_spark.dist import ensure_protobuf_shim
-
-    if not ensure_protobuf_shim():
-        return False
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def make_spend_tracker():
-    """Build the StatefulProcessor lazily so importing this module never
-    requires the transformWithState runtime deps."""
-    import pandas as pd
-    from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
-
-    class SpendTracker(StatefulProcessor):
-        """Running per-user spend total via a ValueState — the
-        transformWithState twin of `_dedup_fn`'s applyInPandasWithState
-        shape, on the Spark 4 API (explicit state handles, RocksDB-backed,
-        per-key timers available via `timerValues`)."""
-
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("agg", _SPEND_STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            total, n = self._state.get() if self._state.exists() else (0.0, 0)
-            for pdf in rows:
-                total += float(pdf["value"].sum())
-                n += len(pdf)
-            self._state.update((total, n))
-            yield pd.DataFrame(
-                [{"user_id": key[0], "total_value": total, "n_events": n}]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return SpendTracker()
+def _spend_fn(
+    key: tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState
+) -> Iterable[pd.DataFrame]:
+    total, n = state.get if state.exists else (0.0, 0)
+    for pdf in pdf_iter:
+        total += float(pdf["value"].sum())
+        n += len(pdf)
+    state.update((total, n))
+    yield pd.DataFrame([{"user_id": key[0], "total_value": total, "n_events": n}])
 
 
 def streaming_spend_tracker(events: DataFrame) -> DataFrame:
     """events stream (user_id, value) → running per-user totals, emitted
     each micro-batch the key appears in (update mode).
 
-    State lives in the RocksDB state store (required by transformWithState);
-    at stream scale each key holds one fixed-width row, so state size is
-    O(active users), and eviction policy can be added with
-    `handle.registerTimer` without touching the aggregation path.
-
-    SESSION-CONFIG SIDE EFFECT (documented per ADVICE r2 #3): the RocksDB
-    provider is a session-wide streaming conf that Spark reads at query
-    START, so it cannot be scoped to this one query from inside the
-    operator. This function sets it and the change persists for streaming
-    queries started afterwards on the same session. Callers who run other
-    streaming queries with the default (HDFS-backed) provider on a shared
-    session should snapshot/restore the conf around the query's lifetime::
-
-        prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-        q = streaming_spend_tracker(events).writeStream...start(); ...
-        spark.conf.set(...prev...)  # after the query STOPS, not after start()
-
-    (Restoring inside this function would be wrong: the conf must still
-    hold the RocksDB value when the caller later calls .start().)
-    """
+    Each key holds one fixed-width ``(total, n)`` state row with no
+    timeout, so state size is O(distinct users) and every emission is the
+    key's total over the whole stream so far."""
     from warcraider_spark.dist import ensure_package_on_executors
 
-    if not tws_available():
-        raise ImportError(
-            "transformWithStateInPandas needs the `protobuf` package "
-            "(absent in this container); see tws_available()"
-        )
     ensure_package_on_executors(events.sparkSession)
-    spark = events.sparkSession
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    return events.groupBy("user_id").transformWithStateInPandas(
-        make_spend_tracker(),
+    return events.groupBy("user_id").applyInPandasWithState(
+        _spend_fn,
         outputStructType=SPEND_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
+        stateStructType=_SPEND_STATE_SCHEMA,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
