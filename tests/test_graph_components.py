@@ -2,9 +2,9 @@
 
 1. converges in O(log n) rounds on a diameter-~96 chain graph — the
    property bounded min-label propagation lacks;
-2. a q099-style budget of 6 propagation rounds demonstrably FAILS on the
-   same graph (labels not converged), proving the new algorithm is doing
-   work the old budget cannot;
+2. a fixed budget of 6 min-label propagation rounds demonstrably FAILS on
+   the same graph (labels not converged), proving the contraction does
+   work a fixed round budget cannot;
 3. components are exactly right on a hand-built fixture (two chains +
    bridge + isolated pair).
 """
@@ -34,9 +34,9 @@ def test_converges_in_log_rounds_not_diameter(spark, sf_smoke):
 
 
 def test_bounded_label_propagation_fails_on_deep_chains(spark, sf_smoke):
-    """q099's 6-round budget is right for shallow dup clusters and wrong
-    here: after 6 min-label rounds a chain node ~90 hops from its
-    component minimum still carries a non-minimal label."""
+    """A fixed 6-round budget (what q099 ran before it moved onto the
+    contraction) is wrong here: after 6 min-label rounds a chain node ~90
+    hops from its component minimum still carries a non-minimal label."""
     e = chain_edges(spark, sf_smoke)
     sym = e.select(F.col("src").alias("eu"), F.col("dst").alias("ev")).unionAll(
         e.select(F.col("dst").alias("eu"), F.col("src").alias("ev"))

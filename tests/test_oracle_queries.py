@@ -39,51 +39,50 @@ def test_rows_only_list_column_rejected(spark, sf_smoke):
 
 
 def test_pmi_log_domain_guard(spark):
-    """q135's int64 headroom guard (ENFORCED this round, VERDICT r4
-    "What's wrong" #2): counts large enough that n_xy*nn*1e6 overflows
-    int64 must switch to the log-domain micro-nat path, and that path
-    must rank identically to driver-side math.log PMI."""
+    """q135's ranking column on synthetic (n_xy, n_x, n_y, nn, mx, mxx,
+    mxy) rows: cert-scale counts take the integer path; counts whose
+    numerator (mx*nn*1e6) or denominator (mxx*mxy) could overflow int64
+    take the log-domain micro-nat path, each guard checked on both sides
+    of its boundary; and the log path ranks like driver-side math.log."""
     import math
 
-    from warcraider_spark.operators.text import _pmi_rank_expr, pmi_needs_log_domain
+    from warcraider_spark.operators.text import _pmi_rank
 
-    # cert-scale counts stay on the integer path
-    assert not pmi_needs_log_domain(max_nxy=10_000, nn=1_000_000)
-    # web-scale counts exceed headroom: 1e7 * 1e12 * 1e6 = 1e25 > 2^63
-    assert pmi_needs_log_domain(max_nxy=10_000_000, nn=10**12)
-    # ADVICE r7 #1: denominator-side overflow with a SMALL max(n_xy) —
-    # the numerator test alone does not fire (5 * 1e10 * 1e6 = 5e16 <
-    # 2^63) but max(n_x)*max(n_y) = 16e18 > 2^63 would corrupt the
-    # integer division; the extended guard must route to the log path.
-    assert not pmi_needs_log_domain(max_nxy=5, nn=10**10)
-    assert pmi_needs_log_domain(
-        max_nxy=5, nn=10**10, max_nx=4_000_000_000, max_ny=4_000_000_000
-    )
-    assert not pmi_needs_log_domain(
-        max_nxy=5, nn=10**10, max_nx=2_000_000_000, max_ny=2_000_000_000
-    )
-
-    nn = 10**12
-    rows = [  # (w1, w2, n_xy, n_x, n_y) with web-scale marginals
-        ("new", "york", 9_000_000, 20_000_000, 10_000_000),
-        ("of", "the", 8_000_000, 40_000_000_000, 60_000_000_000),
-        ("machine", "learning", 2_000_000, 5_000_000, 3_000_000),
-        ("hong", "kong", 1_500_000, 1_600_000, 1_550_000),
+    int64max = 2**63 - 1
+    nn_big = 10**12
+    cut_num = (int64max // 1_000_000) // nn_big  # largest integer-path mx
+    cut_den = int64max // 2_000_000_000  # largest integer-path mxx
+    big = 60_000_000_000
+    rows = [  # (w1, w2, n_xy, n_x, n_y, nn, mx, mxx, mxy, path)
+        ("cert", "scale", 50, 400, 300, 10**6, 10_000, 5_000, 5_000, "int"),
+        ("num", "below", 9, 1_000, 2_000, nn_big, cut_num, 10**6, 10**6, "int"),
+        ("num", "above", 9, 1_000, 2_000, nn_big, cut_num + 1, 10**6, 10**6, "log"),
+        ("den", "below", 5, 4 * 10**9, 2 * 10**9, 10**10, 5, cut_den, 2 * 10**9, "int"),
+        ("den", "above", 5, 4 * 10**9, 2 * 10**9, 10**10, 5, cut_den + 1, 2 * 10**9, "log"),
+        # web-scale marginals: the log path must keep the PMI ranking
+        ("new", "york", 9_000_000, 20_000_000, 10_000_000, nn_big, 9_000_000, big, big, "log"),
+        ("of", "the", 8_000_000, 40 * 10**9, big, nn_big, 9_000_000, big, big, "log"),
+        ("machine", "learning", 2_000_000, 5_000_000, 3_000_000, nn_big, 9_000_000, big, big, "log"),
+        ("hong", "kong", 1_500_000, 1_600_000, 1_550_000, nn_big, 9_000_000, big, big, "log"),
     ]
-    df = spark.createDataFrame(rows, "w1 string, w2 string, n_xy long, n_x long, n_y long")
+    df = spark.createDataFrame(
+        [r[:-1] for r in rows],
+        "w1 string, w2 string, n_xy long, n_x long, n_y long, nn long, mx long, mxx long, mxy long",
+    )
     got = {
         (r["w1"], r["w2"]): r["pmi"]
-        for r in df.select(
-            "w1", "w2", _pmi_rank_expr(nn, use_log=True).alias("pmi")
-        ).collect()
+        for r in df.select("w1", "w2", _pmi_rank().alias("pmi")).collect()
     }
-    for w1, w2, n_xy, n_x, n_y in rows:
-        exact = math.floor(
-            1_000_000 * (math.log(n_xy) + math.log(nn) - math.log(n_x) - math.log(n_y))
-        )
-        assert abs(got[(w1, w2)] - exact) <= 1, (w1, w2, got[(w1, w2)], exact)
-    ranked = sorted(got.items(), key=lambda kv: -kv[1])
-    assert [k for k, _ in ranked] == [
+    for w1, w2, n_xy, n_x, n_y, nn, _mx, _mxx, _mxy, path in rows:
+        if path == "int":
+            assert got[(w1, w2)] == n_xy * nn * 1_000_000 // (n_x * n_y), (w1, w2)
+        else:
+            exact = math.floor(
+                1_000_000 * (math.log(n_xy) + math.log(nn) - math.log(n_x) - math.log(n_y))
+            )
+            assert abs(got[(w1, w2)] - exact) <= 1, (w1, w2, got[(w1, w2)], exact)
+    web = [k for k in got if k[0] in ("new", "of", "machine", "hong")]
+    assert sorted(web, key=lambda k: -got[k]) == [
         ("hong", "kong"),  # ratio ~6.0e5
         ("machine", "learning"),  # ~1.3e5
         ("new", "york"),  # ~4.5e4

@@ -679,7 +679,7 @@ BUILD_TIME_EXECUTION_OK = {
     "q141_bpe_encode": "trains the q040 merges to segment the vocabulary: same build-time vocabulary cut (q023 contract)",
     "q142_pq_encode": "per-subspace k-means loops (q046 contract)",
     "q151_semantic_dedup": "k-means clustering loop (q046 contract)",
-    "q099_dedup_clusters": "connected-components loop (q134 contract)",
+    "q099_dedup_clusters": "composes contracted_components on the LSH pair graph (q134 contract)",
     "q062_winnowing_dedup_keep": "composes contracted_components on the winnowing pair graph (q134 contract: eager contraction + convergence-checked residual rounds)",
     "q063_winnowing_soft_dedup_weights": "same contracted_components composition as q062 (q134 contract)",
     "q197_winnowing_family_manifest": "shared-selector composition: cut_lineage materializes the fingerprint pass once for all family branches (q023 contract) + contracted_components (q134 contract)",

@@ -5,16 +5,51 @@ check_present_avro probe, lib.rs:155-169)."""
 
 from __future__ import annotations
 
-from warcraider_spark.operators.windows_events import tumbling_counts
-from warcraider_spark.streaming.windows import replay_events_stream
+import os
+
+import pytest
+
+from warcraider_spark.streaming import windows
+from warcraider_spark.streaming.windows import replay_events_stream, windowed_counts_stream
 from warcraider_spark.tables import load_table
 
 
 def test_stream_equals_batch(spark, sf_smoke):
     streamed = {tuple(r) for r in replay_events_stream(spark, sf_smoke).collect()}
-    batch = {tuple(r) for r in tumbling_counts(load_table(spark, sf_smoke, "events")).collect()}
+    batch = {
+        tuple(r)
+        for r in windowed_counts_stream(load_table(spark, sf_smoke, "events")).collect()
+    }
     assert streamed == batch
     assert len(streamed) > 0
+
+
+def test_replay_timeout_stops_query_and_cleans_up(spark, sf_smoke, tmp_path, monkeypatch):
+    """A replay that does not drain in time raises instead of returning a
+    partial table, and leaves neither a running query nor its staged
+    copy of the events behind."""
+    monkeypatch.setattr(windows.tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(windows, "REPLAY_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError):
+        replay_events_stream(spark, sf_smoke)
+    assert spark.streams.active == []
+    assert os.listdir(tmp_path) == []
+
+
+def test_registry_replays_leave_no_staged_copy(spark, sf_smoke, tmp_path, monkeypatch):
+    """q030, q115 and q052 each stage the events table for their stream;
+    every staged copy is gone once the query has run."""
+    from warcraider_spark.operators.windows_events import (
+        q030_watermark_semantics,
+        q052_stream_stream_join,
+        q115_stream_static_enrich,
+    )
+
+    monkeypatch.setattr(windows.tempfile, "tempdir", str(tmp_path))
+    for builder in (q030_watermark_semantics, q115_stream_static_enrich, q052_stream_stream_join):
+        assert builder(spark, sf_smoke).count() > 0
+    assert spark.streams.active == []
+    assert os.listdir(tmp_path) == []
 
 
 def test_streaming_warc_exactly_once(spark, tmp_path):
@@ -88,30 +123,75 @@ def test_stream_static_join_equals_batch(spark, sf_smoke):
     assert len(streamed) > 0
 
 
-def test_stream_dedup_within_watermark(spark, sf_smoke):
+def replay_dedup_stream(spark, sf_dir: str, root: str):
+    """Feed each event TWICE (duplicated in a second file, so dups can
+    arrive in a later micro-batch) through dedup_within_watermark_stream;
+    exactly-once output = the distinct event set."""
+    from warcraider_spark.streaming.windows import dedup_within_watermark_stream
+
+    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
+    ev.write.mode("overwrite").parquet(os.path.join(root, "a"))
+    ev.write.mode("overwrite").parquet(os.path.join(root, "b"))
+
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "4")
+        .parquet(os.path.join(root, "*"))
+    )
+    q = (
+        dedup_within_watermark_stream(stream)
+        .writeStream.format("memory")
+        .queryName("dedup_within_watermark")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "dedup replay did not drain"
+    return spark.table("dedup_within_watermark")
+
+
+def test_stream_dedup_within_watermark(spark, sf_smoke, tmp_path):
     """Every event fed twice (second copy in a separate file / possibly a
     later micro-batch); the watermark-bounded dedup must emit each
     event_id exactly once — equal to the batch distinct set."""
-    from warcraider_spark.streaming.windows import replay_dedup_stream
-
-    out = replay_dedup_stream(spark, sf_smoke)
+    out = replay_dedup_stream(spark, sf_smoke, str(tmp_path))
     n_distinct = load_table(spark, sf_smoke, "events").select("event_id").distinct().count()
     assert out.select("event_id").distinct().count() == n_distinct
     assert out.count() == n_distinct
 
 
-def test_foreach_batch_sink_idempotent_on_retry(spark, sf_smoke):
+def replay_foreach_batch_sink(spark, sf_dir: str, root: str):
+    """Run the events table through a real stream into the idempotent
+    foreachBatch parquet sink; returns the sink contents read back
+    (basePath keeps batch_id out of the schema)."""
+    from warcraider_spark.streaming.windows import foreach_batch_idempotent_sink
+
+    staged, out = os.path.join(root, "in"), os.path.join(root, "out")
+    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
+    ev.write.mode("overwrite").parquet(staged)
+
+    stream = (
+        spark.readStream.schema(ev.schema)
+        .option("maxFilesPerTrigger", "4")
+        .parquet(staged)
+    )
+    q = (
+        stream.writeStream.foreachBatch(foreach_batch_idempotent_sink(out))
+        .option("checkpointLocation", os.path.join(root, "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120), "foreachBatch replay did not drain"
+    return spark.read.option("basePath", out).parquet(os.path.join(out, "batch_id=*")).drop("batch_id")
+
+
+def test_foreach_batch_sink_idempotent_on_retry(spark, sf_smoke, tmp_path):
     """The foreachBatch sink must be replay-safe: re-delivering an
     already-written batch_id (the at-least-once failure mode) leaves the
     sink contents byte-identical instead of duplicated."""
-    import os
+    from warcraider_spark.streaming.windows import foreach_batch_idempotent_sink
 
-    from warcraider_spark.streaming.windows import (
-        foreach_batch_idempotent_sink,
-        replay_foreach_batch_sink,
-    )
-
-    out = replay_foreach_batch_sink(spark, sf_smoke)
+    out = replay_foreach_batch_sink(spark, sf_smoke, str(tmp_path))
     ev = load_table(spark, sf_smoke, "events").select("event_id", "ts", "event_type")
     n_events = ev.count()
     assert out.count() == n_events
@@ -143,9 +223,7 @@ def test_python_streaming_source_exactly_once_restart(spark, tmp_path):
     from the same checkpoint resumes at the committed offset — the
     engine's offset log + deterministic readBetweenOffsets replay give
     exactly-once output."""
-    import os
     import time
-    import uuid
 
     from warcraider_spark.sources.eventgen import EventGenDataSource, expected_rows
 

@@ -97,6 +97,11 @@ def test_split_planning_invariants():
     assert plan_warc_splits([], 0, 4) == []
 
 
+def _split_bytes(path: str, n: int) -> int:
+    """Byte budget that cuts the file at ``path`` into about ``n`` ranges."""
+    return -(-os.path.getsize(path) // n)
+
+
 def _rows(df):
     return sorted(
         (
@@ -112,7 +117,7 @@ def _rows(df):
 def test_ranged_equals_monolithic(spark):
     p = _write(_fixture_bytes(), "big.warc")
     mono = _rows(read_warc(spark, os.path.dirname(p)))
-    ranged = _rows(read_warc_ranged(spark, p, num_splits=6))
+    ranged = _rows(read_warc_ranged(spark, p, target_split_bytes=_split_bytes(p, 6)))
     assert ranged == mono
     assert len(ranged) == 24
 
@@ -122,7 +127,7 @@ def test_ranged_runs_parallel(spark):
     distinct tasks (spark_partition_id), not one straggler."""
     p = _write(_fixture_bytes(), "big.warc")
     parts = (
-        read_warc_ranged(spark, p, num_splits=6)
+        read_warc_ranged(spark, p, target_split_bytes=_split_bytes(p, 6))
         .select(F.spark_partition_id().alias("pid"))
         .distinct()
         .count()
@@ -144,7 +149,7 @@ def test_malformed_tail_sentinel_parity(spark, tail):
     payload = _fixture_bytes(8) + tail
     p = _write(payload, "tail.warc")
     mono = _rows(read_warc(spark, os.path.dirname(p)))
-    ranged = _rows(read_warc_ranged(spark, p, num_splits=4))
+    ranged = _rows(read_warc_ranged(spark, p, target_split_bytes=_split_bytes(p, 4)))
     assert ranged == mono
     assert ranged[-1][1] == "0"  # sentinel version from the malformed tail
 
@@ -154,7 +159,7 @@ def test_malformed_first_record(spark):
     still produce the monolithic sentinel row via the whole-file range."""
     p = _write(b"NOT A WARC AT ALL\r\njunk", "junk.warc")
     mono = _rows(read_warc(spark, os.path.dirname(p)))
-    ranged = _rows(read_warc_ranged(spark, p, num_splits=4))
+    ranged = _rows(read_warc_ranged(spark, p, target_split_bytes=_split_bytes(p, 4)))
     assert ranged == mono == [(0, "0", (), b"")]
 
 
@@ -219,8 +224,8 @@ def test_ranged_file_uri_scheme_equals_local(spark):
     ranged GET — and must reproduce the plain-local-path ranged scan
     exactly, including the normalized binaryFile-style warc_file URI."""
     p = _write(_fixture_bytes(24), "scheme.warc")
-    local = read_warc_ranged(spark, p, num_splits=4)
-    remote = read_warc_ranged(spark, "file://" + p, num_splits=4)
+    local = read_warc_ranged(spark, p, target_split_bytes=_split_bytes(p, 4))
+    remote = read_warc_ranged(spark, "file://" + p, target_split_bytes=_split_bytes(p, 4))
     lrows = sorted(tuple(r) for r in local.collect())
     rrows = sorted(tuple(r) for r in remote.collect())
     assert lrows == rrows
@@ -297,7 +302,9 @@ def test_unreadable_file_skipped_at_executor_index_time(spark):
     # the driver-side stat already tolerates it (size=0), and the
     # executor-side index must now skip it rather than raise
     os.symlink(os.path.join(d, "vanished.warc"), os.path.join(d, "bad.warc"))
-    ranged = _rows(read_warc_ranged(spark, os.path.join(d, "*.warc"), num_splits=4))
+    ranged = _rows(read_warc_ranged(
+        spark, os.path.join(d, "*.warc"), target_split_bytes=_split_bytes(good, 4)
+    ))
     mono = _rows(read_warc(spark, good))
     assert ranged == mono
     assert len(ranged) == 24

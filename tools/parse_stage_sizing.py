@@ -36,7 +36,7 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from stream_warc_bench import synth_corpus  # noqa: E402
+from warc_e2e_scale import synth_corpus  # noqa: E402
 from warcraider_spark.session import get_spark  # noqa: E402
 
 

@@ -38,7 +38,46 @@ import urllib.request
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from warcraider_spark.session import get_spark  # noqa: E402
-from stream_warc_bench import synth_corpus  # noqa: E402
+
+
+def synth_corpus(d: str, n_files: int, per_file: int) -> int:
+    """Deterministic multi-page WARC corpus: every page exercises the
+    HTML parse (title/links/GA/meta), sizes ~4 KB."""
+    from warcraider_spark.sources.warc import build_warc_bytes
+
+    total = 0
+    for f in range(n_files):
+        records = []
+        for r in range(per_file):
+            i = f * per_file + r
+            body = (
+                f"<html><head><title>Page {i}</title>"
+                f"<meta name='k' content='v{i}'></head><body>"
+                + "".join(
+                    f"<p>alpha beta gamma delta {i} {j} words here</p>"
+                    f"<a href='/rel/{j}'>link {j}</a>"
+                    for j in range(20)
+                )
+                + f"<script>ga('create', 'UA-{i % 97}-1', 'auto');</script>"
+                "</body></html>"
+            ).encode()
+            page = b"HTTP/1.1 200 OK\nContent-Type: text/html\n"
+            page += f"X-Funnelback-Total-Request-Time-MS: {100 + i % 900}\n".encode()
+            page += b"\n\r\n" + body
+            records.append(
+                (
+                    {
+                        "WARC-Type": "response",
+                        "WARC-Target-URI": f"https://host{i % 37}.example.gov.au/p/{i}",
+                        "Uncompressed-Content-Length": str(len(page)),
+                    },
+                    page,
+                )
+            )
+            total += 1
+        with open(os.path.join(d, f"crawl-{f:03d}.warc"), "wb") as fh:
+            fh.write(build_warc_bytes(records))
+    return total
 
 
 def _completed_stages(spark) -> list[dict]:

@@ -68,17 +68,6 @@ _TWO_LABEL_SUFFIXES = frozenset(
         "com.pl", "net.pl", "org.pl", "gov.pl", "edu.pl",
     }
 )
-_ONE_LABEL_SUFFIXES = frozenset(
-    {
-        "au", "com", "net", "org", "edu", "gov", "io", "info", "biz", "uk", "nz",
-        "dev", "app", "ai", "co", "me", "tv", "cc", "xyz", "online", "site",
-        "store", "tech", "blog", "cloud", "us", "ca", "de", "fr", "it", "es",
-        "nl", "se", "no", "fi", "dk", "ch", "at", "be", "ie", "jp", "br", "in",
-        "za", "cn", "kr", "mx", "ar", "sg", "hk", "tw", "il", "ru", "tr", "ua",
-        "th", "id", "my", "pl", "eu", "int", "mil", "pro", "mobi", "name",
-        "aero", "coop", "jobs", "museum", "travel", "cat",
-    }
-)
 
 
 def make_urls_absolute(url: str, links: list[str]) -> list[str]:
@@ -125,8 +114,6 @@ def root_domain(hostname: str) -> str:
     two = ".".join(labels[-2:])
     if two in _TWO_LABEL_SUFFIXES:
         return ".".join(labels[-3:]) if len(labels) >= 3 else ""
-    if labels[-1] in _ONE_LABEL_SUFFIXES:
-        return two
     return two
 
 

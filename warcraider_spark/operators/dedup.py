@@ -645,8 +645,6 @@ def q174_training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Duplicate clusters: connected components over the LSH candidate graph
 # ---------------------------------------------------------------------------
 
-CC_ROUNDS = 6  # ≥ candidate-graph diameter in the dup corpus (see docstring)
-
 
 @query(
     "q099_dedup_clusters",
@@ -684,49 +682,19 @@ def q099_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     unit of deduplication is the connected component of the candidate
     graph, keeping min(doc_id) per component.
 
-    Spark side: min-label propagation — each round every node takes the
-    minimum label among itself and its neighbors (one join + one groupBy
-    per round, both on uniform doc-id keys). CC_ROUNDS=6 bounds the
-    propagation; labels converge once rounds ≥ graph diameter, and dup
-    clusters are shallow (exact-copy stars + short near-dup chains; the
-    q098 Jaccard-verify stage prunes long spurious chains before
-    clustering in a production flow). At 100 TB diameter can't be assumed:
-    use the alternating large-star/small-star contraction
-    (Kiveris et al., "Connected Components in MapReduce"), which converges
-    in O(log n) rounds of exactly this join+groupBy shape.
+    Spark side: ``_clusters`` — the ``contracted_components`` path q062,
+    q063 and q197 share: a partition-local union-find contraction, then
+    alternating large-star/small-star rounds (Kiveris et al., "Connected
+    Components in MapReduce") on the seam-sized residual graph, run until
+    the labels converge, so no diameter bound is assumed.
 
     Oracle: independent formulation — DuckDB recursive-CTE transitive
     closure, then MIN label per node. Output: one row per cluster with the
     canonical (min) member and the ','-joined membership.
     """
-    pairs = _lsh_pairs(dup_corpus(spark, sf_dir))
-    edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).unionAll(
-        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
-    )
-    # Materialize the loop state: without this, round k's plan embeds TWO
-    # copies of round k-1 (join input + union input), so the lineage — and
-    # the MinHash subtree it re-derives — doubles per round: 2^6 recomputes
-    # of the LSH pipeline (~40s at sf0.01, unbounded at scale). This is the
-    # standard Spark idiom for iterative algorithms: cut lineage each
-    # round; the materialized state is |nodes| rows, trivially small
-    # relative to the corpus.
-    edges = edges.transform(cut_lineage)
-    labels = edges.select(F.col("src").alias("node")).distinct().select(
-        "node", F.col("node").alias("lbl")
-    )
-    for _ in range(CC_ROUNDS):
-        nbr = (
-            edges.join(labels, edges.src == labels.node)
-            .select(F.col("dst").alias("node"), "lbl")
-        )
-        labels = (
-            nbr.unionAll(labels)
-            .groupBy("node")
-            .agg(F.min("lbl").alias("lbl"))
-            .transform(cut_lineage)
-        )
     return (
-        labels.groupBy(F.col("lbl").alias("cluster_id"))
+        _clusters(_lsh_pairs(dup_corpus(spark, sf_dir)))
+        .groupBy(F.col("comp").alias("cluster_id"))
         .agg(
             F.count(F.lit(1)).alias("n_members"),
             F.array_join(F.array_sort(F.collect_list("node")), ",").alias("members"),

@@ -310,12 +310,10 @@ def q014_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Connected components at scale: alternating large-star / small-star
 # ---------------------------------------------------------------------------
 
-# Deep-chain corpus: q099's min-label propagation bounds its rounds (fine
-# for shallow dup clusters) and its docstring defers deep graphs to the
-# alternating contraction — this operator implements that promise on a
-# graph where bounded propagation WOULD fail: chains of ~CHAIN_LEN nodes
-# (diameter ~CHAIN_LEN-1 >> any constant round budget) plus sparse
-# long-range bridges merging every 4th chain.
+# Deep-chain corpus: a graph where min-label propagation with a fixed
+# round budget WOULD fail: chains of ~CHAIN_LEN nodes (diameter
+# ~CHAIN_LEN-1 >> any constant round budget) plus sparse long-range
+# bridges merging every 4th chain.
 CHAIN_LEN = 97
 
 CHAIN_EDGES_SQL = f"""
@@ -657,9 +655,8 @@ ORDER BY component_id
 )
 def q134_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components via alternating large-star/small-star — the
-    O(log n)-round contraction q099's docstring defers deep graphs to,
-    now implemented and certified on a graph that DEFEATS bounded label
-    propagation: ~CHAIN_LEN-long chains (diameter ~96 vs q099's 6-round
+    O(log n)-round contraction, certified on a graph that DEFEATS bounded
+    label propagation: ~CHAIN_LEN-long chains (diameter ~96 vs a 6-round
     budget) with sparse bridges merging chain groups.
 
     The oracle is an independent mechanism (DuckDB recursive-CTE

@@ -219,8 +219,8 @@ def q155_warc_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the monolithic parse of the same bytes (the VALUES golden above).
 
     This is the straggler-elimination shape for skewed file sizes at
-    100 TB: one 100 GB WARC becomes num_splits independent range tasks
-    instead of a single whole-file task (reference counterpart: the
+    100 TB: one 100 GB WARC becomes byte-budget-sized independent range
+    tasks (here _RANGE_SPLITS of them) instead of a single whole-file task (reference counterpart: the
     sequential intra-file record-range scan, main.rs:159-160, 205-219).
     tests/test_warc_ranged.py additionally pins that the work really runs
     in >= 4 parallel range tasks and that malformed tails reproduce the
@@ -243,7 +243,9 @@ def q155_warc_range_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             f.write(payload)
         os.replace(tmp, dest)
 
-    recs = read_warc_ranged(spark, d, num_splits=_RANGE_SPLITS)
+    recs = read_warc_ranged(
+        spark, d, target_split_bytes=-(-len(payload) // _RANGE_SPLITS)
+    )
     return (
         recs.select(
             "record_idx",

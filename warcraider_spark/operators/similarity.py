@@ -755,7 +755,8 @@ def q046_kmeans_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec, dim, value) form; each iteration is (broadcast tiny centroids →
     map-side distance partial-agg → per-vector argmin) + (groupBy
     (cluster, dim) mean with map-side combine). Loop state is
-    localCheckpoint'ed per round (q099's lineage lesson); the vector
+    localCheckpoint'ed per round (else each round's plan re-embeds
+    every earlier round); the vector
     table is checkpointed ONCE and reused by all {2 * KM_ITERS} passes.
     """
     em = load_table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 300)

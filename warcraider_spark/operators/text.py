@@ -2284,6 +2284,30 @@ PMI_MIN_COUNT = 5  # drop hapax-ish bigrams before ranking (standard practice)
 PMI_TOPK = 100
 
 
+def _pmi_rank() -> F.Column:
+    """q135's ranking column over (n_xy, n_x, n_y) counts and the
+    broadcast totals (nn, mx = max n_xy, mxx = max n_x, mxy = max n_y).
+
+    Integer path: n_xy*nn*1e6 div (n_x*n_y) — exact, cross-engine
+    hash-safe (DuckDB `//` and Spark DIV both floor for positives).
+    Log path, taken when either side could overflow int64 (numerator
+    mx*nn*1e6, denominator mxx*mxy; both tests are division-only so they
+    cannot overflow themselves): floor(1e6 * ln-PMI) micro-nats — log is
+    monotone, so ranking is preserved. CASE WHEN evaluates lazily, so
+    the integer branch never runs (and can't ANSI-overflow) when the
+    guard fires.
+    """
+    headroom = (2**63 - 1) // 1_000_000
+    int64max = 2**63 - 1
+    return F.expr(
+        f"CASE WHEN mx > CAST({headroom} AS BIGINT) DIV nn "
+        f"OR mxx > CAST({int64max} AS BIGINT) DIV mxy THEN "
+        "CAST(FLOOR(1000000.0 * (LN(CAST(n_xy AS DOUBLE)) + LN(CAST(nn AS DOUBLE)) "
+        "- LN(CAST(n_x AS DOUBLE)) - LN(CAST(n_y AS DOUBLE)))) AS BIGINT) "
+        "ELSE CAST((n_xy * nn * 1000000) DIV (n_x * n_y) AS BIGINT) END"
+    )
+
+
 @query(
     "q135_pmi_collocations",
     oracle=f"""
@@ -2343,10 +2367,10 @@ def q135_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     denominator overflows first, from nn ≈ 3e9 worst-case); a CASE WHEN
     on the broadcast totals (nn, mx, mxx, mxy) switches to the
     log-domain double variant (pmi_scaled = micro-nats, floor-scaled) —
-    same schema, same monotone ranking. Cert SFs always take the
-    integer path; tests/test_oracle_queries.py pins the log path's
-    ranking against driver-side math.log on synthetic counts and the
-    guard predicate against both overflow sides.
+    same schema, same monotone ranking (``_pmi_rank``). Cert SFs always
+    take the integer path; tests/test_oracle_queries.py feeds synthetic
+    count rows through ``_pmi_rank`` and pins the integer path, the log
+    path's ranking against driver-side math.log, and both guard sides.
     """
     docs = load_table(spark, sf_dir, "documents")
     d = (
@@ -2383,10 +2407,7 @@ def q135_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # construction is side-effect-free — no .first() at build time; the
     # bounded broadcast is a grand aggregate, exactly 1 row by
     # construction, plan-audit pair-exempted). The int64 headroom guard
-    # moves into a runtime CASE WHEN on that scalar: the overflow test
-    # mx*nn*1e6 > int64max is rearranged division-only so it cannot
-    # itself overflow, and CASE WHEN evaluates lazily so the integer
-    # branch never runs (and can't ANSI-overflow) when the guard fires.
+    # is a runtime CASE WHEN on that scalar (``_pmi_rank``).
     tot = (
         c.agg(
             F.sum("n_xy").cast("bigint").alias("nn"),
@@ -2403,58 +2424,14 @@ def q135_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(x.agg(F.max("n_x").cast("bigint").alias("mxx")))
         .crossJoin(y.agg(F.max("n_y").cast("bigint").alias("mxy")))
     )
-    headroom = (2**63 - 1) // 1_000_000
-    int64max = 2**63 - 1
-    rank = F.expr(
-        f"CASE WHEN mx > CAST({headroom} AS BIGINT) DIV nn "
-        f"OR mxx > CAST({int64max} AS BIGINT) DIV mxy THEN "
-        "CAST(FLOOR(1000000.0 * (LN(CAST(n_xy AS DOUBLE)) + LN(CAST(nn AS DOUBLE)) "
-        "- LN(CAST(n_x AS DOUBLE)) - LN(CAST(n_y AS DOUBLE)))) AS BIGINT) "
-        "ELSE CAST((n_xy * nn * 1000000) DIV (n_x * n_y) AS BIGINT) END"
-    )
     return (
         c.join(x, "w1")
         .join(y, "w2")
         .filter(F.col("n_xy") >= PMI_MIN_COUNT)
         .crossJoin(F.broadcast(tot))
-        .select("w1", "w2", "n_xy", "n_x", "n_y", rank.alias("pmi_scaled"))
+        .select("w1", "w2", "n_xy", "n_x", "n_y", _pmi_rank().alias("pmi_scaled"))
         .orderBy(F.desc("pmi_scaled"), "w1", "w2")
         .limit(PMI_TOPK)
-    )
-
-
-def pmi_needs_log_domain(
-    max_nxy: int, nn: int, max_nx: int | None = None, max_ny: int | None = None
-) -> bool:
-    """True when the integer-exact PMI ratio would overflow int64 —
-    either side: the numerator's worst case is max(n_xy)*nn*PMI_SCALE,
-    the denominator's is max(n_x)*max(n_y) (with a small
-    max(n_xy) the denominator overflows long before the numerator test
-    fires). Python ints are unbounded, so the check cannot overflow."""
-    if max_nxy * nn * 1_000_000 > 2**63 - 1:
-        return True
-    if max_nx is not None and max_ny is not None:
-        return max_nx * max_ny > 2**63 - 1
-    return False
-
-
-def _pmi_rank_expr(nn: int, use_log: bool):
-    """Ranking column over a (n_xy, n_x, n_y) bigram-count table.
-
-    Integer path: n_xy*nn*1e6 div (n_x*n_y) — exact, cross-engine
-    hash-safe (DuckDB `//` and Spark DIV both floor for positives).
-    Log path (beyond int64 headroom): floor(1e6 * ln-PMI) micro-nats —
-    log is monotone, so ranking is preserved; values are doubles
-    floored once at the end, never compared across engines (the guard
-    only fires beyond cert scale).
-    """
-    if use_log:
-        return F.expr(
-            f"CAST(FLOOR(1000000.0 * (LN(CAST(n_xy AS DOUBLE)) + LN({float(nn)}D) "
-            "- LN(CAST(n_x AS DOUBLE)) - LN(CAST(n_y AS DOUBLE)))) AS BIGINT)"
-        )
-    return F.expr(
-        f"CAST((n_xy * CAST({nn} AS BIGINT) * 1000000) DIV (n_x * n_y) AS BIGINT)"
     )
 
 

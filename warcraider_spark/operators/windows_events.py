@@ -4,8 +4,10 @@ The reference has no streaming, but its shape (files arrive → process once
 → exactly-once sink) maps to Structured Streaming; these are the BATCH
 duals of the streaming/windows.py operators, oracle-checked against
 independent SQL formulations (time_bucket / union-of-offsets /
-gaps-and-islands). The streaming variants share the same builders, so a
-hash-match here validates the windowing semantics the stream runs with.
+gaps-and-islands). The stream operators do not call these builders: they
+share the window definition (``F.window("ts", "1 hour")``, epoch-aligned)
+and the formatted ``window_start`` column, and q030, q115 and q052 run the
+streams themselves against their batch SQL duals.
 
 Timestamps are emitted as formatted strings so the value hash is
 timezone-representation-proof.
@@ -26,8 +28,8 @@ _FMT_SQL = "%Y-%m-%d %H:%M:%S"
 
 
 def tumbling_counts(events: DataFrame, duration: str = "1 hour") -> DataFrame:
-    """Shared by batch q027 and the streaming variant: 1h tumbling window
-    per event_type with count + sum(value)."""
+    """q027's builder: 1h tumbling window per event_type with count +
+    rounded sum(value)."""
     return (
         events.groupBy(F.window("ts", duration).alias("w"), F.col("event_type"))
         .agg(
@@ -59,7 +61,9 @@ ORDER BY window_start, event_type
 )
 def q027_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling event-time windows (epoch-aligned, so time_bucket is
-    the exact dual). The same builder feeds the streaming variant."""
+    the exact dual). The streaming variant (q030,
+    ``streaming.windows.windowed_counts_stream``) uses the same window but
+    its own builder, which sums integer milli-units."""
     ev = load_table(spark, sf_dir, "events")
     return tumbling_counts(ev).orderBy("window_start", "event_type")
 
@@ -164,7 +168,7 @@ def q030_watermark_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from warcraider_spark.streaming.windows import replay_events_stream
 
-    return replay_events_stream(spark, sf_dir, watermark="1 hour", integer_units=True)
+    return replay_events_stream(spark, sf_dir)
 
 
 @query(

@@ -8,8 +8,10 @@ replace processes.
 Config choices (scale rationale):
 - AQE on: runtime partition coalescing + skew-join splitting replace the
   reference's hand-tuned 2x50k record batches (main.rs:159-160).
-- ``spark.sql.shuffle.partitions`` sized by env (32 locally; a real cluster
-  overrides via spark-submit — AQE coalesces down so oversizing is safe).
+- ``spark.sql.shuffle.partitions`` = the local core count
+  (``SPARK_GRAFT_CPUS``, else ``os.cpu_count()``) unless the caller passes
+  one; a real cluster overrides via spark-submit — AQE coalesces down so
+  oversizing is safe.
 - Arrow on + capped batch size: bounds pandas-UDF memory exactly like the
   reference's 50k-record batching bounded its Avro writer.
 - mapKeyDedupPolicy=LAST_WIN: the reference's header/meta-tag map inserts are

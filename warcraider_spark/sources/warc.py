@@ -320,7 +320,6 @@ def _enumerate_warc_files(path: str) -> list[str]:
 def read_warc_ranged(
     spark: SparkSession,
     path: str,
-    num_splits: int = 8,
     target_split_bytes: int = DEFAULT_SPLIT_BYTES,
 ) -> DataFrame:
     """Byte-range-parallel WARC read: same output as ``read_warc`` (same
@@ -328,10 +327,10 @@ def read_warc_ranged(
     same rows, same record_idx), but a single large file fans out to
     independent range tasks instead of one straggler task.
 
-    Per-file fan-out is ``max(num_splits, ceil(size / target_split_bytes))``
-    so per-task memory is bounded by ``target_split_bytes`` (default 128
-    MiB, mirroring spark.sql.files.maxPartitionBytes) regardless of file
-    size — a 100 GB file becomes ~800 bounded tasks, not 8 × 12.5 GB ones.
+    Per-file fan-out is ``max(1, ceil(size / target_split_bytes))`` so
+    per-task memory is bounded by ``target_split_bytes`` (default 128 MiB,
+    mirroring spark.sql.files.maxPartitionBytes) regardless of file size —
+    a 100 GB file becomes ~800 bounded tasks.
 
     Stage 1 (one small task per file) builds the member-offset index and
     emits (path, first_idx, offset, length) split descriptors — metadata
@@ -355,7 +354,7 @@ def read_warc_ranged(
             size = _file_size(p)
         except OSError:
             size = 0
-        per_file[p] = max(num_splits, -(-size // max(1, target_split_bytes)))
+        per_file[p] = max(1, -(-size // max(1, target_split_bytes)))
     total_splits = max(1, sum(per_file.values()))
     paths_df = spark.createDataFrame(
         [(p, n) for p, n in per_file.items()], "path string, n_splits int"
@@ -440,9 +439,7 @@ def read_warc_auto(
     else:
         big = any(s > target_split_bytes for s in _statable_sizes())
     if big:
-        return read_warc_ranged(
-            spark, path, num_splits=1, target_split_bytes=target_split_bytes
-        )
+        return read_warc_ranged(spark, path, target_split_bytes=target_split_bytes)
     return read_warc(spark, path)
 
 

@@ -8,21 +8,30 @@ restart resumes from the checkpoint instead of `gsutil stat` probes.
 Operators:
 - ``stream_events``: file-source readStream over an events-shaped
   directory;
-- ``windowed_counts_stream``: watermarked tumbling-window aggregation
-  (shares the batch builder in operators.windows_events, so the batch
-  oracle certifies the semantics);
-- ``replay_events_stream``: replays the driver's events table through a
-  REAL stream (availableNow trigger → memory sink) and returns the result
-  as a batch DataFrame — used by q030 and tests;
+- ``windowed_counts_stream``: watermarked tumbling-window aggregation with
+  integer milli-unit sums. It does not call the batch builders in
+  operators.windows_events; what it shares with them is the window
+  (``F.window("ts", "1 hour")``, epoch-aligned) and the formatted
+  ``window_start`` column, so q030's batch SQL dual certifies it;
+- ``stream_static_enrich``: stream-static join + windowed revenue;
+- ``dedup_within_watermark_stream``: watermark-bounded streaming dedup;
+- ``foreach_batch_idempotent_sink``: batchId-keyed replay-safe writer;
 - ``stream_warc_pipeline``: streaming variant of the WARC→url_resource
   pipeline with checkpointed exactly-once sink.
+
+``replay_events_stream``, ``replay_enriched_stream`` and
+``replay_attribution_stream`` (q030, q115, q052) replay the driver's
+events table through a REAL stream (availableNow trigger → memory sink)
+and return the drained result; they share one runner, ``_replay``.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -38,6 +47,10 @@ __all__ = [
     "stream_warc_pipeline",
 ]
 
+# Seconds a replay may take to drain its staged events before it is
+# stopped and fails.
+REPLAY_TIMEOUT_S = 300
+
 
 def stream_events(spark: SparkSession, path: str, schema) -> DataFrame:
     """File-source stream: new files under ``path`` become micro-batches.
@@ -50,61 +63,82 @@ def stream_events(spark: SparkSession, path: str, schema) -> DataFrame:
     )
 
 
-def windowed_counts_stream(
-    events: DataFrame, watermark: str = "1 hour", integer_units: bool = False
+def _replay(
+    spark: SparkSession,
+    sf_dir: str,
+    prefix: str,
+    build: Callable[[Callable[[], DataFrame]], DataFrame],
+    output_mode: str,
 ) -> DataFrame:
+    """Run the events table through a real micro-batch stream and return
+    the memory sink's table.
+
+    The events are staged once as parquet (events.parquet stores ns
+    timestamps the schema API can't declare). ``build`` receives a
+    zero-argument factory — each call a fresh file-source stream over the
+    staged copy — and returns the streaming result, which drains into a
+    memory sink under ``availableNow``. The staged copy is deleted once
+    the query has ended. A query still running after ``REPLAY_TIMEOUT_S``
+    is stopped and raises ``TimeoutError`` rather than return a partial
+    table.
+    """
+    from warcraider_spark.tables import load_table
+
+    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
+    staged = os.path.join(tempfile.gettempdir(), name)
+    try:
+        ev = load_table(spark, sf_dir, "events")
+        ev.write.mode("overwrite").parquet(staged)
+        q = (
+            build(lambda: stream_events(spark, staged, ev.schema))
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            done = q.awaitTermination(REPLAY_TIMEOUT_S)
+        finally:
+            q.stop()
+    finally:
+        shutil.rmtree(staged, ignore_errors=True)
+    if not done:
+        raise TimeoutError(f"stream replay {name} did not drain in {REPLAY_TIMEOUT_S} s")
+    return spark.table(name)
+
+
+def windowed_counts_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Watermarked tumbling-window counts — late rows beyond the watermark
     are dropped by the engine; state for closed windows is evicted (bounded
     state at 100 TB/day event volumes).
 
-    ``integer_units=True`` sums milli-quantized values as BIGINT instead of
-    rounded doubles: integer addition is order-independent, so the result
-    is bit-identical no matter how micro-batches slice the input — the
-    property that lets a REAL stream run be hash-compared against a batch
-    SQL oracle (q030)."""
-    agg_val = (
-        F.sum(F.expr("CAST(floor(value * 1000 + 0.5) AS BIGINT)")).alias("sum_value_milli")
-        if integer_units
-        else F.round(F.sum("value"), RD).alias("sum_value")
-    )
+    Values are summed as milli-quantized BIGINT, not rounded doubles:
+    integer addition is order-independent, so the result is bit-identical
+    no matter how micro-batches slice the input — the property that lets a
+    REAL stream run be hash-compared against a batch SQL oracle (q030)."""
     return (
         events.withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n"), agg_val)
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            F.sum(F.expr("CAST(floor(value * 1000 + 0.5) AS BIGINT)")).alias("sum_value_milli"),
+        )
         .select(
             F.date_format("w.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
             "event_type",
             "n",
-            "sum_value_milli" if integer_units else "sum_value",
+            "sum_value_milli",
         )
     )
 
 
-def replay_events_stream(
-    spark: SparkSession, sf_dir: str, watermark: str = "1 hour", integer_units: bool = False
-) -> DataFrame:
-    """Run the events table through a real micro-batch stream (availableNow
-    → complete-mode memory sink) and return the final result table."""
-    from warcraider_spark.tables import load_table
-
-    # materialize events with a proper timestamp column for the stream
-    # (events.parquet stores ns timestamps the schema API can't declare)
-    staged = os.path.join(tempfile.gettempdir(), f"events_stream_{uuid.uuid4().hex[:8]}")
-    ev = load_table(spark, sf_dir, "events")
-    ev.write.mode("overwrite").parquet(staged)
-
-    stream = stream_events(spark, staged, ev.schema)
-    agg = windowed_counts_stream(stream, watermark, integer_units=integer_units)
-    name = f"win_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table(name).orderBy("window_start", "event_type")
+def replay_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``windowed_counts_stream`` over the replayed events (complete-mode
+    memory sink, 1-hour watermark)."""
+    return _replay(
+        spark, sf_dir, "events_stream", lambda source: windowed_counts_stream(source()), "complete"
+    ).orderBy("window_start", "event_type")
 
 
 def stream_static_enrich(events: DataFrame, customers: DataFrame) -> DataFrame:
@@ -137,57 +171,39 @@ def stream_static_enrich(events: DataFrame, customers: DataFrame) -> DataFrame:
 
 
 def replay_enriched_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run events through a real stream joined to the static customer dim
-    (availableNow → complete-mode memory sink); returns the final table."""
+    """``stream_static_enrich`` of the replayed events against the static
+    customer table (complete-mode memory sink)."""
     from warcraider_spark.tables import load_table
 
-    staged = os.path.join(tempfile.gettempdir(), f"events_enrich_{uuid.uuid4().hex[:8]}")
-    ev = load_table(spark, sf_dir, "events")
-    ev.write.mode("overwrite").parquet(staged)
-
-    stream = stream_events(spark, staged, ev.schema)
-    enriched = stream_static_enrich(stream, load_table(spark, sf_dir, "customer"))
-    name = f"enr_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table(name).orderBy("window_start", "segment")
+    customers = load_table(spark, sf_dir, "customer")
+    return _replay(
+        spark,
+        sf_dir,
+        "events_enrich",
+        lambda source: stream_static_enrich(source(), customers),
+        "complete",
+    ).orderBy("window_start", "segment")
 
 
 def stream_warc_pipeline(
-    spark: SparkSession,
-    warc_dir: str,
-    out_path: str,
-    checkpoint: str,
-    max_files_per_trigger: int | None = None,
+    spark: SparkSession, warc_dir: str, out_path: str, checkpoint: str
 ) -> "object":
     """Streaming WARC→url_resource: the binaryFile source watches for new
     .warc files; the checkpoint replaces the reference's check_present_avro
-    idempotence probe (lib.rs:155-169). Returns the StreamingQuery.
-
-    ``max_files_per_trigger`` bounds each micro-batch's file intake (the
-    production back-pressure knob for a continuously-crawling source; also
-    what tools/stream_warc_bench.py uses to measure per-batch overhead)."""
+    idempotence probe (lib.rs:155-169). Returns the StreamingQuery."""
     from warcraider_spark.plans.pipeline import url_resource_from_warc_records
     from warcraider_spark.sources.warc import split_warc_files
 
     binary_schema = (
         "path string, modificationTime timestamp, length long, content binary"
     )
-    reader = (
+    raw = (
         spark.readStream.format("binaryFile")
         .schema(binary_schema)
         .option("pathGlobFilter", "*.warc")
+        .load(warc_dir)
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    records = split_warc_files(reader.load(warc_dir))
-    resource = url_resource_from_warc_records(records)
+    resource = url_resource_from_warc_records(split_warc_files(raw))
     return (
         resource.writeStream.format("parquet")
         .option("path", out_path)
@@ -215,51 +231,40 @@ def replay_attribution_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     arrived (append mode); the availableNow trigger drains the staged
     files and terminates.
     """
-    from warcraider_spark.tables import load_table
 
-    staged = os.path.join(tempfile.gettempdir(), f"events_attr_{uuid.uuid4().hex[:8]}")
-    ev = load_table(spark, sf_dir, "events")
-    ev.write.mode("overwrite").parquet(staged)
-
-    views = (
-        stream_events(spark, staged, ev.schema)
-        .filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("view_ts"),
-            F.unix_micros("ts").alias("view_us"),
+    def attribution(source) -> DataFrame:
+        views = (
+            source()
+            .filter(F.col("event_type") == "view")
+            .select(
+                F.col("user_id").alias("v_user"),
+                F.col("event_id").alias("view_id"),
+                F.col("ts").alias("view_ts"),
+                F.unix_micros("ts").alias("view_us"),
+            )
+            .withWatermark("view_ts", "30 days")
         )
-        .withWatermark("view_ts", "30 days")
-    )
-    buys = (
-        stream_events(spark, staged, ev.schema)
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("b_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("buy_ts"),
-            F.unix_micros("ts").alias("buy_us"),
+        buys = (
+            source()
+            .filter(F.col("event_type") == "purchase")
+            .select(
+                F.col("user_id").alias("b_user"),
+                F.col("event_id").alias("purchase_id"),
+                F.col("ts").alias("buy_ts"),
+                F.unix_micros("ts").alias("buy_us"),
+            )
+            .withWatermark("buy_ts", "30 days")
         )
-        .withWatermark("buy_ts", "30 days")
-    )
-    joined = views.join(
-        buys,
-        (F.col("v_user") == F.col("b_user"))
-        & (F.col("buy_us") >= F.col("view_us"))
-        & (F.col("buy_us") <= F.col("view_us") + 3_600_000_000),
-    ).select(F.col("v_user").alias("user_id"), "view_id", "purchase_id")
+        return views.join(
+            buys,
+            (F.col("v_user") == F.col("b_user"))
+            & (F.col("buy_us") >= F.col("view_us"))
+            & (F.col("buy_us") <= F.col("view_us") + 3_600_000_000),
+        ).select(F.col("v_user").alias("user_id"), "view_id", "purchase_id")
 
-    name = f"attr_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return _replay(spark, sf_dir, "events_attr", attribution, "append").orderBy(
+        "user_id", "view_id", "purchase_id"
     )
-    q.awaitTermination(180)
-    return spark.table(name).orderBy("user_id", "view_id", "purchase_id")
 
 
 def dedup_within_watermark_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -273,35 +278,6 @@ def dedup_within_watermark_stream(events: DataFrame, watermark: str = "2 hours")
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-
-
-def replay_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feed each event TWICE (duplicated in a second file, so dups can
-    arrive in a later micro-batch) through dedup_within_watermark_stream;
-    exactly-once output = the distinct event set."""
-    from warcraider_spark.tables import load_table
-
-    staged = os.path.join(tempfile.gettempdir(), f"events_dup_{uuid.uuid4().hex[:8]}")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    ev.write.mode("overwrite").parquet(os.path.join(staged, "a"))
-    ev.write.mode("overwrite").parquet(os.path.join(staged, "b"))
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(os.path.join(staged, "*"))
-    )
-    deduped = dedup_within_watermark_stream(stream)
-    name = f"dedup_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table(name)
 
 
 def foreach_batch_idempotent_sink(out_dir: str):
@@ -320,29 +296,3 @@ def foreach_batch_idempotent_sink(out_dir: str):
         )
 
     return write_batch
-
-
-def replay_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Run the events table through a real stream into the idempotent
-    foreachBatch parquet sink; returns the sink contents read back
-    (basePath keeps batch_id out of the schema)."""
-    from warcraider_spark.tables import load_table
-
-    root = os.path.join(tempfile.gettempdir(), f"fbsink_{uuid.uuid4().hex[:8]}")
-    staged, out = os.path.join(root, "in"), os.path.join(root, "out")
-    ev = load_table(spark, sf_dir, "events").select("event_id", "ts", "event_type")
-    ev.write.mode("overwrite").parquet(staged)
-
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "4")
-        .parquet(staged)
-    )
-    q = (
-        stream.writeStream.foreachBatch(foreach_batch_idempotent_sink(out))
-        .option("checkpointLocation", os.path.join(root, "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.read.option("basePath", out).parquet(os.path.join(out, "batch_id=*")).drop("batch_id")
